@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.filters.{MetadataFilter, ScopeFilters}
 import graft.operators.{Embedder, HashEmbedder, KnnSearch, Padding, Serving}
 
@@ -159,39 +164,96 @@ object GraftService {
     * by reciprocal rank (the pgvector+FTS deployment shape, generalizing
     * the reference's filename-only keyword search Q12 to chunk content).
     * Scope compiles ONCE and lands before BOTH arms' scoring, so each arm
-    * scans only authorized rows; the fusion join runs over two top-`fetchK`
-    * slices (request-sized). Chunks are keyed by a composite doc:chunk
-    * string so fusion is per-chunk; each arm oversamples 2k before the RRF
-    * cut. */
+    * scans only authorized rows. Chunks are keyed by a composite doc:chunk
+    * string so fusion is per-chunk; each arm oversamples to
+    * fetchK = max(2k, 20) before the RRF cut.
+    *
+    * Plan: the two arms are collected and fused on the driver (rule 17) —
+    * at most 2·fetchK request-sized rows, each carrying its chunk columns,
+    * so nothing joins back to the table:
+    *  - dense: [[KnnSearch.topK]], a bounded-heap scan (1 job);
+    *  - keyword: [[operators.FullText.bm25Rows]], a one-row stats aggregate
+    *    (2 jobs under AQE) and a bounded-heap scoring scan (1 job), both
+    *    skipped when the query has no term the scope holds;
+    *  - fusion: rank r (1-based, arm order (score desc, key asc)) scores
+    *    1/(kRrf + r) per arm, absent arms 0; the top k by (rrf desc, key
+    *    asc, in Spark's UTF-8 binary string order) are returned as a local
+    *    frame in (score desc, document_id, chunk_number) order, so reading
+    *    it runs no further job.
+    * At most 4 jobs per call. Columns: dense_rank, keyword_rank (null for
+    * an arm that missed the chunk), rrf, the chunk table's columns, and
+    * score (= rrf). */
   def retrieveChunksHybrid(req: RetrieveRequest, chunks: ChunkTable,
                            embedder: Embedder = HashEmbedder(64),
                            kRrf: Int = 60): DataFrame = {
     require(req.queryImage.isEmpty,
       "image queries require the multivector arm (document_service.py:234-238)")
-    import org.apache.spark.sql.expressions.Window
-    val keyed = chunks.df.filter(compileScope(req, chunks)).withColumn("__cid",
-      concat_ws(":", col(chunks.docIdCol), col(chunks.chunkNoCol)))
+    val keyed = chunks.df.filter(compileScope(req, chunks)).drop("score")
+      .withColumn("__cid", concat_ws(":", col(chunks.docIdCol), col(chunks.chunkNoCol)))
     val fetchK = math.max(req.k * 2, 20)
-    // partition-less Window = single-partition execution: safe here ONLY
-    // because both arms are pre-limited to fetchK rows (request-sized)
-    // before ranking — do NOT reuse this frame over an unbounded input
-    val rankW = Window.orderBy(col("score").desc, col("__cid"))
     val dense = KnnSearch.topK(keyed, chunks.embeddingCol, "__cid",
-      embedder.embedText(req.queryText), fetchK)
-      .select(col("__cid"), col("score"))
-      .withColumn("rank", row_number().over(rankW))
+      embedder.embedText(req.queryText), fetchK).collect()
     val terms = Option(req.queryText).getOrElse("").toLowerCase
       .split("\\s+").filter(_.nonEmpty).distinct.toSeq
-    val keyword = operators.FullText.bm25(keyed, "__cid", chunks.contentCol,
-        terms, fetchK)
-      .withColumnRenamed("doc_id", "__cid")
-      .withColumn("rank", row_number().over(rankW))
-    val fused = operators.FullText.rrfFuse(dense, keyword, "__cid", req.k, kRrf)
-      .withColumnRenamed("doc_id", "__cid")
-    fused.join(keyed.drop("score"), "__cid")
-      .withColumn("score", col("rrf"))
-      .drop("__cid")
-      .orderBy(col("score").desc, col(chunks.docIdCol), col(chunks.chunkNoCol))
+    val keyword = operators.FullText.bm25Rows(keyed, "__cid", chunks.contentCol,
+      terms, fetchK).collect()
+    // both arms' rows start with keyed's columns, in keyed's order
+    val cidIdx = keyed.columns.indexOf("__cid")
+    val chunkIdx = keyed.columns.indices.filter(_ != cidIdx)
+    case class Fused(row: Row, denseRank: Option[Long], keywordRank: Option[Long]) {
+      val rrf: Double = denseRank.map(r => 1.0 / (kRrf.toLong + r)).getOrElse(0.0) +
+        keywordRank.map(r => 1.0 / (kRrf.toLong + r)).getOrElse(0.0)
+    }
+    val pool = scala.collection.mutable.LinkedHashMap.empty[String, Fused]
+    dense.iterator.zipWithIndex.foreach { case (r, i) =>
+      pool(r.getString(cidIdx)) = Fused(r, Some(i + 1L), None)
+    }
+    keyword.iterator.zipWithIndex.foreach { case (r, i) =>
+      val cid = r.getString(cidIdx)
+      pool(cid) = pool.get(cid) match {
+        case Some(f) => f.copy(keywordRank = Some(i + 1L))
+        case None    => Fused(r, None, Some(i + 1L))
+      }
+    }
+    val docIdx = keyed.columns.indexOf(chunks.docIdCol)
+    val chunkNoIdx = keyed.columns.indexOf(chunks.chunkNoCol)
+    val top = pool.toSeq
+      .sortWith { case ((ca, a), (cb, b)) =>
+        a.rrf > b.rrf || (a.rrf == b.rrf && sqlCompare(ca, cb) < 0) }
+      .take(req.k).map(_._2)
+      .sortWith { (a, b) =>
+        if (a.rrf != b.rrf) a.rrf > b.rrf
+        else {
+          val c = sqlCompare(a.row.get(docIdx), b.row.get(docIdx))
+          if (c != 0) c < 0 else sqlCompare(a.row.get(chunkNoIdx), b.row.get(chunkNoIdx)) < 0
+        }
+      }
+    val outSchema = StructType(
+      Seq(StructField("dense_rank", LongType), StructField("keyword_rank", LongType),
+        StructField("rrf", DoubleType, nullable = false)) ++
+        chunkIdx.map(keyed.schema.fields(_)) :+
+        StructField("score", DoubleType, nullable = false))
+    val outRows = top.map { f =>
+      Row.fromSeq(Seq[Any](f.denseRank.orNull, f.keywordRank.orNull, f.rrf) ++
+        chunkIdx.map(f.row.get) :+ f.rrf)
+    }
+    keyed.sparkSession.createDataFrame(outRows.asJava, outSchema)
+  }
+
+  /** Spark's ascending order for one sort-key value, nulls first:
+    * strings by UTF-8 bytes (Java's UTF-16 order differs for non-BMP
+    * text), floating point with NaN largest and -0.0 == 0.0, everything
+    * else by its natural order. */
+  private def sqlCompare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: Float, y: Float) => SQLOrderingUtil.compareFloats(x, y)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case _ => throw new IllegalArgumentException(
+      s"no driver-side order for sort key ${a.getClass.getName}")
   }
 
   /** MMR-diversified retrieval: the dense branch oversampled to fetchK,
@@ -199,9 +261,12 @@ object GraftService {
     * default) — the serving answer to a corpus whose top-k fills with
     * near-copies. Same scope compilation and pushed-down plan as
     * [[retrieveChunks]]; the diversification runs over the request-sized
-    * candidate slice only. Chunk keys are composite (doc:chunk), so the
-    * greedy step uses a rank surrogate id and joins back (broadcast —
-    * request-sized). */
+    * candidate slice only: it is collected once (1 job, the bounded-heap
+    * [[KnnSearch.topK]] scan), the greedy step runs on the driver over a
+    * rank surrogate id (chunk keys are composite doc:chunk), and the picks
+    * come back as a local frame already in `mmr_rank` order, so reading it
+    * runs no further job. Columns: the chunk table's, score, mmr_score,
+    * mmr_rank. */
   def retrieveChunksDiverse(req: RetrieveRequest, chunks: ChunkTable,
                             embedder: Embedder = HashEmbedder(64),
                             lambda: Double = 0.5): DataFrame = {
@@ -228,18 +293,18 @@ object GraftService {
       ((i + 1).toLong, r.getDouble(scoreIdx), r.getSeq[Float](embIdx).toArray)
     }
     val picks = operators.Mmr.select(cand.toSeq, req.k, lambda)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      hits.drop("__cid").schema
-        .add("mmr_score", org.apache.spark.sql.types.DoubleType, nullable = false)
-        .add("mmr_rank", org.apache.spark.sql.types.LongType, nullable = false))
+    val outSchema = hits.drop("__cid").schema
+      .add("mmr_score", DoubleType, nullable = false)
+      .add("mmr_rank", LongType, nullable = false)
     val outRows = picks.map { case (sid, _, m, rk) =>
       // Seq[Any], NOT Seq(m, rk): Scala's numeric widening would unify
       // (Double, Long) to Seq[Double], silently turning the rank into 3.0
       // and corrupting the LongType slot
-      org.apache.spark.sql.Row.fromSeq(rows(sid.toInt - 1).toSeq ++ Seq[Any](m, rk))
+      Row.fromSeq(rows(sid.toInt - 1).toSeq ++ Seq[Any](m, rk))
     }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(outRows.asJava, outSchema).orderBy("mmr_rank")
+    // picks come in selection order = mmr_rank order: a local frame,
+    // read without another job
+    spark.createDataFrame(outRows.asJava, outSchema)
   }
 
   /** Doc-level results (Q11): max chunk score per document. */

@@ -81,11 +81,16 @@ object BpeTrainer {
     // ~3 s of job scheduling for microseconds of arithmetic). Past the
     // cap — a real corpus vocabulary — the distributed ladder runs as
     // before.
-    val probe = wordTable.limit(driverWordCap + 1).collect()
-    if (probe.length <= driverWordCap)
+    // The corpus-sized aggregation runs ONCE on either path: the word table
+    // is cut first and the cap is probed on the cut — probing wordTable
+    // itself would re-aggregate the corpus for the distributed ladder.
+    var words = wordTable.localCheckpoint()
+    val probe = words.limit(driverWordCap + 1).collect()
+    if (probe.length <= driverWordCap) {
+      words.unpersist()
       return trainDriver(spark,
         probe.map(r => (r.getString(0), r.getLong(1))), numMerges)
-    var words = wordTable.localCheckpoint()
+    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var done = false

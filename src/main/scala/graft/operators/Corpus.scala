@@ -1024,12 +1024,18 @@ object Corpus {
     * ≤ |labels|·profileK rows and broadcasts into the scoring join; the
     * |labels| cross join is a broadcast of a handful of rows; per-doc cost
     * is docM·|labels| — corpus-size-independent. Emits one row per
-    * unlabeled doc WITH at least one n-gram: `id`, `pred`, `dist`. */
+    * unlabeled doc WITH at least one n-gram: `id`, `pred`, `dist` — none
+    * when the seed slice yields no label profile. Requires
+    * docM <= profileK. */
   def langIdTrained(df: DataFrame, idCol: String, textCol: String,
                     labelCol: String, isSeed: Column, n: Int = 3,
                     profileK: Int = 100, docM: Int = 50): DataFrame = {
     require(n >= 1 && profileK >= 1 && docM >= 1,
       s"langIdTrained needs n,profileK,docM >= 1 (got $n, $profileK, $docM)")
+    // the matched-only scoring below equals the out-of-place argmin only
+    // when every doc rank is <= profileK (see the dist identity there)
+    require(docM <= profileK,
+      s"langIdTrained needs docM <= profileK (got docM=$docM, profileK=$profileK)")
     val base = graft.Tables.scaled(df.select(
       col(idCol).cast("long").as("id"), col(labelCol).as("label"),
       isSeed.as("is_seed"), text.normalize(col(textCol)).as("norm")))
@@ -1070,7 +1076,8 @@ object Corpus {
     // cross join multiplied the 2.7M-row doc-profile stream by |labels|).
     // dist(id, pred) = Σ_g [g ∈ prof ? |drank−lrank| : K]
     //               = K·n_id − Σ_matched (K − |drank−lrank|),
-    // and every matched gram reduces dist by ≥ 1 (|drank−lrank| ≤ K−1),
+    // and every matched gram reduces dist by ≥ 1 (|drank−lrank| ≤ K−1,
+    // as 1 ≤ drank ≤ docM ≤ K and 1 ≤ lrank ≤ K — the require above),
     // so a pred with ANY match strictly beats every zero-match pred —
     // the argmin over matched preds is the argmin over all preds, with
     // the min label as the all-unmatched fallback (dist = K·n_id, every
@@ -1086,9 +1093,12 @@ object Corpus {
       .groupBy("id")
       .agg(min(struct((-col("__r")).as("nr"), col("pred"))).as("b"))
       .select(col("id"), col("b.pred").as("pred"), col("b.nr").as("nr"))
+    // No labels at all: the fallback row is empty too, so no doc gets a
+    // null prediction (the cross form yields zero rows there).
     nid
       .join(best, Seq("id"), "left")
-      .crossJoin(broadcast(labels.agg(min(col("pred")).as("__minl"))))
+      .crossJoin(broadcast(labels.agg(min(col("pred")).as("__minl"))
+        .filter(col("__minl").isNotNull)))
       .select(col("id"),
         coalesce(col("pred"), col("__minl")).as("pred"),
         coalesce(lit(K) * col("__nid") + col("nr"),

@@ -13,57 +13,88 @@ import graft.functions.text
   * dense KNN arm ([[KnnSearch]]), the fusion pgvector+FTS deployments use
   * (Cormack et al. 2009 RRF; k=60 is the canonical constant).
   *
-  * 100 TB shape: one token-explode pass over the corpus with the term filter
-  * applied BEFORE the (doc, term) groupBy, so the shuffle carries only
-  * query-term hits, not the whole token stream; document frequencies and the
-  * (N, avgdl) scalars are sketch-sized and broadcast back. Scoring is all
-  * built-in codegen'd arithmetic — no UDFs.
+  * 100 TB shape ([[bm25]]): one global aggregate gives the (N, avgdl,
+  * per-term df) row, then one map-only scoring pass cuts the top-k with a
+  * bounded heap per partition — nothing corpus-sized shuffles, and the
+  * only rows leaving a task are its top-k. Scoring is all built-in
+  * codegen'd arithmetic — no UDFs.
   */
 object FullText {
 
   /** Okapi BM25 top-k for a bag of query terms over `textCol`.
     * Tokenization = [[text.tokens]] (lower, whitespace), matching every other
-    * text operator and the oracle. Emits (doc_id, bm25, n_terms) with the
-    * idf form ln(1 + (N - df + 0.5)/(df + 0.5)) — always positive, the
-    * Lucene variant. */
+    * text operator and the oracle. Emits (doc_id, score, n_terms) in
+    * (score desc, doc_id asc) order with the idf form
+    * ln(1 + (N - df + 0.5)/(df + 0.5)) — always positive, the Lucene
+    * variant. A doc's score sums its distinct query terms' weights in
+    * query-term order. Plan ([[bm25Rows]]): the call itself runs the
+    * one-row stats aggregate (2 jobs under AQE); the frame it returns is
+    * one scoring scan cut by `TakeOrderedAndProject` (1 job when read). */
   def bm25(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String],
-           k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     // id keeps its incoming type (long doc ids, composite chunk keys, ...)
-    val toks = docs.select(col(idCol).as("doc_id"),
-      text.tokens(col(textCol)).as("tk"))
-    val lens = toks.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
-    // one row: corpus size + average doc length (exact: integer sum / count)
-    val global = lens.agg(count(lit(1)).as("n_docs"),
-      avg(col("dl").cast("double")).as("avgdl"))
-    // dl rides the exploded hit rows as a grouping key (it is functionally
-    // dependent on doc_id), so scoring needs NO join back to a lengths
-    // table — the only shuffle over corpus-sized data is this groupBy, and
-    // it carries query-term hits only: explode + a codegen'd In-filter
-    // beats filtering inside the array with a higher-order function (HOF
-    // lambdas evaluate interpreted, with per-element boxing).
-    val tf = toks.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        explode(col("tk")).as("term"))
-      .filter(col("term").isin(terms: _*))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    // document frequency as a window over the hit table: (doc_id, term) rows
-    // are distinct post-groupBy, so count-per-term-partition == distinct-doc
-    // count. This keeps tf single-consumer — a separate dfreq aggregation
-    // joined back would make the plan a DAG, and the persist() that avoided
-    // re-deriving the explode subtree leaked a pinned InMemoryRelation per
-    // serving call (bm25 builds plans; nothing here may own cache lifetime).
-    // The window shuffles only hit rows on term, the same data volume the
-    // old dfreq aggregation shuffled.
-    tf.withColumn("df",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("term")))
-      .crossJoin(broadcast(global))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("w",
-        col("idf") * (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id")
-      .agg(sum("w").as("score"), count(lit(1)).as("n_terms"))
-      .orderBy(col("score").desc, col("doc_id"))
+    bm25Rows(docs.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
+        "doc_id", "__text", terms, k, k1, b)
+      .select("doc_id", "score", "n_terms")
+
+  /** [[bm25]] keeping each hit's own columns: the top-k rows of `docs`
+    * with `score` and `n_terms` appended (replacing columns of those
+    * names), in (score desc, `idCol` asc) order. The serving hybrid arm
+    * reads its keyword hits' chunk columns from here instead of joining
+    * hit ids back to the table.
+    *
+    * Plan: two passes over `docs` and no shuffle of per-doc rows.
+    *  1. One global aggregate gives a single stats row — N, avgdl and each
+    *     distinct query term's df — collected to the driver (2 jobs under
+    *     AQE: the partial-aggregate map stage and the one-row result).
+    *  2. One scoring projection over the same scan with idf and avgdl bound
+    *     as literals: tf per term is `size(tk) - size(array_remove(tk, t))`
+    *     (compiled, no lambda), the weights of the terms are summed in
+    *     query-term order, rows with no term hit are filtered out, and the
+    *     top-k cut plans as `TakeOrderedAndProject` (1 job when collected).
+    * Terms with df = 0 drop out of the projection; when none is left (or
+    * there are no terms) the scoring plan prunes to an empty relation and
+    * runs no job. idf is evaluated by Spark in the stats query and each
+    * term's weight is the same expression tree the explode/groupBy/window
+    * plan used, so per-term weights are bit-identical to it. */
+  def bm25Rows(docs: DataFrame, idCol: String, textCol: String, terms: Seq[String],
+               k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val qs = terms.filter(_ != null).distinct
+    val toks = docs.select(col("*"), text.tokens(col(textCol)).as("__tk"))
+    val dl = size(col("__tk")).cast("long")
+    // (avgdl, per-term (df, idf)) from one aggregate; skipped without terms
+    val (avgdl, termStats) =
+      if (qs.isEmpty) (0.0, Seq.empty[(Long, Double)])
+      else {
+        val stats = toks.agg(count(lit(1)).as("n_docs"),
+          (avg(dl.cast("double")).as("avgdl") +: qs.indices.map(i =>
+            count(when(array_contains(col("__tk"), qs(i)), 1)).as(s"df$i"))): _*)
+        val row = stats.select((col("avgdl") +: qs.indices.flatMap { i =>
+          val df = col(s"df$i")
+          Seq(df, log(lit(1.0) + (col("n_docs") - df + lit(0.5)) / (df + lit(0.5))))
+        }): _*).head()
+        (if (row.isNullAt(0)) 0.0 else row.getDouble(0),
+          qs.indices.map(i => (row.getLong(1 + 2 * i), row.getDouble(2 + 2 * i))))
+      }
+    val hit = qs.indices.filter(i => termStats(i)._1 > 0)
+    val tfd = toks.select((col("*") +: dl.as("__dl") +: hit.map(i =>
+      (size(col("__tk")) - size(array_remove(col("__tk"), qs(i)))).cast("long")
+        .as(s"__tf$i"))): _*)
+    def w(i: Int): Column = {
+      val tf = col(s"__tf$i")
+      when(tf > 0, lit(termStats(i)._2) * (tf * lit(k1 + 1.0)) /
+        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / lit(avgdl))))
+        .otherwise(lit(0.0))
+    }
+    val scored = tfd
+      .withColumn("score",
+        hit.map(w).reduceOption(_ + _).getOrElse(lit(null).cast("double")))
+      .withColumn("n_terms", hit.map(i =>
+        when(col(s"__tf$i") > 0, lit(1L)).otherwise(lit(0L))).reduceOption(_ + _)
+        .getOrElse(lit(0L)))
+      .filter(if (hit.isEmpty) lit(false) else col("n_terms") > 0)
+    scored.drop(("__tk" +: "__dl" +: hit.map(i => s"__tf$i")): _*)
+      .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }
 
@@ -82,10 +113,10 @@ object FullText {
     * the doubles replay exactly; the Σ_t term sum follows n2's convention
     * (4-term sums, 6-dp rounding downstream).
     *
-    * Plan: n2's discipline per field — explode + codegen'd In-filter so
-    * every exchange carries query-term hits only; the (N, avgdl_f)
-    * scalars ride ONE broadcast row. At 100 TB each field's hit table is
-    * the same bounded shape n2 ships. */
+    * Plan: per field, explode + codegen'd In-filter so every exchange
+    * carries query-term hits only; the (N, avgdl_f) scalars ride ONE
+    * broadcast row. At 100 TB each field's hit table is bounded by the
+    * query terms' postings. */
   def bm25f(docs: DataFrame, idCol: String,
             fields: Seq[(String, Double, Double)],
             terms: Seq[String], k: Int, k1: Double = 1.2): DataFrame = {
@@ -213,8 +244,8 @@ object FullText {
     * pushes into the scan); corpus document frequencies come from one
     * explode pass semi-joined against the broadcast seed-term list BEFORE
     * the groupBy, so the only corpus-sized shuffle carries seed-term hits
-    * only (the [[bm25]] discipline); the final scoring pass IS [[bm25]]
-    * over the corpus minus the seed. */
+    * only (the term-filter-before-shuffle discipline); the final scoring
+    * pass IS [[bm25]] over the corpus minus the seed. */
   def moreLikeThis(docs: DataFrame, idCol: String, textCol: String,
                    seedId: Long, m: Int = 10, k: Int = 10,
                    minTf: Long = 2, minLen: Int = 3): DataFrame = {
@@ -364,7 +395,7 @@ object FullText {
     * docs only: `doc_id`, `n_matches`, `first_pos` (top-k by matches).
     *
     * 100 TB shape: the In-filter cuts the exploded stream to query-term
-    * hits BEFORE anything shuffles (the n2 discipline); the phrase table
+    * hits BEFORE anything shuffles (the term-filter discipline); the phrase table
     * is a ≤|phrase|-row broadcast; vote counting is a map-side-combined
     * groupBy on (doc, start); ranking is TakeOrderedAndProject. */
   def phraseSearch(docs: DataFrame, idCol: String, textCol: String,
@@ -407,7 +438,7 @@ object FullText {
     * latest occurrence).
     *
     * 100 TB shape: the explode is term-filtered before any shuffle (the
-    * [[bm25]] discipline), the running maxes and the final min share ONE
+    * [[phraseSearch]] discipline), the running maxes and the final min share ONE
     * doc-keyed exchange, and per-row state is |terms| longs. Output:
     * (doc_id, n_hits, min_window), all-terms docs only, ranked
     * min_window ↑, n_hits ↓, doc_id ↑ — total integer tiebreak. */

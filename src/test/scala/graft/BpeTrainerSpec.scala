@@ -136,4 +136,17 @@ class BpeTrainerSpec extends AnyFunSuite {
       assert(got(i.toLong) == expected, s"doc $i")
     }
   }
+
+  test("vocabulary above driverWordCap: the corpus is aggregated once") {
+    // every input partition counts one scan per pass over the corpus; the
+    // cap probe and the distributed ladder must share ONE aggregation
+    val scans = spark.sparkContext.longAccumulator("corpus partition scans")
+    val texts = Seq("low lower newest", "widest low new", "aaaa bb ab", "lower newest wide")
+    val df = spark.sparkContext.parallelize(texts, 4)
+      .mapPartitions { it => scans.add(1); it }.toDF("text")
+    val merges = BpeTrainer.train(df, "text", 3, driverWordCap = 2)
+      .as[(Long, String, String, Long)].collect().toSeq.sortBy(_._1)
+    assert(merges == reference(texts, 3))
+    assert(scans.value == 4, s"${scans.value} partition scans for 4 partitions")
+  }
 }

@@ -1,7 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftService._
 import graft.operators.HashEmbedder
@@ -9,7 +20,7 @@ import graft.operators.HashEmbedder
 /** End-to-end retrieve over a Morphik-shaped chunk table: scope + DSL
   * filters push before scoring; min_score, rerank oversampling, padding and
   * doc-level grouping compose; results are deterministic. */
-class GraftServiceSpec extends AnyFunSuite {
+class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -198,6 +209,61 @@ class GraftServiceSpec extends AnyFunSuite {
       "hybrid serving call left a cached relation pinned")
     assert(spark.sparkContext.getPersistentRDDs.size == rddsBefore,
       "hybrid serving call left a persisted RDD pinned")
+  }
+
+  /** Runs `call` to its last row; returns the Spark jobs it started and
+    * the partition-less windows (single-task sorts of their whole input)
+    * in the physical plans it executed and in the frame it returned. */
+  private def jobsAndGlobalWindows(call: => DataFrame): (Seq[String], Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse(s"job ${e.jobId}"))
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val out = try { val df = call; df.collect(); ListenerBus.drain(sc); df }
+    finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    val physical = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+      case w: WindowExecBase if w.partitionSpec.isEmpty => w.nodeName
+      case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.nodeName
+    })
+    val logicalWindows = out.queryExecution.optimizedPlan.collect {
+      case w: logical.Window if w.partitionSpec.isEmpty => "Window"
+    }
+    (jobs.asScala.toSeq, physical ++ logicalWindows)
+  }
+
+  test("job-count guard: a hybrid read runs <= 4 jobs, an mmr read 1, no global window") {
+    // a parquet-backed table, as a served index is: over the in-memory
+    // fixture the optimizer folds some plans into local evaluation
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve").toString + "/chunks"
+    chunkTable.df.write.parquet(dir)
+    val table = ChunkTable(spark.read.parquet(dir))
+    val req = RetrieveRequest("spark query engine chunk 0", k = 5, appId = Some("app1"))
+    retrieveChunksHybrid(req, table).collect() // warm the embedder and codegen
+    val (hybridJobs, hybridWindows) = jobsAndGlobalWindows(retrieveChunksHybrid(req, table))
+    assert(hybridJobs.size <= 4, s"hybrid read ran ${hybridJobs.size} jobs: $hybridJobs")
+    assert(hybridWindows.isEmpty, s"hybrid plan holds a partition-less window: $hybridWindows")
+    val (mmrJobs, mmrWindows) = jobsAndGlobalWindows(retrieveChunksDiverse(req, table))
+    assert(mmrJobs.size == 1, s"mmr read ran ${mmrJobs.size} jobs: $mmrJobs")
+    assert(mmrWindows.isEmpty, s"mmr plan holds a partition-less window: $mmrWindows")
+    // the guard sees the old plan shape: the full-outer-join RRF plan runs
+    // more jobs and ranks in partition-less windows
+    val (refJobs, refWindows) =
+      jobsAndGlobalWindows(HybridReference.retrieveChunksHybrid(req, table))
+    assert(refJobs.size > 4 && refWindows.nonEmpty,
+      s"guard is blind to the old plan: ${refJobs.size} jobs, windows $refWindows")
   }
 
   test("hybrid arm degrades to dense-only when no query term matches the corpus") {

@@ -64,4 +64,22 @@ class LangIdSpec extends AnyFunSuite {
       isSeed = col("doc_id") < 10).select("id").collect().map(_.getLong(0))
     assert(ids.toSeq === Seq(11L))
   }
+
+  test("docM > profileK is refused; docM == profileK still scores") {
+    // matched-only scoring equals the out-of-place argmin only while every
+    // doc rank is <= profileK; past it the answer would be silently wrong
+    val e = intercept[IllegalArgumentException] {
+      Corpus.langIdTrained(corpus, "doc_id", "text", "lang",
+        isSeed = col("doc_id") < 10, profileK = 5, docM = 6)
+    }
+    assert(e.getMessage.contains("docM <= profileK"))
+    assert(Corpus.langIdTrained(corpus, "doc_id", "text", "lang",
+      isSeed = col("doc_id") < 10, profileK = 5, docM = 5).count() === 12)
+  }
+
+  test("no labeled seed docs: zero rows, not a null prediction per doc") {
+    val out = Corpus.langIdTrained(corpus, "doc_id", "text", "lang",
+      isSeed = lit(false)).collect()
+    assert(out.isEmpty, s"expected no predictions, got ${out.toSeq}")
+  }
 }

@@ -63,16 +63,16 @@ class PlanGuardSpec extends AnyFunSuite {
       s"span join degraded to nested loop:\n$p")
   }
 
-  test("n2_bm25: stats side broadcast, df computed as a window over hits") {
-    // NOTE a corpus-sized shuffle-join regression is NOT detectable at this
-    // sf (AQE would broadcast anything this small); what this pins is the
-    // two shapes the operator is built around: the one-row corpus-stats
-    // crossJoin broadcasts, and document frequency is a count-over-term
-    // Window on the hit table (the single-consumer-tf form that needs no
-    // serving-path persist) — absolute cost regressions are Bench's job
+  test("n2_bm25: one scoring scan into a top-k heap; no exchange, join or window") {
+    // the (N, avgdl, df) stats row is collected when the query is built and
+    // bound as literals, so the plan that runs is a single map-only scan
+    // whose only cut is the bounded heap; a corpus-sized shuffle, a join
+    // back to a stats side or a df window would show here
     val p = executedPlan("n2_bm25")
-    assert(p.contains("BroadcastExchange"), s"stats not broadcast:\n$p")
-    assert(p.contains("Window"), s"df no longer the window-over-hits shape:\n$p")
+    assert(p.contains("TakeOrderedAndProject"), s"global sort instead of heap:\n$p")
+    assert(!p.contains("Exchange"), s"scoring pass shuffles:\n$p")
+    assert(!p.contains("Join"), s"scoring pass joins:\n$p")
+    assert(!p.contains("Window"), s"scoring pass windows:\n$p")
   }
 
   test("n3_hybrid_rrf: arms pre-limit with top-k heaps, filters reach the scans, fusion never all-pairs") {
@@ -324,10 +324,11 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"), s"lost the aggregate shape:\n$p")
   }
 
-  test("n8_more_like_this: final pass keeps the n2 shape (broadcast stats, window df)") {
+  test("n8_more_like_this: final pass keeps the n2 shape (one scan into a top-k heap)") {
     val p = executedPlan("n8_more_like_this")
-    assert(p.contains("BroadcastExchange"), s"stats not broadcast:\n$p")
-    assert(p.contains("Window"), s"df no longer the window-over-hits shape:\n$p")
+    assert(p.contains("TakeOrderedAndProject"), s"global sort instead of heap:\n$p")
+    assert(!p.contains("Exchange"), s"final pass shuffles:\n$p")
+    assert(!p.contains("Window"), s"final pass windows:\n$p")
     assert(!p.contains("CartesianProduct"), s"all-pairs seam:\n$p")
   }
 
