@@ -1,10 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line
-  * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+  * SPARK_GRAFT_SF_DIR and prints a slim summary line, then the full JSON
+  * line {"metric":"total","value":N,"unit":"sec",...,"queries":{...},...}
+  * last. `Bench <query>...` times only the named registry queries (any
+  * registry name, not only headliners) with the same method.
   *
   * Headliners cover every heavy operator family on its SCALE path: scan+agg
   * (q1), multi-join (q2), filter DSL (f5), listing sort+page (l1), KNN
@@ -115,6 +120,20 @@ object Bench {
     "t24_lsh_match" -> ((s, d) => graft.queries.TextQueries.lshMatchPrepared(s, d)),
     "n2_bm25" -> ((s, d) => graft.queries.SearchQueries.bm25Prepared(s, d)))
 
+  /** The per-query median map of a previous bench artifact: the whole text
+    * as one JSON document (a pretty-printed file), else the last JSON line
+    * whose object carries a `queries` object (slim + full JSON lines). */
+  private[graft] def parsePrev(text: String): Option[Map[String, Double]] = {
+    val mapper = new ObjectMapper()
+      .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    def queries(json: String): Option[Map[String, Double]] =
+      Try(mapper.readTree(json)).toOption
+        .flatMap(n => Option(n).flatMap(n => Option(n.get("queries"))))
+        .filter(_.isObject)
+        .map(_.properties.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
+    queries(text).orElse(text.linesIterator.flatMap(queries).toSeq.lastOption)
+  }
+
   private def loadavg1(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
     catch { case _: Throwable => 0.0 }
@@ -125,7 +144,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Pre-flight idle gate: measuring on a loaded box produces contaminated
     // medians no post-hoc marker can repair (round-5 artifact: worst_spread
     // 4.07 under loadavg 4.6). Wait — bounded — for the 1-minute loadavg to
@@ -158,36 +176,27 @@ object Bench {
       if (refuseContaminated) {
         System.err.println(f"[bench] idle gate TIMED OUT at loadavg " +
           f"${loadavg1()}%.2f — REFUSING to publish (strict mode)")
-        println(f"""{"metric":"total","value":-1.0,"unit":"sec","refused":true,"reason":"idle_gate_expired","loadavg":"${loadavg()}"}""")
+        println(f"""{"metric":"total","value":-1.0,"unit":"sec","refused":true,"reason":"idle_gate_expired","loadavg":${Harness.jsonStr(loadavg())}}""")
         sys.exit(3)
       }
       System.err.println(f"[bench] idle gate TIMED OUT at loadavg " +
         f"${loadavg1()}%.2f — measuring anyway; artifact will be stamped " +
         "contaminated:true with per-query loadavg samples")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     // JIT/codegen warmup on the bench dir itself so headline timings measure
     // steady-state query time, not first-run Janino/JIT compilation — plan
     // compile cost only partially transfers across input dirs (observed:
     // 17s cold / 6s cross-dir-warmed / 2s same-dir-warmed for t4).
     val warm = sfDir
-    // Optional args = query names to measure (local iteration helper; the
-    // driver's no-arg invocation measures the full headline list). Names
-    // are validated so a typo fails instead of silently timing nothing.
+    // Optional args = registry query names to measure (local iteration
+    // helper; the no-arg invocation measures the headline list).
+    // Headliners keep their headline order, the rest follow by name.
     val sel: Seq[String] =
       if (args.isEmpty) headline
-      else {
-        val bad = args.filterNot(headline.contains)
-        require(bad.isEmpty, s"not headline queries: ${bad.mkString(",")}")
-        headline.filter(args.contains)
-      }
+      else Harness.select(args.toSeq,
+        headline ++ (SparkEntry.queries.keySet -- headline).toSeq.sorted,
+        "registry queries")
     // Prepare phase: index builds (offline jobs at scale) run here, once.
     val prepared: Map[String, () => org.apache.spark.sql.DataFrame] =
       preparedFactories.filter(kv => sel.contains(kv._1)).map { case (n, f) =>
@@ -196,18 +205,18 @@ object Bench {
         System.err.println(f"[bench] prepare $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
         n -> closure
       }
-    // The timed action materializes EVERY output column through the noop
-    // sink. count() is not an honest action for projection-final queries:
-    // Catalyst prunes unreferenced projections, so e.g. t29's rebuilt-text
-    // pipeline timed 0.9s under count() vs ~13s real at x64 — count()
-    // measured the scan, not the operator.
-    def run(name: String): Unit =
+    def time(name: String): Double = Harness.timeNoop(
       prepared.get(name).map(_.apply())
-        .getOrElse(SparkEntry.queries(name)(spark, sfDir))
-        .write.mode("overwrite").format("noop").save()
+        .getOrElse(SparkEntry.queries(name)(spark, sfDir)))
+    // Failed runs read -1 and print their failure, so a -1 in the
+    // committed artifact is traceable.
+    def measureOnce(name: String): Double =
+      try time(name)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e"); -1.0 }
     sel.foreach { n =>
       val t0 = System.nanoTime()
-      try run(n)
+      try time(n)
       catch { case e: Throwable => System.err.println(s"[bench] warmup $n FAILED: $e") }
       System.err.println(f"[bench] warmup $n ${(System.nanoTime() - t0) / 1e9}%.1fs")
     }
@@ -228,14 +237,7 @@ object Bench {
       Seq("q1_agg", "q2_join3", "e3_window_agg", "m9_scene_cuts_dense")
         .filter(sel.contains)
     def median3(name: String): Double = {
-      val s = (1 to 3).map(_ => {
-        val t0 = System.nanoTime()
-        try { run(name); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          // a -1 anchor in the committed artifact must be traceable: print
-          // the failure like measureOnce does (r16 advice)
-          System.err.println(s"[bench] anchor $name FAILED: $e"); -1.0 }
-      }).filter(_ >= 0).sorted
+      val s = (1 to 3).map(_ => measureOnce(name)).filter(_ >= 0).sorted
       if (s.isEmpty) -1.0 else s(s.size / 2)
     }
     val anchorFirst = anchorNames.map(n => n -> median3(n)).toMap
@@ -250,12 +252,6 @@ object Bench {
     // negative min); a query reports -1 only when EVERY sample failed.
     val loadBefore = loadavg()
     var extraRuns = 0
-    def measureOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { run(name); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e"); -1.0 }
-    }
     // 1-minute loadavg sampled at the START of each query's measurement —
     // the per-query contamination evidence VERDICT r7 asked for: a reader
     // can see exactly which queries ran under load, not just box-level
@@ -303,18 +299,14 @@ object Bench {
     // RELATIVE spikes (a query whose loadavg jumps far above its neighbors'
     // ran alongside an intruder), not as an absolute gate.
     val contaminated = gateExpired
-    val qLoadJson = queryLoad.map { case (k, v) => "\"" + k + f"""\":$v%.2f""" }
-      .mkString("{", ",", "}")
-    val qs = results.map { case (k, med, _, _, _) => "\"" + k + f"""\":$med%.3f""" }
-      .mkString("{", ",", "}")
-    val mins = results.map { case (k, _, mn, _, _) => "\"" + k + f"""\":$mn%.3f""" }
-      .mkString("{", ",", "}")
+    val qLoadJson = Harness.jsonObj(queryLoad.map { case (k, v) => k -> f"$v%.2f" })
+    val qs = Harness.jsonObj(results.map { case (k, med, _, _, _) => k -> f"$med%.3f" })
+    val mins = Harness.jsonObj(results.map { case (k, _, mn, _, _) => k -> f"$mn%.3f" })
     // actual per-query run counts (3 base + remeasures) — the JSON must not
     // claim a fixed 3 when a contended query used up to 7
-    val runs = results.map { case (k, _, _, n, _) => "\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val sampleFails = results.collect { case (k, _, _, _, f) if f > 0 =>
-      "\"" + k + "\":" + f }.mkString("{", ",", "}")
+    val runs = Harness.jsonObj(results.map { case (k, _, _, n, _) => k -> n.toString })
+    val sampleFails = Harness.jsonObj(results.collect {
+      case (k, _, _, _, f) if f > 0 => k -> f.toString })
     val okResults = results.filter(_._3 > 0)
     val total = okResults.map(_._2).sum
     val totalMin = okResults.map(_._3).sum
@@ -331,10 +323,9 @@ object Bench {
         "totals as upper bounds")
     def medianOf(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0 else { val s = xs.sorted; s(s.size / 2) }
-    val anchorsJson = anchorNames.map { n =>
-      "\"" + n +
-        f"""\":{"first":${anchorFirst(n)}%.3f,"last":${anchorLast(n)}%.3f}"""
-    }.mkString("{", ",", "}")
+    val anchorsJson = Harness.jsonObj(anchorNames.map { n =>
+      n -> f"""{"first":${anchorFirst(n)}%.3f,"last":${anchorLast(n)}%.3f}"""
+    })
     val bootAnchor = anchorFirst.getOrElse("q1_agg", -1.0)
     val anchorDrift = medianOf(anchorNames.flatMap(n =>
       for (f <- anchorFirst.get(n); l <- anchorLast.get(n)
@@ -349,18 +340,12 @@ object Bench {
     val curMed = results.map { case (k, med, _, _, _) => k -> med }.toMap
     val prevCmp: String = sys.env.get("SPARK_GRAFT_PREV_BENCH").flatMap { p =>
       try {
-        // the file may hold several JSON lines (bench_summary.json writes
-        // slim + full); parse the last line that carries a queries map
         val src = scala.io.Source.fromFile(p)
-        val line = try src.getLines().filter(_.contains("\"queries\""))
-          .foldLeft("")((_, l) => l) finally src.close()
-        val node = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(if (line.nonEmpty) line
-            else scala.io.Source.fromFile(p).mkString)
-        val q = node.get("queries")
+        val text = try src.mkString finally src.close()
+        val q = parsePrev(text).getOrElse(
+          throw new IllegalArgumentException("no JSON object with a queries map"))
         val ratios = curMed.toSeq.collect {
-          case (k, cur) if cur > 0 && q.has(k) && q.get(k).asDouble > 0 =>
-            (k, cur / q.get(k).asDouble)
+          case (k, cur) if cur > 0 && q.getOrElse(k, 0.0) > 0 => (k, cur / q(k))
         }
         if (ratios.isEmpty) None
         else {
@@ -368,21 +353,19 @@ object Bench {
           val ar = medianOf(
             ratios.filter(r => anchorNames.contains(r._1)).map(_._2))
           val adj = if (ar > 0) mr / ar else -1.0
-          Some(f""""prev_bench":"$p","common_queries":${ratios.size},"anchor_ratio":$ar%.3f,"median_ratio_vs_prev":$mr%.3f,"median_ratio_vs_prev_adjusted":$adj%.3f,""")
+          Some(f""""prev_bench":${Harness.jsonStr(p)},"common_queries":${ratios.size},"anchor_ratio":$ar%.3f,"median_ratio_vs_prev":$mr%.3f,"median_ratio_vs_prev_adjusted":$adj%.3f,""")
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] prev-bench parse failed: $e"); None }
     }.getOrElse("")
-    // The driver's capture truncates long stdout: BENCH_r{14,15,16}.json all
-    // shipped parsed:null because the only machine-readable line was the
-    // full ~190-query map (far past any sane line cap). Fix (r16 verdict
-    // #2): emit a SLIM self-contained summary line first AND repeat it
-    // last, with the full map line in between — whichever end of the
-    // stream the driver keeps, it contains one complete parseable JSON
-    // object carrying the headline number and the boot-quality evidence.
+    // Consumers parse the LAST stdout line, so the full line (with the
+    // per-query map) goes last. A SLIM self-contained summary line goes
+    // first: a capture that truncates the long full line still holds one
+    // complete JSON object with the headline number and the boot-quality
+    // evidence.
     val prevAdj = prevCmp.split(",").find(_.startsWith("\"median_ratio_vs_prev_adjusted\""))
       .map(s => "," + s).getOrElse("")
-    val slim = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","boot_anchor":$bootAnchor%.3f,"anchor_drift":$anchorDrift%.3f,"anchors":$anchorsJson,"worst_spread":$worstSpread%.2f,"worst_spread_query":"$worstSpreadQuery","extra_runs":$extraRuns,"failed_queries":$failed,"contaminated":$contaminated$prevAdj}"""
+    val slim = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":${Harness.jsonStr(sfDir)},"boot_anchor":$bootAnchor%.3f,"anchor_drift":$anchorDrift%.3f,"anchors":$anchorsJson,"worst_spread":$worstSpread%.2f,"worst_spread_query":${Harness.jsonStr(worstSpreadQuery)},"extra_runs":$extraRuns,"failed_queries":$failed,"contaminated":$contaminated$prevAdj}"""
     println(slim)
     // Belt-and-braces for the driver's stdout capture (parsed:null in
     // BENCH_r10..r17): the full machine line is ALSO written to a file, so
@@ -394,9 +377,8 @@ object Bench {
     // changes: "noop_sink_v2" = every query timed to a noop-format sink
     // (count() let Catalyst prune projection-final operators and
     // under-measured them — r5 artifacts are on that older basis).
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing_basis":"noop_sink_v2","anchors":$anchorsJson,"boot_anchor":$bootAnchor%.3f,"anchor_drift":$anchorDrift%.3f,$prevCmp"queries":$qs,"sf":"$sfDir","base_runs":3,"stat":"median_fastest3","queries_min":$mins,"query_runs":$runs,"sample_failures":$sampleFails,"total_min":$totalMin%.3f,"worst_spread":$worstSpread%.2f,"worst_spread_query":"$worstSpreadQuery","extra_runs":$extraRuns,"failed_queries":$failed,"contaminated":$contaminated,"idle_gate_expired":$gateExpired,"query_loadavg":$qLoadJson,"loadavg_at_start":"$loadAtStart","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing_basis":"noop_sink_v2","anchors":$anchorsJson,"boot_anchor":$bootAnchor%.3f,"anchor_drift":$anchorDrift%.3f,$prevCmp"queries":$qs,"sf":${Harness.jsonStr(sfDir)},"base_runs":3,"stat":"median_fastest3","queries_min":$mins,"query_runs":$runs,"sample_failures":$sampleFails,"total_min":$totalMin%.3f,"worst_spread":$worstSpread%.2f,"worst_spread_query":${Harness.jsonStr(worstSpreadQuery)},"extra_runs":$extraRuns,"failed_queries":$failed,"contaminated":$contaminated,"idle_gate_expired":$gateExpired,"query_loadavg":$qLoadJson,"loadavg_at_start":${Harness.jsonStr(loadAtStart)},"loadavg_before":${Harness.jsonStr(loadBefore)},"loadavg_after":${Harness.jsonStr(loadAfter)}}"""
     println(full)
-    println(slim)
     try {
       val w = new java.io.PrintWriter(new java.io.File(summaryPath))
       try { w.println(slim); w.println(full) } finally w.close()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftService._
 import graft.streaming.IngestPipeline
@@ -15,10 +14,7 @@ object Demo {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val queryText = if (args.length > 1) args.drop(1).mkString(" ")
       else "fast table scan merge join"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(8)
 
     // ingest: documents -> chunks + embeddings (the S1/C1/E1 pipeline)
     val docs = Tables.documents(spark, dir)

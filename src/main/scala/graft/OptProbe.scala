@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
 
 /** Dev tool (r17 optimization round): attribute one query's wall time to
@@ -15,15 +13,7 @@ import scala.collection.mutable
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
 
     final case class Job(id: Int, callSite: String, var start: Long = 0L,
                          var end: Long = 0L)
@@ -53,15 +43,10 @@ object OptProbe {
 
     args.foreach { n =>
       val fn = SparkEntry.queries(n)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val w = once() // warm: JIT + codegen
+      val w = Harness.timeNoop(fn(spark, dir)) // warm: JIT + codegen
       jobs.clear(); stages.clear()
       spark.sparkContext.addSparkListener(listener)
-      val t = once()
+      val t = Harness.timeNoop(fn(spark, dir))
       Thread.sleep(500) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
       println(f"\n===== $n warm $w%.2fs instrumented $t%.2fs " +

@@ -1,30 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool (r17): dump `explain("formatted")` for named registry queries to
+/** Dev tool (r17): dump `explain("formatted")` for named registry queries
+  * (every registry query when none is named) to
   * <outDir>/<query>_<suffix>.txt — the before/after plan evidence the
   * optimization round commits alongside each change.
-  * Usage: runMain graft.PlanDump <outDir> <suffix> <query> [<query>...]
+  * Usage: runMain graft.PlanDump <outDir> <suffix> [<query>...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1 — plans are captured at the
   * bench's scale factor), SPARK_GRAFT_CPUS.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query>...")
+    require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [<query>...]")
     val outDir = new java.io.File(args(0)); outDir.mkdirs()
     val suffix = args(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    args.drop(2).foreach { n =>
+    val spark = Harness.session(32)
+    Harness.select(args.drop(2).toSeq, SparkEntry.queries.keys.toSeq.sorted,
+      "registry queries").foreach { n =>
       val f = new java.io.File(outDir, s"${n}_$suffix.txt")
       try {
         val plan = SparkEntry.queries(n)(spark, dir)

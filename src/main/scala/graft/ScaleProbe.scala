@@ -69,16 +69,7 @@ object ScaleProbe {
     // lowmem models ONE small executor (8 cores at whatever -Xmx the
     // SPARK_DRIVER_MEM env set — the probe is meant to run at 4g); the
     // scaling modes use the full box
-    val cpus = if (mode == "lowmem") sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-               else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(if (mode == "lowmem") 8 else 32)
     if (mode == "gen" || mode == "all") factors.foreach(f => gen(spark, f))
     if (mode == "recall" || mode == "all") {
       // regenerate any stale-methodology dir before measuring against it
@@ -141,40 +132,12 @@ object ScaleProbe {
         "t73_linear_classifier", "m15_audio_neardup", "q7_hdr_quantiles",
         "ev19_ragas", "ev20_er_f1", "q9_kmv_overlap", "t74_containment")
       // optional second arg: probe only the named queries (comma-separated) —
-      // re-measuring one changed operator shouldn't cost the full heavy tail.
-      // Unknown names fail loudly: a typo silently probing nothing (and still
-      // exiting 0 after minutes of gen) reads as success.
-      val heavy = args.lift(1) match {
-        case Some(list) =>
-          val want = list.split(',').filter(_.nonEmpty).toSet
-          val unknown = want -- heavyAll.toSet
-          require(unknown.isEmpty,
-            s"unknown x64 queries: ${unknown.mkString(", ")} " +
-              s"(heavy tail: ${heavyAll.mkString(", ")})")
-          heavyAll.filter(want)
-        case None => heavyAll
-      }
-      heavy.foreach { name =>
+      // re-measuring one changed operator shouldn't cost the full heavy tail
+      Harness.select(csv(args), heavyAll, "x64 queries").foreach { name =>
         val fn = SparkEntry.queries(name)
-        // k2's scale contract is k ∝ n: the x64 leg runs at k=8·64=512
-        // (constant expected cluster size), not the bench k — fixed-k at 64x
-        // data would time the O(Σ|cluster|²) misconfiguration instead of
-        // the operator (and 512-centroid plans are exactly what the
-        // broadcast-codebook assign exists for)
-        val fn64: (SparkSession, String) => DataFrame =
-          if (name == "k2_semdedup")
-            (s, d) => graft.queries.ClusterQueries.semDedupAt(s, d, k = 512)
-          // k8 shares k2's k ∝ n contract — the blocking only prunes at
-          // constant cell size, so the x64 leg must scale k with the data
-          else if (name == "k8_dbscan_blocked")
-            (s, d) => graft.queries.ClusterQueries.dbscanBlockedAt(s, d, k = 512)
-          else fn
         val t1x = timeQuery(fn, spark, base)
-        val t64 = timeQuery(fn64, spark, s"$root/x64")
-        val note =
-          if (name == "k2_semdedup") " [k scaled 8->512]"
-          else if (name == "k8_dbscan_blocked") " [k scaled 8->512]"
-          else ""
+        val t64 = timeQuery(kScaled(name).getOrElse(fn), spark, s"$root/x64")
+        val note = if (kScaled(name).isDefined) " [k scaled 8->512]" else ""
         println(f"[scale] $name%-22s x1=$t1x%6.2fs x64=$t64%7.2fs " +
           f"ratio=${t64 / t1x}%.1f (data 64x)$note")
       }
@@ -228,27 +191,14 @@ object ScaleProbe {
         // per partition at x64 — the keyed-sort spill candidate) + its
         // lag-explode join; gr6's wedge self-join over the 64x graph
         "e25_acf", "gr6_triangles")
-      val picked = args.lift(1) match {
-        case Some(list) =>
-          val want = list.split(',').filter(_.nonEmpty).toSet
-          val unknown = want -- lowmemAll.toSet
-          require(unknown.isEmpty, s"unknown lowmem queries: " +
-            s"${unknown.mkString(", ")} (set: ${lowmemAll.mkString(", ")})")
-          lowmemAll.filter(want)
-        case None => lowmemAll
-      }
-      picked.foreach { name =>
+      val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+      Harness.select(csv(args), lowmemAll, "lowmem queries").foreach { name =>
         memSpill.set(0); diskSpill.set(0); peakTaskMem.set(0)
-        val fn: (SparkSession, String) => DataFrame =
-          if (name == "k2_semdedup")
-            (s, d) => graft.queries.ClusterQueries.semDedupAt(s, d, k = 512)
-          else if (name == "k8_dbscan_blocked")
-            (s, d) => graft.queries.ClusterQueries.dbscanBlockedAt(s, d, k = 512)
-          else SparkEntry.queries(name)
+        val fn = kScaled(name).getOrElse(SparkEntry.queries(name))
         val t0 = System.nanoTime()
         val outcome =
           try {
-            fn(spark, s"$root/x64").write.mode("overwrite").format("noop").save()
+            Harness.timeNoop(fn(spark, s"$root/x64"))
             "completed"
           } catch {
             case e: Throwable =>
@@ -277,12 +227,8 @@ object ScaleProbe {
         val tok = (0 until len).map(i => s"w${i % 97}").mkString(" ")
         val docs = (0 until 32).map(i => (i.toLong, if (i == 0) tok else s"pre$i $tok"))
           .toDF("doc_id", "text").repartition(32)
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          operators.Dedup.removeDupSpans(docs, "doc_id", "text")
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        def once(): Double =
+          Harness.timeNoop(operators.Dedup.removeDupSpans(docs, "doc_id", "text"))
         once()
         val t = (1 to 2).map(_ => once()).min
         val vs = prev.map(p => f" vs_prev_octave=${t / p}%.2fx").getOrElse("")
@@ -310,19 +256,32 @@ object ScaleProbe {
     spark.stop()
   }
 
+  /** The optional comma-separated query list after the mode. */
+  private def csv(args: Array[String]): Seq[String] =
+    args.lift(1).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+
+  /** k2's scale contract is k ∝ n: the x64 and lowmem legs run at
+    * k=8·64=512 (constant expected cluster size), not the bench k —
+    * fixed-k at 64x data would time the O(Σ|cluster|²) misconfiguration
+    * instead of the operator (and 512-centroid plans are exactly what the
+    * broadcast-codebook assign exists for). k8 shares the contract: its
+    * blocking only prunes at constant cell size. */
+  private def kScaled(name: String): Option[(SparkSession, String) => DataFrame] =
+    name match {
+      case "k2_semdedup" =>
+        Some((s, d) => graft.queries.ClusterQueries.semDedupAt(s, d, k = 512))
+      case "k8_dbscan_blocked" =>
+        Some((s, d) => graft.queries.ClusterQueries.dbscanBlockedAt(s, d, k = 512))
+      case _ => None
+    }
+
   /** ONE timing methodology for every probe mode (run and x64 must stay
     * comparable): warm twice (plan compile + first-touch shuffle/page-cache
-    * at the larger factors), then best of 2 measured. The action is the
-    * noop sink — it materializes every output column, where count() lets
-    * Catalyst prune a projection-final operator down to its scan (same
-    * rationale as Bench). */
+    * at the larger factors), then best of 2 measured, each through
+    * [[Harness.timeNoop]]. */
   private def timeQuery(fn: (SparkSession, String) => DataFrame,
                         spark: SparkSession, dir: String): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(): Double = Harness.timeNoop(fn(spark, dir))
     once(); once()
     (1 to 2).map(_ => once()).min
   }

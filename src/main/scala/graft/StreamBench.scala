@@ -68,23 +68,10 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val durSec = args.headOption.map(_.toInt).getOrElse(12)
-    val arms: Set[String] = args.lift(1) match {
-      case Some(csv) =>
-        val want = csv.split(',').filter(_.nonEmpty).toSet
-        val unknown = want -- allArms.toSet
-        require(unknown.isEmpty, s"unknown StreamBench arms: " +
-          s"${unknown.mkString(", ")} (set: ${allArms.mkString(", ")})")
-        want
-      case None => allArms.toSet
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val arms = Harness.select(
+      args.lift(1).toSeq.flatMap(_.split(',')).filter(_.nonEmpty),
+      allArms, "StreamBench arms").toSet
+    val spark = Harness.session(8)
 
     if (arms("context_windows"))
     runStateful(spark, "context_windows", durSec, rowsPerSec = 20000,
@@ -350,7 +337,7 @@ object StreamBench {
         val (deduped, delta) = Dedup.paragraphShardStep(
           b, index, "doc_id", "text", paras,
           materialize = _.localCheckpoint())
-        deduped.write.mode("overwrite").format("noop").save()
+        Harness.timeNoop(deduped)
         deltas += delta
         if (deltas.size >= compactEvery) {
           base = deltas.foldLeft(base)(_ unionByName _)

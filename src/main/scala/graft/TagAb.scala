@@ -12,21 +12,10 @@ import org.apache.spark.sql.SparkSession
 object TagAb {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val commit = sys.env.getOrElse("GIT_COMMIT", "unknown")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Harness.session(32)
+    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Harness.timeNoop(fn(spark, dir))
     // boot anchor: q1_agg median-of-3 after one warm run
     time(SparkEntry.queries("q1_agg"))
     val anchor = (1 to 3).map(_ => time(SparkEntry.queries("q1_agg")))
