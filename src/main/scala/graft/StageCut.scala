@@ -1,58 +1,70 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.CutBridge
 import org.apache.spark.storage.StorageLevel
 
-/** Stage-cut seam for multi-consumer corpus-sized intermediates (r18,
-  * verdict ask #5 — guide §5 "Memory, spill and the driver").
+/** The one stage-cut seam (design rule 14). Every stage output the engine
+  * materializes — corpus-sized streams, per-round iteration state, bounded
+  * sketches and model tables alike — goes through `StageCut(df, label,
+  * eager)`; no other file under src/main calls `localCheckpoint`
+  * (ToolingGuardSpec enforces this). Materializing the shared subtree once
+  * is the in-process analog of writing stage outputs between passes.
   *
-  * The engine cuts repeated-evaluation dataflows by materializing the
-  * shared subtree once (rule 14: the in-process analog of writing stage
-  * outputs between passes). In LOCAL mode that is `localCheckpoint()` —
-  * blocks live in executor-local storage with TRUNCATED lineage, which on
-  * a real cluster means an executor loss fails the job instead of
-  * recomputing, and a corpus-sized seam pins executor memory/disk. This
-  * helper keeps the local default bit-for-bit identical (same eager
-  * localCheckpoint, same plans) while making the cluster trade explicit
-  * and switchable per deployment:
+  * One deployment setting, `spark.graft.stageCut.mode`, decides how EVERY
+  * cut is materialized. In every mode the returned frame scans the
+  * materialized rows (its plan starts at `Scan ExistingRDD`), so an
+  * iterative loop's plan stays O(1) per round:
   *
-  *  - `spark.graft.stageCut.mode = local` (default): `localCheckpoint` —
-  *    fastest, no fault tolerance for the cut blocks; right for local
-  *    runs and for seams bounded by model/sketch size.
-  *  - `reliable`: `Dataset.checkpoint` to the configured checkpoint dir —
-  *    survives executor loss; what a 100 TB run uses for corpus-sized
-  *    seams (requires `spark.sparkContext.setCheckpointDir`).
-  *  - `disk`: `persist(DISK_ONLY)` — lineage KEPT (executor loss
-  *    recomputes the lost blocks), materialization deferred to the first
-  *    action; the cheapest fault-tolerant option when lineage is shallow.
+  *  - `local` (default): `localCheckpoint(eager)` — fastest; blocks live
+  *    in executor-local storage with TRUNCATED lineage, so on a real
+  *    cluster an executor loss fails the job ("Checkpoint block … not
+  *    found") instead of recomputing.
+  *  - `reliable`: `checkpoint(eager)` to the configured checkpoint dir
+  *    (`sparkContext.setCheckpointDir`) — survives executor loss; the
+  *    mode a 100 TB run uses.
+  *  - `disk`: the cut's rows persisted `DISK_ONLY` with lineage KEPT — a
+  *    lost block is recomputed from its parents; the cheapest
+  *    fault-tolerant option when lineage is shallow. The persist is on
+  *    the cut's RDD, not the Dataset: a cached Dataset keeps its whole
+  *    logical plan, which an iterative loop grows threefold per round
+  *    (pageRank ran out of heap at six rounds that way).
   *
-  * Bounded seams (sketches, codebooks, class×word tables) stay plain
-  * `localCheckpoint()` at call sites — they are free at any scale and
-  * their loss costs one cheap recompute; this helper is for the seams
-  * whose size scales WITH the corpus (shingle-hash streams, signature
-  * tables, fingerprint indexes, paragraph streams).
+  * `eager` is Spark's own `localCheckpoint(eager)` argument and every mode
+  * keeps its contract: an eager cut is materialized when `StageCut`
+  * returns (under `disk` by one counting job over the persisted rows), a
+  * lazy cut by the first action that reads it. (With AQE, building any
+  * cut still runs the shuffle stages upstream of it, in every mode: Spark
+  * plans the final stage to obtain the rows' RDD.)
   *
-  * `label` names the seam for the plan-guard recorder: with
-  * `spark.graft.stageCut.record = true` the PRE-cut optimized plan is
-  * kept in [[StageCut.recorded]], so specs can assert what executes
-  * INSIDE a cut stage (r17 advisor finding: after a checkpoint the
-  * registry plan starts at `Scan ExistingRDD` and in-stage kernels become
-  * invisible to plan guards).
+  * Release: no cut is ever registered with the CacheManager, so
+  * `unpersist()` on a cut frame does nothing in any mode; its blocks are
+  * freed by the ContextCleaner once nothing references the frame. A lazy
+  * cut therefore keeps its parents reachable until the action that
+  * materializes it, so nothing it derives from can be released early.
+  * Under `disk` the kept lineage holds every round of an iterative loop
+  * until the loop's result is dropped.
+  *
+  * `label` (`component.seam`) names the cut for the plan-guard recorder:
+  * with `spark.graft.stageCut.record = true` the PRE-cut optimized plan is
+  * kept in [[StageCut.recorded]], so specs can assert what executes INSIDE
+  * a cut stage (after a cut the registry plan starts at `Scan ExistingRDD`
+  * and in-stage kernels become invisible to plan guards).
   */
 object StageCut {
   /** label -> formatted pre-cut plan; populated only under
     * spark.graft.stageCut.record=true (test hook, not a cache). */
   val recorded = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def apply(df: DataFrame, label: String): DataFrame = {
+  def apply(df: DataFrame, label: String, eager: Boolean = true): DataFrame = {
     val conf = df.sparkSession.conf
     if (conf.get("spark.graft.stageCut.record", "false") == "true")
       recorded.put(label, df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     conf.get("spark.graft.stageCut.mode", "local") match {
-      case "local"    => df.localCheckpoint()
-      case "reliable" => df.checkpoint()
-      case "disk"     => df.persist(StorageLevel.DISK_ONLY)
+      case "local"    => df.localCheckpoint(eager)
+      case "reliable" => df.checkpoint(eager)
+      case "disk"     => CutBridge.persisted(df, StorageLevel.DISK_ONLY, eager)
       case m => throw new IllegalArgumentException(
         s"spark.graft.stageCut.mode must be local|reliable|disk (got $m)")
     }

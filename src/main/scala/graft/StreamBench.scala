@@ -275,7 +275,7 @@ object StreamBench {
     * the ENTIRE index every micro-batch (`union.localCheckpoint()` —
     * O(index) per batch, quadratic over the run). Now the per-batch write
     * is DELTA-ONLY ([[operators.Dedup.paragraphShardStep]]: one shared
-    * novel-ownership pass, `localCheckpoint` pins only the
+    * novel-ownership pass, a stage cut pins only the
     * batch-novelty-sized delta) with the index held as base ∪ deltas and
     * COMPACTED every 16 batches — amortized O(index/16) per batch, the
     * same append-then-compact law an LSM state store runs at scale.
@@ -311,14 +311,14 @@ object StreamBench {
         lit("the shared viral boilerplate paragraph\nshard paragraph "),
         expr("value div 100").cast("string"),
         lit("\nunique paragraph "), col("value").cast("string")).as("text"))
-    var base = Dedup.paragraphIndex(
+    var base = StageCut(Dedup.paragraphIndex(
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("text",
             org.apache.spark.sql.types.StringType)))),
-      "doc_id", "text", paras).localCheckpoint()
+      "doc_id", "text", paras), "paragraphStream.base")
     val deltas = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val compactEvery = 16
     // per-batch (rows, in-batch processing seconds, batch-end nanos) for
@@ -332,16 +332,15 @@ object StreamBench {
         java.nio.file.Files.createTempDirectory("graft_sb_paradedup").toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val bt0 = System.nanoTime()
-        val b = batch.localCheckpoint()
+        val b = StageCut(batch, "paragraphStream.batch")
         val index = deltas.foldLeft(base)(_ unionByName _)
         val (deduped, delta) = Dedup.paragraphShardStep(
-          b, index, "doc_id", "text", paras,
-          materialize = _.localCheckpoint())
+          b, index, "doc_id", "text", paras)
         Harness.timeNoop(deduped)
         deltas += delta
         if (deltas.size >= compactEvery) {
-          base = deltas.foldLeft(base)(_ unionByName _)
-            .repartition(col("h")).localCheckpoint()
+          base = StageCut(deltas.foldLeft(base)(_ unionByName _)
+            .repartition(col("h")), "paragraphStream.base")
           deltas.clear()
         }
         perBatch.add((b.count(), (System.nanoTime() - bt0) / 1e9,

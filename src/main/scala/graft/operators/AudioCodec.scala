@@ -254,7 +254,7 @@ object AudioCodec {
     val enc = RowEncoder.encoderFor(schema)
     val idIdx = audio.schema.fieldIndex(idCol)
     val bIdx = audio.schema.fieldIndex(bytesCol)
-    val sig = audio.mapPartitions { rows =>
+    val sig = graft.StageCut(audio.mapPartitions { rows =>
       rows.flatMap { r =>
         val bytes = r.getAs[Array[Byte]](bIdx)
         parseWav(bytes).iterator.filter(_.nSamples >= windows).map { info =>
@@ -293,7 +293,7 @@ object AudioCodec {
           Row(r.getLong(idIdx), info.nSamples, fp)
         }
       }
-    }(enc).localCheckpoint() // one decode, two block sides + two verifies
+    }(enc), "audioNearDups.sig") // one decode, two block sides + two verifies
     val blk = sig.select(col("id"), col("n_samples"), col("fp"),
         explode(sequence(lit(0), lit(3))).as("block_idx"))
       .withColumn("blk", expr("shiftright(fp, 16 * block_idx) & 65535"))

@@ -61,7 +61,7 @@ object BpeTrainer {
     * weighted adjacent-pair count that won the step. Stops early (fewer
     * rows) if no pair remains. Eager: runs one Spark job per iteration
     * plus the initial word-frequency aggregation (word table
-    * localCheckpoint()ed per step — the rewrite chain must not re-derive
+    * stage-cut per step — the rewrite chain must not re-derive
     * N replaces against the corpus each iteration). */
   def train(df: DataFrame, textCol: String, numMerges: Int,
             driverWordCap: Int = 100000): DataFrame = {
@@ -84,13 +84,11 @@ object BpeTrainer {
     // The corpus-sized aggregation runs ONCE on either path: the word table
     // is cut first and the cap is probed on the cut — probing wordTable
     // itself would re-aggregate the corpus for the distributed ladder.
-    var words = wordTable.localCheckpoint()
+    var words = graft.StageCut(wordTable, "bpeTrain.words")
     val probe = words.limit(driverWordCap + 1).collect()
-    if (probe.length <= driverWordCap) {
-      words.unpersist()
+    if (probe.length <= driverWordCap)
       return trainDriver(spark,
         probe.map(r => (r.getString(0), r.getLong(1))), numMerges)
-    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var done = false
@@ -105,20 +103,17 @@ object BpeTrainer {
       else {
         val (l, r, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((step, l, r, f))
-        val prev = words
-        // LAZY checkpoint (r17 optimization round): the rewritten vocab
+        // LAZY cut (r17 optimization round): the rewritten vocab
         // materializes inside the NEXT step's stats job instead of paying a
         // dedicated materialization job per merge — halves the ladder's
         // driver-job count (2 jobs/step -> 1) while keeping the same O(1)
         // lineage depth and the same per-step arithmetic.
-        words = words
-          .withColumn("sym", replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r ")))
-          .localCheckpoint(false)
-        prev.unpersist()
+        words = graft.StageCut(words
+          .withColumn("sym", replace(col("sym"), lit(s" $l  $r "), lit(s" $l$r "))),
+          "bpeTrain.words", eager = false)
         step += 1
       }
     }
-    words.unpersist()
     import spark.implicits._
     merges.toSeq.toDF("step", "left", "right", "freq")
       .select(col("step").cast("long"), col("left"), col("right"), col("freq"))

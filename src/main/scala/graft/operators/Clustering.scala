@@ -280,11 +280,11 @@ object Clustering {
     // the candidate self-join — two multi-probe assignment passes over the
     // corpus without it (the materialized rows are the probes-x-corpus
     // inverted-list layout an IVF index stores anyway)
-    val memb = graft.Tables.scaled(
+    val memb = graft.StageCut(graft.Tables.scaled(
         vectors.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")))
       .select(col("id"), col("v"),
-        explode(vec.probe_centroids(col("v"), bc, probes)).as("cid"))
-      .localCheckpoint()
+        explode(vec.probe_centroids(col("v"), bc, probes)).as("cid")),
+      "ivfCandidates.memb")
     memb.as("a")
       .join(memb.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") < col("b.id"))
@@ -353,14 +353,13 @@ object Clustering {
         .join(e.select(col("__id").as("ib"), col("__v").as("vb")),
           col("ia") < col("ib"))
     }
-    val pairs = rawPairs
+    // eager cut: the pair list is tiny but its quadratic join is not —
+    // three downstream consumers (degrees, core edges, border) must
+    // not each recompute it (out is lazy, so a persist/unpersist pair
+    // inside this function would silently do exactly that)
+    val pairs = graft.StageCut(rawPairs
       .filter(vec.cosine_sim(col("va"), col("vb")) > simThreshold)
-      .select("ia", "ib")
-      // eager cut: the pair list is tiny but its quadratic join is not —
-      // three downstream consumers (degrees, core edges, border) must
-      // not each recompute it (out is lazy, so a persist/unpersist pair
-      // inside this function would silently do exactly that)
-      .localCheckpoint()
+      .select("ia", "ib"), "dbscan.pairs")
     val und = pairs.union(pairs.select(col("ib").as("ia"),
       col("ia").as("ib")))
     val deg = e.select(col("__id"))

@@ -108,17 +108,17 @@ object Corpus {
                          idCol: String, textCol: String, n: Int,
                          expectedEvalNgrams: Long = 1L << 22,
                          fpp: Double = 0.01): DataFrame =
-    // read twice (sketch build now, confirm join later): localCheckpoint
+    // read twice (sketch build now, confirm join later): the stage cut
     // materializes the explode+distinct once WITHOUT a forever-cache — the
     // blocks are released by the ContextCleaner when the frame goes out of
     // scope, where an explicit .cache() would pin executor storage for the
     // rest of the session
     bloomArm(ngramStream(train, idCol, textCol, n),
-      ngramStream(eval_, idCol, textCol, n).select("g").distinct()
-        .localCheckpoint(),
+      graft.StageCut(ngramStream(eval_, idCol, textCol, n).select("g").distinct(),
+        "bloomDecontaminate.evalNgrams"),
       expectedEvalNgrams, fpp)
 
-  /** `evalNgrams` must already be materialized (localCheckpoint) — it is
+  /** `evalNgrams` must already be materialized (a stage cut) — it is
     * read twice: sketch build, then confirm join. */
   private def bloomArm(trainNgrams: DataFrame, evalNgrams: DataFrame,
                        expectedEvalNgrams: Long, fpp: Double): DataFrame = {
@@ -162,7 +162,7 @@ object Corpus {
     * — eval-suite-sized (the tiny side by construction: this is the side
     * we considered broadcasting), mirroring `connectedComponents`' edge
     * count — and the pass is not wasted: the counted set is
-    * localCheckpoint'ed and feeds the chosen arm directly (the count
+    * lazily stage-cut and feeds the chosen arm directly (the count
     * materializes it), so the eval side is tokenized and deduped exactly
     * once, and the measured count seeds the Bloom sizing instead of a
     * guess. Threshold overridable per deployment (bigger executors →
@@ -171,8 +171,8 @@ object Corpus {
                         idCol: String, textCol: String, n: Int,
                         broadcastNgramThreshold: Long = 1L << 20,
                         fpp: Double = 0.01): DataFrame = {
-    val evalNgrams = ngramStream(eval_, idCol, textCol, n)
-      .select("g").distinct().localCheckpoint(eager = false)
+    val evalNgrams = graft.StageCut(ngramStream(eval_, idCol, textCol, n)
+      .select("g").distinct(), "decontaminateAuto.evalNgrams", eager = false)
     val evalDistinct = evalNgrams.count()
     val trainNgrams = ngramStream(train, idCol, textCol, n)
     if (evalDistinct <= broadcastNgramThreshold)
@@ -779,25 +779,24 @@ object Corpus {
     // consumers (unigram counts, the bigram stream, the doc-roster join)
     // and the bigram stream itself fans out to counts + scoring — without
     // the stage cut the tokenizer re-runs 4x per call
-    val toks = graft.Tables.scaled(df.select(col(idCol).cast("long").as("id"),
-      graft.functions.text.tokens(col(textCol)).as("tk")))
-      .localCheckpoint()
+    val toks = graft.StageCut(graft.Tables.scaled(
+      df.select(col(idCol).cast("long").as("id"),
+        graft.functions.text.tokens(col(textCol)).as("tk"))), "lmCrossEntropy.toks")
     // r17 optimization round, two more rule-14 cuts below the toks one:
     // `uni` (vocab-bounded) feeds the vocab count AND the scoring join;
     // `bg` (1x corpus tokens) feeds the bigram counts AND the scoring
     // stream - each reference re-ran the interpreted bigram-struct explode.
-    val uni = toks.select(explode(col("tk")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-      .localCheckpoint()
+    val uni = graft.StageCut(toks.select(explode(col("tk")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c1")), "lmCrossEntropy.uni")
     val vocab = uni.agg(count(lit(1)).as("v"))
-    val bg = toks.filter(size(col("tk")) >= 2)
+    val bg = graft.StageCut(toks.filter(size(col("tk")) >= 2)
       .select(col("id"), explode(transform(
         sequence(lit(0), size(col("tk")) - 2),
         i => struct(i.cast("long").as("pos"),
           element_at(col("tk"), i + 1).as("w1"),
           element_at(col("tk"), i + 2).as("w2")))).as("b"))
-      .select(col("id"), col("b.pos").as("pos"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .localCheckpoint()
+      .select(col("id"), col("b.pos").as("pos"), col("b.w1").as("w1"), col("b.w2").as("w2")),
+      "lmCrossEntropy.bg")
     val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val scored = bg.join(bc, Seq("w1", "w2"))
       .join(uni.withColumnRenamed("w", "w1"), "w1")
@@ -847,25 +846,24 @@ object Corpus {
     // fans out to the count tables AND the scoring join, and the doc
     // roster reads toks again — without the stage cut the tokenizer
     // re-runs 3x per call (the r14 t51 bench regression's fixed cost)
-    val toks = graft.Tables.scaled(df.select(col(idCol).cast("long").as("id"),
-      graft.functions.text.tokens(col(textCol)).as("tk")))
-      .localCheckpoint()
-    val bg = toks.filter(size(col("tk")) >= 2)
+    val toks = graft.StageCut(graft.Tables.scaled(
+      df.select(col(idCol).cast("long").as("id"),
+        graft.functions.text.tokens(col(textCol)).as("tk"))), "kneserNeyXent.toks")
+    // rule-14 cut (r17): the bigram stream feeds the type counts AND the
+    // scoring join - two interpreted struct-explode passes without it
+    val bg = graft.StageCut(toks.filter(size(col("tk")) >= 2)
       .select(col("id"), explode(transform(
         sequence(lit(0), size(col("tk")) - 2),
         i => struct(i.cast("long").as("pos"),
           element_at(col("tk"), i + 1).as("w1"),
           element_at(col("tk"), i + 2).as("w2")))).as("b"))
       .select(col("id"), col("b.pos").as("pos"),
-        col("b.w1").as("w1"), col("b.w2").as("w2"))
-      // rule-14 cut (r17): the bigram stream feeds the type counts AND the
-      // scoring join - two interpreted struct-explode passes without it
-      .localCheckpoint()
-    val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      // rule-14 cut (r17): the TYPE table (bigram-type-bounded) feeds the
-      // forward/backward/total tables AND the scoring join - four rollup
-      // re-evaluations without it
-      .localCheckpoint()
+        col("b.w1").as("w1"), col("b.w2").as("w2")), "kneserNeyXent.bg")
+    // rule-14 cut (r17): the TYPE table (bigram-type-bounded) feeds the
+    // forward/backward/total tables AND the scoring join - four rollup
+    // re-evaluations without it
+    val bc = graft.StageCut(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")),
+      "kneserNeyXent.bc")
     // forward table: context total + distinct-continuation count, both off
     // the TYPE table (bounded), not the token stream
     val fw = bc.groupBy("w1")
@@ -908,8 +906,8 @@ object Corpus {
     * of corpus size, so the scoring joins are broadcast equi-joins on the
     * bucket key and the totals are one broadcast row. The per-doc fold is
     * doc-bounded and position-ordered (the [[lmCrossEntropy]] replay
-    * trick). The doc-level weighted table is stage-cut (localCheckpoint —
-    * the t28 convention; a real run writes stage outputs between passes)
+    * trick). The doc-level weighted table is stage-cut (the t28
+    * convention; a real run writes stage outputs between passes)
     * because THREE consumers read it (threshold, ranks, output): without
     * the cut the gram-scoring joins execute three times. Selection is
     * top-k (TakeOrderedAndProject — per-partition heads, never a global
@@ -926,8 +924,8 @@ object Corpus {
                    seed: String = "dsir"): DataFrame = {
     require(k >= 1, s"dsirResample needs k>=1 (got $k)")
     // Stage cut: the weighted table is read by three consumers below.
-    val weighted =
-      dsirWeighted(df, idCol, textCol, isTarget, buckets, seed).localCheckpoint()
+    val weighted = graft.StageCut(
+      dsirWeighted(df, idCol, textCol, isTarget, buckets, seed), "dsirResample.weighted")
     val top = weighted.select(col("id"), col("skey"))
       .orderBy(col("skey").desc, col("id")).limit(k)
     val thresh = broadcast(top.agg(min(col("skey")).as("th")))
@@ -959,16 +957,15 @@ object Corpus {
     val bgArr = transform(slice(col("tk"), lit(1), greatest(n - 1, lit(0))),
       (w, i) => struct((n + i).cast("long").as("pos"),
         concat(w, lit(" "), element_at(col("tk"), i + 2)).as("g")))
-    val grams = toks
+    // rule-14 cut (r17): the hashed gram stream feeds the two model
+    // count tables, the totals AND the scoring pass — four tokenize+md5
+    // evaluations without it; materialized rows are compact
+    // (id, bool, pos, bucket)
+    val grams = graft.StageCut(toks
       .select(col("id"), col("is_target"), explode(concat(uniArr, bgArr)).as("e"))
       .select(col("id"), col("is_target"), col("e.pos").as("pos"),
         (conv(substring(md5(col("e.g")), 1, 6), 16, 10).cast("long")
-          % buckets).as("b"))
-      // rule-14 cut (r17): the hashed gram stream feeds the two model
-      // count tables, the totals AND the scoring pass — four tokenize+md5
-      // evaluations without it; materialized rows are compact
-      // (id, bool, pos, bucket)
-      .localCheckpoint()
+          % buckets).as("b")), "dsirWeighted.grams")
     val ct = grams.filter(col("is_target")).groupBy("b").agg(count(lit(1)).as("ct"))
     val cr = grams.filter(!col("is_target")).groupBy("b").agg(count(lit(1)).as("cr"))
     val tot = grams.agg(
@@ -1753,9 +1750,8 @@ object Corpus {
     // join — three evaluations of the seed-slice tokenize + explode
     // without it. (classes × vocab)-bounded — model-sized, the t73 wt
     // convention.
-    val cnt = seed.select(col("label").as("cls"), explode(col("tk")).as("w"))
-      .groupBy("cls", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val cnt = graft.StageCut(seed.select(col("label").as("cls"), explode(col("tk")).as("w"))
+      .groupBy("cls", "w").agg(count(lit(1)).as("c")), "nbClassifier.cnt")
     val tot = cnt.groupBy("cls").agg(sum("c").as("tot"))
     val vocab = cnt.select("w").distinct().agg(count(lit(1)).as("v"))
     val prior = seed.groupBy(col("label").as("cls"))
@@ -1854,14 +1850,13 @@ object Corpus {
     // one gram-explode/hash/count pass, four consumers (class sizes,
     // centroids, scoring, the output's doc roster) — stage-cut so the
     // corpus-sized tokenize+md5 work runs once, not once per branch
-    val wt = base.select(col("id"), col("label"), col("n_grams"),
+    val wt = graft.StageCut(base.select(col("id"), col("label"), col("n_grams"),
         explode(col("gr")).as("g"))
       .withColumn("b",
         graft.functions.text.md5_prefix_long(col("g"), 1, 15) % buckets)
       .groupBy("id", "label", "n_grams", "b")
       .agg(count(lit(1)).as("c"))
-      .withColumn("w", expr("(c * 1000000) div n_grams"))
-      .localCheckpoint()
+      .withColumn("w", expr("(c * 1000000) div n_grams")), "linearClassifier.wt")
     val seed = wt.filter(col("id") % seedMod === 0)
     val rest = wt.filter(col("id") % seedMod =!= 0)
     val nc = seed.groupBy(col("label").as("cls"))
@@ -2073,8 +2068,8 @@ object Corpus {
     // (rung, gram, level) — types-sized, so the stage cut materializes the
     // survivor set, never the n-x-corpus gram stream (the t26 caution).
     // gi = Σ_g cnt ≡ count(*) per (n, level); tc unchanged.
-    val gml = grams.groupBy("n", "g", "__ml").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+    val gml = graft.StageCut(grams.groupBy("n", "g", "__ml").agg(count(lit(1)).as("cnt")),
+      "heapsGrowth.gml")
     val inst = gml.groupBy("n", "__ml").agg(sum(col("cnt")).as("gi"))
     val typ = gml.groupBy("n", "g").agg(min(col("__ml")).as("__ml"))
       .groupBy("n", "__ml").agg(count(lit(1)).as("tc"))

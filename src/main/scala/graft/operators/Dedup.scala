@@ -322,13 +322,11 @@ object Dedup {
           concat(lit("cnt:"), col("g")), 1, 15).as("h")), "containment.hh")
     val sz = hh.groupBy("id").agg(count(lit(1)).as("n_small"))
     val dfc = hh.groupBy("h").agg(count(lit(1)).as("df"))
-    val rare = hh.join(dfc.filter(col("df") <= dfCap), Seq("h"))
-      .select("id", "h")
-      .localCheckpoint()
-    val samp = rare
+    val rare = graft.StageCut(hh.join(dfc.filter(col("df") <= dfCap), Seq("h"))
+      .select("id", "h"), "containment.rare")
+    val samp = graft.StageCut(rare
       .withColumn("rk", row_number().over(Window.partitionBy("id").orderBy("h")))
-      .filter(col("rk") <= sampleM).select("id", "h")
-      .localCheckpoint()
+      .filter(col("rk") <= sampleM).select("id", "h"), "containment.samp")
     val sampSz = samp.groupBy("id").agg(count(lit(1)).as("m_sz"))
     val cand = samp.select(col("id").as("small_id"), col("h"))
       .join(rare.select(col("id").as("big_id"), col("h")), Seq("h"))
@@ -509,8 +507,8 @@ object Dedup {
     *
     * Scale design (iterative path): each round is one equi-join (labels by
     * node id) + one hash-groupBy min — never materializing pair-pairs — and
-    * the label frontier is `localCheckpoint`ed every round so the iterative
-    * lineage stays O(1) (on a cluster, a reliable checkpoint dir makes that
+    * the label frontier is stage-cut every round so the iterative
+    * lineage stays O(1) (on a cluster, `stageCut.mode=reliable` makes that
     * fault-tolerant; the convergence count is a cheap job on the
     * checkpointed frame). Driver holds only loop state, never rows. */
   def connectedComponents(edges: DataFrame, idA: String = "id_a",
@@ -616,7 +614,7 @@ object Dedup {
       .toDF("id", "component")
     // materialize BEFORE dropping the pair cache, or the checkpoint job
     // would re-run the (possibly expensive) upstream edge pipeline
-    val materialized = out.localCheckpoint()
+    val materialized = graft.StageCut(out, "componentsSingleTask.out")
     pairs.unpersist()
     materialized
   }
@@ -648,12 +646,12 @@ object Dedup {
       // Hash-to-min pointer jump through the round's NEW tentative map:
       // path-halving on the current pointers (the parent side re-runs the
       // stepped DAG — cheap — instead of materializing it twice).
-      val next = stepped
+      val next = graft.StageCut(stepped
         .join(stepped.select(col("id").as("step"), col("step").as("parent")),
           Seq("step"), "left")
         .select(col("id"), col("__old"),
-          least(col("step"), coalesce(col("parent"), col("step"))).as("component"))
-        .localCheckpoint()
+          least(col("step"), coalesce(col("parent"), col("step"))).as("component")),
+        "componentsIterative.next")
       val changed = next.filter(col("component") =!= col("__old")).count()
       labels = next.select("id", "component")
       converged = changed == 0
@@ -924,21 +922,19 @@ object Dedup {
     * index)` and `delta == paragraphIndexDelta(shard, index)` (the
     * anti-join by `h` commutes with the per-`h` min-struct ownership, so
     * ownership-of-novel ≡ ownership-anti-index; gated by
-    * StreamingParagraphDedupSpec). `materialize` is applied to the shared
-    * ownership frame before fan-out — a streaming caller passes
-    * `_.localCheckpoint()` so the novel-paragraph scan runs ONCE per
-    * micro-batch instead of once per consumer (the delta is
-    * batch-novelty-sized, so this is cheap to pin; the [[paragraphIndex]]
-    * state table stays disk/lineage-resident, never executor memory). */
+    * StreamingParagraphDedupSpec). The shared ownership frame is stage-cut
+    * before fan-out, so the novel-paragraph scan runs ONCE per micro-batch
+    * instead of once per consumer (the delta is batch-novelty-sized, so
+    * this is cheap to pin; the [[paragraphIndex]] state table stays
+    * disk/lineage-resident, never executor memory). */
   def paragraphShardStep(shard: DataFrame, index: DataFrame,
                          idCol: String, textCol: String,
-                         paras: Column => Column, sep: String = " ",
-                         materialize: DataFrame => DataFrame = identity)
+                         paras: Column => Column, sep: String = " ")
       : (DataFrame, DataFrame) = {
     val base = paraBase(shard, idCol, textCol, paras)
     val exploded = paraExplode(base)
     val novel = exploded.join(index.select("h"), Seq("h"), "left_anti")
-    val own = materialize(paraOwnership(novel))
+    val own = graft.StageCut(paraOwnership(novel), "paragraphShardStep.own")
     val deduped = assembleSurvivors(base, exploded.join(own, "h")
       .filter(col("id") === col("oid") && col("idx") === col("oidx")), sep)
     (deduped, own)
@@ -994,17 +990,16 @@ object Dedup {
     // corpus — and the pair join reads it twice; `shingles` (distinct
     // group-shingle hashes, the overlap index a scale run materializes)
     // feeds the sizes rollup AND both sides of the intersection self-join.
-    val gsig = sigs.select(col("grp"), posexplode(col("sig")).as(Seq("pos", "v")))
+    val gsig = graft.StageCut(
+      sigs.select(col("grp"), posexplode(col("sig")).as(Seq("pos", "v")))
       .groupBy("grp", "pos").agg(min("v").as("v"))
       .groupBy("grp").agg(
         transform(array_sort(collect_list(struct(col("pos"), col("v")))),
-          s => s.getField("v")).as("sig"))
-      .localCheckpoint()
-    val shingles = base.select(col("grp"), explode(expr(
+          s => s.getField("v")).as("sig")), "corpusOverlap.gsig")
+    val shingles = graft.StageCut(base.select(col("grp"), explode(expr(
         s"transform(sequence(1, length(norm) - ${shingleSize - 1}), " +
           s"i -> substring(norm, i, $shingleSize))")).as("sh"))
-      .select(col("grp"), md5(col("sh")).as("h")).distinct()
-      .localCheckpoint()
+      .select(col("grp"), md5(col("sh")).as("h")).distinct(), "corpusOverlap.shingles")
     val sizes = shingles.groupBy("grp").agg(count(lit(1)).as("n"))
     val inter = shingles.as("x").join(shingles.as("y"),
         col("x.h") === col("y.h") && col("x.grp") < col("y.grp"))

@@ -579,13 +579,14 @@ object Evals {
                         catCol: String): DataFrame = {
     val spark = labels.sparkSession
     import spark.implicits._
-    val ic = labels
+    // three consumers: per-item, marginals, sizes
+    val ic = graft.StageCut(labels
       .groupBy(col(itemCol).as("__it"), col(catCol).cast("long").as("category"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // three consumers: per-item, marginals, sizes
+      .agg(count(lit(1)).as("c")), "krippendorffAlpha.ic")
     val perItem = ic.groupBy("__it")
       .agg(sum(col("c")).as("n"), sum(expr("c * c")).as("q"))
-    val pairable = perItem.filter(col("n") >= 2).localCheckpoint()
+    val pairable = graft.StageCut(perItem.filter(col("n") >= 2),
+      "krippendorffAlpha.pairable")
     val nDropped = perItem.filter(col("n") < 2).count()
     val groups = pairable.groupBy("n")
       .agg(count(lit(1)).as("cnt"), sum(col("q")).as("sq"))

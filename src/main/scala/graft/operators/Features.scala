@@ -413,10 +413,9 @@ object Features {
     // feeds the denominator rollup AND both sides of the lag self-join —
     // three evaluations of the upstream series (for e25 that includes a
     // per-key rank window) without it. Series-sized (k, t, d) rows.
-    val dev = r.join(broadcast(stats), "k")
+    val dev = graft.StageCut(r.join(broadcast(stats), "k")
       .select(col("k"), col("t"),
-        (col("n").cast("decimal(38,0)") * col("x") - col("s")).as("d"))
-      .localCheckpoint()
+        (col("n").cast("decimal(38,0)") * col("x") - col("s")).as("d")), "acfReport.dev")
     val den = dev.groupBy("k")
       .agg(sum(col("d") * col("d")).as("den"), count(lit(1)).as("n"))
     val pairs = dev
@@ -527,8 +526,9 @@ object Features {
     * groupBy over the grid. No windows, no iteration, no driver state. */
   def mannKendall(df: DataFrame, keyCol: String, tsCol: String,
                   valueCol: String): DataFrame = {
-    val g = dailyGrid(df, keyCol, tsCol, valueCol, "mannKendall")
-      .localCheckpoint() // (keys × days)-bounded; three consumers
+    // (keys × days)-bounded; three consumers
+    val g = graft.StageCut(dailyGrid(df, keyCol, tsCol, valueCol, "mannKendall"),
+      "mannKendall.g")
     val pairs = g.select(col("__k"), col("di"), col("x"))
       .join(g.select(col("__k"), col("di").as("dj"), col("x").as("xj")),
         Seq("__k"))
@@ -592,24 +592,24 @@ object Features {
     * discipline: n ≤ 10¹⁰ keeps every intermediate exact).
     *
     * 100 TB shape: ONE map-side-combined groupBy into ≤10 cells; the
-    * ≤10-row counts frame is localCheckpoint()ed for its two consumers
+    * ≤10-row counts frame is stage-cut for its two consumers
     * (totals + per-digit join). */
   def benfordReport(values: DataFrame, valCol: String): DataFrame = {
     Guards.requireIntegral(values, valCol, "benfordReport")
     val spark = values.sparkSession
     import spark.implicits._
-    val counts = values.select(col(valCol).cast("long").as("x"))
+    val counts = graft.StageCut(values.select(col(valCol).cast("long").as("x"))
       .select(when(col("x") >= 1L,
         substring(col("x").cast("string"), 1, 1).cast("int"))
         .otherwise(0).as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("o"))
-      .localCheckpoint()
+      .groupBy("digit").agg(count(lit(1)).as("o")), "benfordReport.counts")
     val tot = counts.agg(
       sum(when(col("digit") > 0, col("o")).otherwise(0L)).as("__n"),
       sum(when(col("digit") === 0, col("o")).otherwise(0L)).as("n_skipped"))
     val digits = BenfordPpm.zipWithIndex
       .map { case (e, i) => (i + 1, e) }.toDF("digit", "expected_ppm")
-    val per = digits
+    // two consumers: the χ² total and the output rows
+    val per = graft.StageCut(digits
       .join(counts.filter(col("digit") > 0), Seq("digit"), "left")
       .select(col("digit"), coalesce(col("o"), lit(0L)).as("observed"),
         col("expected_ppm"))
@@ -627,8 +627,8 @@ object Features {
           "cast(n as decimal(38,0)) * expected_ppm) * " +
           "(cast(observed as decimal(38,0)) * 1000000 - " +
           "cast(n as decimal(38,0)) * expected_ppm)) " +
-          "div (cast(n as decimal(38,0)) * expected_ppm) as long)"))
-      .localCheckpoint() // two consumers: the χ² total and the output rows
+          "div (cast(n as decimal(38,0)) * expected_ppm) as long)")),
+      "benfordReport.per")
     val chi = per.agg(sum(col("contrib_micro")).as("chi2_micro"))
     per.crossJoin(broadcast(chi))
       .select(col("digit"), col("observed"), col("observed_ppm"),
@@ -682,14 +682,14 @@ object Features {
     def cells(df: DataFrame, name: String): DataFrame = df
       .select(col(catCol).cast("string").as("cat"))
       .groupBy("cat").agg(count(lit(1)).as(name))
-    val joined = cells(ref, "a").join(cells(cur, "b"), Seq("cat"), "full_outer")
+    // cells-bounded, three downstream consumers (tot's agg, the terms
+    // fold, and tot again via the final crossJoin): checkpoint so each
+    // window's corpus-sized groupBy runs ONCE (the benfordReport
+    // two-consumer discipline; without it the scan re-executes ~3x)
+    val joined = graft.StageCut(cells(ref, "a").join(cells(cur, "b"), Seq("cat"),
+      "full_outer")
       .select(col("cat"), coalesce(col("a"), lit(0L)).as("a"),
-        coalesce(col("b"), lit(0L)).as("b"))
-      // cells-bounded, three downstream consumers (tot's agg, the terms
-      // fold, and tot again via the final crossJoin): checkpoint so each
-      // window's corpus-sized groupBy runs ONCE (the benfordReport
-      // two-consumer discipline; without it the scan re-executes ~3x)
-      .localCheckpoint()
+        coalesce(col("b"), lit(0L)).as("b")), "chi2Report.joined")
     val tot = joined.agg(sum("a").as("__rt"), sum("b").as("__ct"),
       sum(when(col("a") > 0, 1L).otherwise(0L)).as("__kref"),
       sum(when(col("a") === 0L, 1L).otherwise(0L)).as("__knew"),

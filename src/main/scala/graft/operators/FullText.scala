@@ -562,11 +562,11 @@ object FullText {
     // the |C| sum, and the tf groupBy below are three cheap jobs over one
     // materialization instead of three corpus re-tokenizations (the t62
     // lineage lesson).
-    val perDoc = docs.select(col(idCol).as("doc_id"),
+    val perDoc = graft.StageCut(docs.select(col(idCol).as("doc_id"),
         text.tokens(col(textCol)).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        filter(col("tk"), t => t.isInCollection(terms)).as("hit_tk"))
-      .localCheckpoint()
+        filter(col("tk"), t => t.isInCollection(terms)).as("hit_tk")),
+      "qlDirichlet.perDoc")
     val lens = perDoc.select(col("doc_id"), col("dl"))
     val spark = docs.sparkSession
     import spark.implicits._
@@ -630,7 +630,7 @@ object FullText {
     * looks corpus-sized — the per-doc term histogram — never leaves the
     * row); the only corpus-sized exchange is n2's hit-only explode
     * groupBy. df/idf/query-norm come from a second LEAN tokenize pass
-    * (no norm fold) whose ≤|Q|-row result is localCheckpoint()ed and
+    * (no norm fold) whose ≤|Q|-row result is stage-cut and
     * consumed by both the broadcast scoring join and the query-norm
     * aggregate (the n14 lineage discipline — the alternative df window
     * over the hit table would leave the query norm re-executing the
@@ -661,11 +661,10 @@ object FullText {
       .groupBy("doc_id", "norm_d", "term").agg(count(lit(1)).as("tf")),
       "tfidfVsm.tf")
     val global = toks.agg(count(lit(1)).as("n_docs"))
-    val dfT = tf
+    val dfT = graft.StageCut(tf
       .groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(global))
-      .withColumn("wq", log(col("n_docs").cast("double") / col("df")))
-      .localCheckpoint()
+      .withColumn("wq", log(col("n_docs").cast("double") / col("df"))), "tfidfVsm.dfT")
     val qNorm = dfT
       .agg(coalesce(sqrt(aggregate(
         sort_array(collect_list(struct(col("term").as("t"),

@@ -153,11 +153,11 @@ object Layout {
     Guards.requireIntegral(files, sizeCol, "compactionPlan")
     val f = files.select(col(partCol).as("part"), col(fileCol).as("file_id"),
       col(sizeCol).cast("long").as("bytes"))
-    val packed = Corpus.packFfd(f.filter(col("bytes") < smallBytes),
+    // two consumers (rollup + plan rows); group-sized
+    val packed = graft.StageCut(Corpus.packFfd(f.filter(col("bytes") < smallBytes),
         "file_id", "part", col("bytes"), targetBytes)
       .select(col("shard").as("part"), col("id").as("file_id"),
-        col("len").as("bytes"), col("bin").as("grp"))
-      .localCheckpoint() // two consumers (rollup + plan rows); group-sized
+        col("len").as("bytes"), col("bin").as("grp")), "compactionPlan.packed")
     val groups = packed.groupBy("part", "grp")
       .agg(count(lit(1)).as("group_files"), sum(col("bytes")).as("group_bytes"))
     val planned = packed.join(groups, Seq("part", "grp"))

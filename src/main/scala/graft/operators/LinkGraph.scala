@@ -39,14 +39,14 @@ import org.apache.spark.storage.StorageLevel
   * (ranks ⋈ edges on src — both sides hash-partitioned on the join key, and
   * AQE handles hot-host skew) + ONE map-side-combined groupBy(dst) over the
   * contribution stream + a broadcast of the one-row dangling aggregate. The
-  * rank state is localCheckpoint()ed each iteration: the update references
+  * rank state is stage-cut each iteration: the update references
   * the previous ranks three times (contributions, dangling mass, node
   * frame), so an unmaterialized lineage would recompute the chain 3^iters
   * times; truncation also keeps the plan O(1) per iteration instead of
-  * growing by three joins every pass. On a real cluster prefer
-  * `spark.sparkContext.setCheckpointDir` + `.checkpoint()` for
-  * executor-loss tolerance — localCheckpoint stores blocks on executors
-  * (documented trade, same as [[ClusterQueries]]' assignment pin).
+  * growing by three joins every pass. On a real cluster run with
+  * `spark.graft.stageCut.mode=reliable` (or `disk`) for executor-loss
+  * tolerance — the default `local` cut stores blocks on executors (the
+  * [[graft.StageCut]] trade).
   *
   * Driver-side state: the node count N (one long) — same bounded contract
   * as Clustering's k centroids. Everything else stays distributed.
@@ -172,12 +172,9 @@ object LinkGraph {
     require(n > 0, "pageRank: empty graph")
     // (1-d)/N and the uniform start, precomputed exactly in longs.
     val base = ((100L - dampingPct) * scale / 100L) / n
-    var ranks = deg.withColumn("rank", lit(scale / n)).localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val prev = ranks
-      ranks = step(ranks, e, n, base, dampingPct).localCheckpoint()
-      prev.unpersist()
-    }
+    var ranks = graft.StageCut(deg.withColumn("rank", lit(scale / n)), "pageRank.ranks")
+    for (_ <- 1 to iterations)
+      ranks = graft.StageCut(step(ranks, e, n, base, dampingPct), "pageRank.ranks")
     e.unpersist()
     ranks
   }
@@ -239,7 +236,7 @@ object LinkGraph {
     * (h ⋈ edges on src, groupBy dst; a ⋈ edges on dst, groupBy src — both
     * map-side-combined), two one-row total broadcasts, and node-sized
     * re-joins against the node frame (|V| ≪ |E| rows); state
-    * localCheckpoint()ed (same lineage argument as pageRank's). */
+    * stage-cut (same lineage argument as pageRank's). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, scale: Long = 1000000000000L,
            driverEdgeCap: Int = 100000): DataFrame = {
@@ -316,8 +313,8 @@ object LinkGraph {
           coalesce(idiv(col("__s").cast("decimal(38,0)") * lit(scale),
             col("__t")), lit(0L)).cast("long").as(outCol))
     }
-    var state = nodes.select(col("node"), lit(scale / n).as("hub"),
-      lit(scale / n).as("auth")).localCheckpoint()
+    var state = graft.StageCut(nodes.select(col("node"), lit(scale / n).as("hub"),
+      lit(scale / n).as("auth")), "hits.state")
     for (_ <- 1 to iterations) {
       val prev = state
       val auth = normalize(
@@ -328,11 +325,9 @@ object LinkGraph {
         auth.join(e, auth("node") === e("dst"))
           .groupBy(col("src")).agg(sum(col("auth")).as("__s")),
         "src", "hub")
-      state = auth.join(hub.withColumnRenamed("node", "__hn"),
+      state = graft.StageCut(auth.join(hub.withColumnRenamed("node", "__hn"),
           col("node") === col("__hn"))
-        .select(col("node"), col("hub"), col("auth"))
-        .localCheckpoint()
-      prev.unpersist()
+        .select(col("node"), col("hub"), col("auth")), "hits.state")
     }
     e.unpersist(); nodes.unpersist()
     state.select(col("node"), col("auth"), col("hub"))
@@ -364,7 +359,7 @@ object LinkGraph {
     * by integer/string exactness; past the cap, the distributed loop
     * runs per round ONE labels equi-join + one (node, label) count
     * groupBy + one per-node argmin of struct(−count, label) — all
-    * map-side-combinable, nothing holistic, localCheckpoint per round
+    * map-side-combinable, nothing holistic, a stage cut per round
     * (the gr1 discipline). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int = 5,
@@ -410,18 +405,16 @@ object LinkGraph {
         .toDF("node", "label", "csize")
     } else {
       val e = und.persist(StorageLevel.MEMORY_AND_DISK)
-      var labels = e.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node")).localCheckpoint()
+      var labels = graft.StageCut(e.select(col("a").as("node")).distinct()
+        .withColumn("label", col("node")), "labelPropagation.labels")
       for (_ <- 1 to iterations) {
         val prev = labels
         val counts = e.join(prev.withColumnRenamed("node", "b"), "b")
           .groupBy(col("a"), col("label")).agg(count(lit(1)).as("c"))
-        labels = counts.groupBy(col("a").as("node"))
+        labels = graft.StageCut(counts.groupBy(col("a").as("node"))
           .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
             .as("m"))
-          .select(col("node"), col("m.l").as("label"))
-          .localCheckpoint()
-        prev.unpersist()
+          .select(col("node"), col("m.l").as("label")), "labelPropagation.labels")
       }
       e.unpersist()
       val sizes = labels.groupBy("label").agg(count(lit(1)).as("csize"))
@@ -461,18 +454,18 @@ object LinkGraph {
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val simple = widenedEdges(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst")).distinct()
-    val und = simple
+    val und = graft.StageCut(simple
       .union(simple.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint() // consumed by deg, wedges, and output
+      .distinct(), "triangles.und") // consumed by deg, wedges, and output
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     // (degree, node) total order: orient each undirected edge low -> high.
-    val ord = und
+    // consumed by the wedge self-join AND the probe
+    val ord = graft.StageCut(und
       .join(deg.select(col("node").as("src"), col("deg").as("dsrc")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("ddst")), "dst")
       .filter(col("dsrc") < col("ddst") ||
         (col("dsrc") === col("ddst") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("ddst"))
-      .localCheckpoint() // consumed by the wedge self-join AND the probe
+      .select(col("src"), col("dst"), col("ddst")), "triangles.ord")
     // Wedges through the low corner: (v, w) with v before w in the order.
     val wedges = ord.select(col("src"), col("dst").as("v"), col("ddst").as("dv"))
       .join(ord.select(col("src"), col("dst").as("w"), col("ddst").as("dw")),
@@ -532,9 +525,9 @@ object LinkGraph {
     require(scale >= 1L, s"linkPredict needs scale >= 1 (got $scale)")
     val simple = widenedEdges(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst")).distinct()
-    val und = simple
+    val und = graft.StageCut(simple
       .union(simple.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint() // consumed by deg, wedges, anti-join
+      .distinct(), "linkPredict.und") // consumed by deg, wedges, anti-join
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val centers = deg.filter(col("deg") <= maxCenterDegree)
     // adjacency rows (center u, neighbor x) with the center's RA term.
@@ -577,8 +570,8 @@ object LinkGraph {
     * + a one-row count aggregate — no windows, no iteration. */
   def reciprocity(edges: DataFrame, srcCol: String,
                   dstCol: String): DataFrame = {
-    val simple = widenedEdges(edges, srcCol, dstCol)
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val simple = graft.StageCut(widenedEdges(edges, srcCol, dstCol)
+      .filter(col("src") =!= col("dst")).distinct(), "reciprocity.simple")
     val recip = simple.join(
       simple.select(col("dst").as("src"), col("src").as("dst")),
       Seq("src", "dst"), "left_semi")
@@ -607,7 +600,7 @@ object LinkGraph {
     *
     * 100 TB shape: per round ONE frontier semi-join against the edge
     * set + one anti-join against the settled set, both equi-key; the
-    * settled/frontier frames are localCheckpoint()ed per round (the
+    * settled/frontier frames are stage-cut per round (the
     * kcore discipline); rounds = eccentricity of the seed set (log-like
     * on web graphs — shortcut edges halve tree depth); driver holds
     * per-round counts only (rule 17). `maxRounds` is a loud runaway
@@ -616,29 +609,27 @@ object LinkGraph {
                    seeds: DataFrame, seedCol: String,
                    maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"seedDistance needs maxRounds >= 1 (got $maxRounds)")
-    val e = widenedEdges(edges, srcCol, dstCol)
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    val e = graft.StageCut(widenedEdges(edges, srcCol, dstCol)
+      .filter(col("src") =!= col("dst")).distinct(), "seedDistance.e")
+    val nodes = graft.StageCut(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), "seedDistance.nodes")
     val nodeType = nodes.schema.head.dataType
-    var settled = nodes
+    var settled = graft.StageCut(nodes
       .join(seeds.select(col(seedCol).cast(nodeType).as("node")).distinct(),
         Seq("node"), "left_semi")
-      .withColumn("dist", lit(0L)).localCheckpoint()
+      .withColumn("dist", lit(0L)), "seedDistance.settled")
     var frontier = settled.select("node")
     var round = 1
     while (!frontier.isEmpty) {
       require(round <= maxRounds,
         s"seedDistance did not settle within $maxRounds rounds - the " +
           "seed eccentricity exceeds the guard; raise maxRounds deliberately")
-      val next = e
+      val next = graft.StageCut(e
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .select(col("dst").as("node")).distinct()
-        .join(settled.select("node"), Seq("node"), "left_anti")
-        .localCheckpoint()
-      settled = settled
-        .unionByName(next.withColumn("dist", lit(round.toLong)))
-        .localCheckpoint()
+        .join(settled.select("node"), Seq("node"), "left_anti"), "seedDistance.next")
+      settled = graft.StageCut(settled
+        .unionByName(next.withColumn("dist", lit(round.toLong))), "seedDistance.settled")
       frontier = next
       round += 1
     }
@@ -779,18 +770,16 @@ object LinkGraph {
         coalesce(col("__s"), lit(false)).as("in_seed"))
     val nS = seedSet.size.toLong
     val baseSeed = ((100L - dampingPct) * scale / 100L) / nS
-    var ranks = deg.withColumn("rank",
-      when(col("in_seed"), lit(scale / nS)).otherwise(lit(0L)))
-      .localCheckpoint()
+    var ranks = graft.StageCut(deg.withColumn("rank",
+      when(col("in_seed"), lit(scale / nS)).otherwise(lit(0L))), "ppr.ranks")
     for (_ <- 1 to iterations) {
-      val prev = ranks
       val contribs = ranks.where(col("outdeg") > 0)
         .join(e, ranks("node") === e("src"))
         .groupBy(col("dst"))
         .agg(sum(idiv(col("rank"), col("outdeg"))).as("__c"))
       val dangling = ranks.agg(coalesce(sum(
         when(col("outdeg") === 0, col("rank"))), lit(0L)).as("__dang"))
-      ranks = ranks.select(col("node"), col("outdeg"), col("in_seed"))
+      ranks = graft.StageCut(ranks.select(col("node"), col("outdeg"), col("in_seed"))
         .join(contribs, col("node") === col("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("node"), col("outdeg"), col("in_seed"),
@@ -799,9 +788,7 @@ object LinkGraph {
               (coalesce(col("__c"), lit(0L)) +
                 when(col("in_seed"), idiv(col("__dang"), lit(nS)))
                   .otherwise(lit(0L))),
-              lit(100L))).as("rank"))
-        .localCheckpoint()
-      prev.unpersist()
+              lit(100L))).as("rank")), "ppr.ranks")
     }
     e.unpersist()
     ranks
@@ -839,9 +826,9 @@ object LinkGraph {
                     dstCol: String): DataFrame = {
     val simple = widenedEdges(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst")).distinct()
-    val und = simple
+    val und = graft.StageCut(simple
       .union(simple.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint() // consumed by deg and the moment join
+      .distinct(), "assortativity.und") // consumed by deg and the moment join
     val deg = und.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val xy = und
       .join(deg.select(col("node").as("src"), col("deg").as("x")), "src")
@@ -931,10 +918,11 @@ object LinkGraph {
     require(maxRounds >= 1, s"kcore needs maxRounds >= 1 (got $maxRounds)")
     val simple = widenedEdges(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst")).distinct()
-    val und = simple
+    val und = graft.StageCut(simple
       .union(simple.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
-    var nodes = und.select(col("src").as("node")).distinct().localCheckpoint()
+      .distinct(), "kcore.und")
+    var nodes = graft.StageCut(und.select(col("src").as("node")).distinct(),
+      "kcore.nodes")
     var cur = und
     var peeled = Vector.empty[DataFrame]
     var round = 1
@@ -955,20 +943,19 @@ object LinkGraph {
       // no join): every survivor appears in the union with weight 0, so
       // zero-degree nodes emerge with __d = 0 — value-identical to the
       // left join + coalesce, and cur's src ⊆ nodes by the semi-joins.
-      val deg = cur.select(col("src").as("node"), lit(1L).as("__w"))
+      val deg = graft.StageCut(cur.select(col("src").as("node"), lit(1L).as("__w"))
         .union(nodes.select(col("node"), lit(0L).as("__w")))
-        .groupBy("node").agg(sum(col("__w")).as("__d"))
-        .localCheckpoint(false)
+        .groupBy("node").agg(sum(col("__w")).as("__d")), "kcore.deg", eager = false)
       val drop = deg.filter(col("__d") < k)
         .select(col("node"), lit(round.toLong).as("peel_round"))
       if (drop.count() == 0L) done = true
       else {
         peeled :+= drop
         nodes = deg.filter(col("__d") >= k).select("node")
-        cur = cur
+        cur = graft.StageCut(cur
           .join(nodes.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-          .localCheckpoint(false)
+          .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"),
+          "kcore.cur", eager = false)
         round += 1
       }
     }

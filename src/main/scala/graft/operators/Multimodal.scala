@@ -351,7 +351,7 @@ object Multimodal {
     // BOTH join sides re-decode every pixel of the corpus (two
     // MapPartitions branches in the executed plan — measured)
     val blocked = blockKeys(
-      imageDHashes(images, idCol, bytesCol).localCheckpoint())
+      graft.StageCut(imageDHashes(images, idCol, bytesCol), "imageNearDups.hashes"))
     val a = blocked.as("a"); val b = blocked.as("b")
     a.join(b, col("a.block_idx") === col("b.block_idx") &&
         col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
@@ -418,12 +418,11 @@ object Multimodal {
       .partitionBy("vid").orderBy("ts")
     // signature table: one decode of the corpus, four consumers (counts,
     // the two block-join sides, the two verify sides) — stage-cut
-    val sig = hashed
+    val sig = graft.StageCut(hashed
       .withColumn("rank", row_number().over(w))
       .withColumn("n_frames",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("vid")))
-      .localCheckpoint()
+          .partitionBy("vid"))), "videoNearDups.sig")
     val rankBlk = sig
       .select(col("vid"), col("n_frames"), col("rank"), col("dhash"),
         explode(sequence(lit(0), lit(3))).as("block_idx"))

@@ -63,9 +63,8 @@ object Sketches {
     // owns >= 1 register, so the sets are identical): the input stream is
     // now scanned exactly twice — once hashed into registers, once for the
     // exact twin — instead of three times.
-    val regMax = hashed.groupBy("col_name", "reg")
-      .agg(max(col("rho")).as("mj"))
-      .localCheckpoint()
+    val regMax = graft.StageCut(hashed.groupBy("col_name", "reg")
+      .agg(max(col("rho")).as("mj")), "hllCardinality.regMax")
     val spark = keyed.sparkSession
     import spark.implicits._
     val grid = regMax.select("col_name").distinct()
@@ -169,11 +168,10 @@ object Sketches {
     // the r17 `before` plan). The sketch is ≤ k rows per corpus — exactly
     // the bounded state the KMV law exists to give you, so materializing
     // it is free at any corpus size.
-    val sk = dh
+    val sk = graft.StageCut(dh
       .withColumn("r1", row_number().over(lvl1)).filter(col("r1") <= k)
       .withColumn("rk", row_number().over(lvl2)).filter(col("rk") <= k)
-      .select("corpus", "h")
-      .localCheckpoint()
+      .select("corpus", "h"), "kmvOverlap.sk")
     val per = sk.groupBy("corpus")
       .agg(count(lit(1)).as("sk_n"), max("h").as("kth"))
       .withColumn("est", estOf("sk_n", "kth"))
@@ -200,9 +198,8 @@ object Sketches {
     // the intersection self-join — three evaluations of the distinct
     // rollup without it. Distinct (corpus, key) is the survivor-sized
     // output a real run materializes before a self-join anyway.
-    val dk = src.groupBy("corpus", "key").agg(count(lit(1)).as("__c"))
-      .drop("__c")
-      .localCheckpoint()
+    val dk = graft.StageCut(src.groupBy("corpus", "key").agg(count(lit(1)).as("__c"))
+      .drop("__c"), "kmvOverlap.dk")
     val exact = dk.groupBy("corpus").agg(count(lit(1)).as("n_exact"))
     val exInter = pairs
       .join(dk.select(col("corpus").as("__ca"), col("key")),

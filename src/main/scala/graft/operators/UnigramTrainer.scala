@@ -55,15 +55,14 @@ object UnigramTrainer {
     import spark.implicits._
 
     // 1. corpus word table — the one corpus-sized exchange (rule 7: fan the
-    // scan out first; tokenize+explode is per-row work). localCheckpoint:
+    // scan out first; tokenize+explode is per-row work). Stage cut:
     // three downstream jobs (seed collect, usage count, final join) would
     // otherwise each re-run the corpus tokenize; the table itself is
     // vocabulary-bounded, so materializing it is free.
-    val words = graft.Tables.scaled(df)
+    val words = graft.StageCut(graft.Tables.scaled(df)
       .select(explode(graft.functions.text.tokens(col(textCol))).as("word"))
       .where(length(col("word")) <= maxWordLen)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .groupBy("word").agg(count(lit(1)).as("freq")), "unigramTrain.words")
 
     // 2. positional-multiplicity substring seeding over the bounded table
     val subs = words

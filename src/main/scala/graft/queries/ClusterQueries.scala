@@ -159,7 +159,7 @@ object ClusterQueries {
     // Materialize the assignment once: k2's self-join and the final project
     // would otherwise re-run the O(k·dim) argmin scan per reference. Same
     // pattern as Dedup's eval-ngram checkpoint.
-    Clustering.assign(e, "embedding", model).localCheckpoint()
+    graft.StageCut(Clustering.assign(e, "embedding", model), "clusterQueries.fitted")
   }
 
   /** Final Lloyd assignment: (vec_id, cluster_id, squared distance). */

@@ -412,7 +412,7 @@ object CorpusQueries {
       docs.withColumn("key_text", substring(col("text"), 1, 60)),
       "doc_id", "key_text")
       .select(col("keep_id").as("doc_id"))
-    val kept = docs.join(keep, "doc_id").localCheckpoint()
+    val kept = graft.StageCut(docs.join(keep, "doc_id"), "pretrainE2e.kept")
     val oov = Corpus.oovRate(kept, "doc_id", "text", vocabK = 16)
     val good = kept.join(
       oov.filter(col("oov_bp") <= OovMax).select(col("id").as("doc_id")),
@@ -483,10 +483,11 @@ object CorpusQueries {
     // the dedup+metrics chain executes up to 4x. A real 100 TB curation run
     // writes stage outputs between passes for exactly this reason — the
     // checkpoint is the in-process analog.
-    val deduped = docs.join(keepIds, "doc_id").localCheckpoint()
+    val deduped = graft.StageCut(docs.join(keepIds, "doc_id"), "curationE2e.deduped")
     val qualityIds = Corpus.repetitionMetrics(deduped, "doc_id", "text")
       .filter(col("keep")).select(col("id").as("doc_id"))
-    val quality = deduped.join(qualityIds, "doc_id").localCheckpoint()
+    val quality = graft.StageCut(deduped.join(qualityIds, "doc_id"),
+      "curationE2e.quality")
     val mixed = Corpus.temperatureMix(quality, "doc_id", "lang", targetTotal = 150)
       .filter(col("kept"))
     Corpus.packSequences(mixed, "doc_id", "source",
@@ -789,12 +790,10 @@ object CorpusQueries {
     val docs = Tables.documents(spark, dir).withColumn("ctext",
       when(pmod(col("doc_id"), lit(5)) === 0, concat(lit(MojiBad), col("text")))
         .otherwise(col("text")))
-    val rep = graft.operators.TextRepair.fixMojibake(docs, "ctext")
-      .select(col("doc_id"), col("repaired"), col("n_fixed"))
-      .localCheckpoint()
-    val oov = Corpus.oovRate(rep, "doc_id", "repaired", vocabK = 16)
-      .select(col("id").as("doc_id"), col("oov_bp"))
-      .localCheckpoint()
+    val rep = graft.StageCut(graft.operators.TextRepair.fixMojibake(docs, "ctext")
+      .select(col("doc_id"), col("repaired"), col("n_fixed")), "curationV2.rep")
+    val oov = graft.StageCut(Corpus.oovRate(rep, "doc_id", "repaired", vocabK = 16)
+      .select(col("id").as("doc_id"), col("oov_bp")), "curationV2.oov")
     val surv = rep.join(
       oov.where(col("oov_bp") <= OovMax).select("doc_id"), "doc_id")
     val dup = graft.operators.Winnow.matchPairs(surv, "doc_id", "repaired",

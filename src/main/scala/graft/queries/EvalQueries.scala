@@ -60,16 +60,15 @@ object EvalQueries {
     * from the corpus text, so the wrong-sf control flips naturally. */
   def erF1Q(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pos = Tables.documents(spark, dir)
+    // stage cut (rule 14): every gold/pred/relation table derives from
+    // this <= 24-rows-per-doc position grid, and the report joins them
+    // repeatedly — without the cut each reference re-ran the tokenize
+    val pos = graft.StageCut(Tables.documents(spark, dir)
       .select(col("doc_id"),
         text.token_count(col("text")).cast("long").as("n"))
       .filter(col("n") > 0)
       .select(col("doc_id"),
-        explode(sequence(lit(0L), least(col("n"), lit(24L)) - 1)).as("p"))
-      // stage cut (rule 14): every gold/pred/relation table derives from
-      // this <= 24-rows-per-doc position grid, and the report joins them
-      // repeatedly — without the cut each reference re-ran the tokenize
-      .localCheckpoint()
+        explode(sequence(lit(0L), least(col("n"), lit(24L)) - 1)).as("p")), "erF1Q.pos")
     val gold = pos.filter((col("doc_id") + col("p")) % 5 === 0)
       .select(col("doc_id"), col("p").as("s"), col("p").as("e"),
         concat(lit("T"), ((col("doc_id") + col("p")) % 3).cast("string"))

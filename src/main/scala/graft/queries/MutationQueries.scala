@@ -143,12 +143,12 @@ object MutationQueries {
         .withColumn("c_custkey", col("c_custkey") + 900000L)
         .withColumn("c_name", concat(lit("NEW "), col("c_custkey") - 900000L))
         .withColumn("c_mktsegment", lit("FRESH")))
-    val dim1 = Mutations.scd2Merge(dim0, upd1, "c_custkey",
-      Seq("c_name", "c_mktsegment"), effUs = 1000000L).localCheckpoint()
+    val dim1 = graft.StageCut(Mutations.scd2Merge(dim0, upd1, "c_custkey",
+      Seq("c_name", "c_mktsegment"), effUs = 1000000L), "timeTravel.dim1")
     val upd2 = cust.filter(col("c_custkey") % 14 === 0)
       .withColumn("c_mktsegment", concat(lit("SEG2-"), col("c_custkey") % 5))
-    val dim2 = Mutations.scd2Merge(dim1, upd2, "c_custkey",
-      Seq("c_name", "c_mktsegment"), effUs = 2000000L).localCheckpoint()
+    val dim2 = graft.StageCut(Mutations.scd2Merge(dim1, upd2, "c_custkey",
+      Seq("c_name", "c_mktsegment"), effUs = 2000000L), "timeTravel.dim2")
     Seq(500000L, 1500000L, 2500000L)
       .map(t => Mutations.asOfSnapshot(dim2, t).withColumn("snap_us", lit(t)))
       .reduce(_ unionByName _)

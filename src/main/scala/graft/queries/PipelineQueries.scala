@@ -1045,10 +1045,9 @@ object PipelineQueries {
     val after = docs.select(col("doc_id"),
       when(col("doc_id") % 17 === 0, concat(lit("edited! "), col("text")))
         .otherwise(col("text")).as("text"))
-    val work = graft.operators.Mutations
+    val work = graft.StageCut(graft.operators.Mutations
       .snapshotDiff(before, after, "doc_id", "text")
-      .filter(col("status").isin("added", "changed"))
-      .localCheckpoint()
+      .filter(col("status").isin("added", "changed")), "incrementalReembed.work")
     def chunkSet(df: DataFrame): DataFrame = df
       .select(col("doc_id").cast("long").as("doc_id"),
         explode(graft.functions.CdcExpressions.cdc_chunks(

@@ -210,19 +210,18 @@ object TemporalQueries {
     // |metric × item|-bounded (7,500 rows at sf0.1) with two consumers
     // (the observed-stat rollup and the flip stream): checkpointed so the
     // corpus scan + distinct run once (rule 14)
-    val deltas = items.withColumn("shift",
+    val deltas = graft.StageCut(items.withColumn("shift",
         when(h(lit("ms:"), col("metric")) % 4 === 0, 300L)
           .when(h(lit("ms:"), col("metric")) % 4 === 1, 120L)
           .otherwise(0L))
       .select(col("metric"), col("item"),
         (h(lit("fa:"), col("metric"), lit(":"), col("item")) % 1000
           - h(lit("fb:"), col("metric"), lit(":"), col("item")) % 1000
-          - col("shift")).as("dd"))
-      .localCheckpoint()
+          - col("shift")).as("dd")), "fdrQ.deltas")
     val obs = deltas.groupBy("metric")
       .agg(sum(col("dd")).as("obs_sum"), count(lit(1)).as("n_items"))
     // 25 rows, two consumers (the BH ranking and the stats join-back):
-    // localCheckpoint so the corpus-sized flip dataflow runs once (rule 14)
+    // stage cut so the corpus-sized flip dataflow runs once (rule 14)
     // The 200-way flip explode multiplies ROWS but not partitions, and AQE
     // sizes the upstream shuffle read on PRE-explosion bytes — measured:
     // the whole 1.5M-md5 flip stream ran on ONE task (probe, r18; the md5
@@ -233,7 +232,7 @@ object TemporalQueries {
     // a REPARTITION_BY_NUM exchange AQE must preserve. Partition count
     // from the session's shuffle parallelism, never a constant (scale-
     // adaptive); the key is deterministic (guide §2.5).
-    val pvals = deltas
+    val pvals = graft.StageCut(deltas
       .repartition(deltas.sparkSession.sessionState.conf.numShufflePartitions,
         col("item"))
       .select(col("metric"), col("item"), col("dd"),
@@ -250,8 +249,7 @@ object TemporalQueries {
         sum(when(abs(col("s")) >= abs(col("obs_sum")), 1L).otherwise(0L))
           .as("n_extreme"))
       .select(col("metric"), col("n_items"), col("obs_sum"),
-        expr("((1 + n_extreme) * 1000000) div (b + 1)").as("p_ppm"))
-      .localCheckpoint()
+        expr("((1 + n_extreme) * 1000000) div (b + 1)").as("p_ppm")), "fdrQ.pvals")
     graft.operators.Evals.fdrBh(pvals.select("metric", "p_ppm"),
         "metric", "p_ppm", alphaPpm = 50000L)
       .join(broadcast(pvals.select("metric", "n_items", "obs_sum")), "metric")

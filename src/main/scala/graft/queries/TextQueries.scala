@@ -63,7 +63,9 @@ object TextQueries {
   def dedupRecallQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    val mut = docs.where(col("doc_id") % 4 === 0)
+    // stage cut (rule 14): the synthesized mutated corpus feeds the LSH
+    // pass AND the truth counts — two token-filter rebuilds without it
+    val mut = graft.StageCut(docs.where(col("doc_id") % 4 === 0)
       .select(col("doc_id").as("base_id"),
         graft.functions.text.tokens(col("text")).as("tk"))
       .withColumn("k", explode(sequence(lit(0L), lit(3L))))
@@ -72,10 +74,7 @@ object TextQueries {
         concat_ws(" ", filter(col("tk"), (t, i) =>
           col("k") === 0 || (i.cast("long") + 1L + col("k") * 3L) % 9 =!= 0))
           .as("text"))
-      .where(length(col("text")) >= 5)
-      // stage cut (rule 14): the synthesized mutated corpus feeds the LSH
-      // pass AND the truth counts — two token-filter rebuilds without it
-      .localCheckpoint()
+      .where(length(col("text")) >= 5), "dedupRecallQ.mut")
     val pairs = Dedup.minhashLshPairs(mut, "doc_id", "text",
       shingleSize = 5, numHashes = 16, bands = 4, minEst = 0.0)
     val truth = mut

@@ -133,7 +133,7 @@ object VectorQueries {
     // convention, applied r18): fan the 100-doc id set out of its single
     // scan task before the per-row PNG render+embed, and checkpoint so the
     // ten dispatcher plans scan the table instead of replaying the render
-    val chunks = graft.Tables.scaled(
+    val chunks = graft.StageCut(graft.Tables.scaled(
         Tables.documents(spark, dir).filter(col("doc_id") < 100)
           .select("doc_id")).as[Long]
       .flatMap { d =>
@@ -144,8 +144,8 @@ object VectorQueries {
             emb.embedImageMulti(png).map(_.toSeq).toSeq)
         }
       }.toDF("document_id", "chunk_number", "content", "mv")
-      .withColumn("metadata", map(lit("is_image"), lit("true")))
-      .localCheckpoint()
+      .withColumn("metadata", map(lit("is_image"), lit("true"))),
+      "colpaliE2eQuality.chunks")
     val table = graft.GraftService.ChunkTable(chunks)
     val perQuery = (0 until 10).map { g =>
       val req = graft.GraftService.RetrieveRequest("", k = 10,
@@ -210,10 +210,9 @@ object VectorQueries {
       docs, "doc_id", "text", n = 200, overlap = 40)
     // the chunk index is built ONCE (p7's stored-layout role); checkpoint
     // so the ten dispatcher plans scan it instead of replaying the embed
-    val table = embedder.embed(chunks, "chunk", "embedding")
+    val table = graft.StageCut(embedder.embed(chunks, "chunk", "embedding")
       .select(col("doc_id").as("document_id"), col("chunk_number"),
-        col("chunk").as("content"), col("embedding"))
-      .localCheckpoint()
+        col("chunk").as("content"), col("embedding")), "e2eQualityArm.table")
     val golden = docs.filter(col("doc_id") < 10)
       .select(col("doc_id"), substring(col("text"), 81, 80).as("qtext"))
       .collect().sortBy(_.getLong(0))
@@ -267,10 +266,9 @@ object VectorQueries {
     val embedder = graft.operators.HashEmbedder(dim = 64, normalize = false)
     val chunks = graft.operators.Chunker.fixedChunks(
       docs, "doc_id", "text", n = 200, overlap = 40)
-    val table = embedder.embed(chunks, "chunk", "embedding")
+    val table = graft.StageCut(embedder.embed(chunks, "chunk", "embedding")
       .select(col("doc_id").as("document_id"), col("chunk_number"),
-        col("chunk").as("content"), col("embedding"))
-      .localCheckpoint()
+        col("chunk").as("content"), col("embedding")), "ragasEvalQ.table")
     val golden = docs.filter(col("doc_id") < 10)
       .select(col("doc_id"), substring(col("text"), 81, 80).as("qtext"))
       .collect().sortBy(_.getLong(0))
@@ -303,11 +301,10 @@ object VectorQueries {
     // contexts is ≤ |queries|·k = 100 rows with TWO consumers inside
     // ragasReport (the precision chain and the faithfulness token chain):
     // checkpoint the bounded seam so the retrieval dataflow runs once.
-    val contexts = table.select("document_id", "chunk_number", "content")
+    val contexts = graft.StageCut(table.select("document_id", "chunk_number", "content")
       .join(broadcast(hits), Seq("document_id", "chunk_number"))
       .select(col("query_id"), col("rank"),
-        col("document_id").as("id"), col("content"))
-      .localCheckpoint()
+        col("document_id").as("id"), col("content")), "ragasEvalQ.contexts")
     val qmeta = docs.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"),
         col("lang").as("__ql"), col("source").as("__qs"))
@@ -563,10 +560,9 @@ object VectorQueries {
     // each consumer re-runs the MLlib assign + residual zip over the corpus.
     // An offline IVF-PQ index build materializes residuals between the
     // coarse-assign and encode passes at any scale.
-    val resid = indexed.withColumn("__resid",
+    val resid = graft.StageCut(indexed.withColumn("__resid",
       zip_with(col("embedding"), element_at(centLit, col("cluster_id") + 1),
-        (a, b) => a - b))
-      .localCheckpoint()
+        (a, b) => a - b)), "ivfPqResidual.resid")
     val pq = PqIndex.sampledModel(resid, "__resid", "vec_id", m = 8, k = 16)
     val enc = PqIndex.encode(resid, "__resid", pq)
     val qDotC = ivf.centroids.map { c =>

@@ -110,8 +110,7 @@ class StreamingParagraphDedupSpec extends AnyFunSuite {
     // index-owned paragraphs (docs 3-5 repeat P1/P2/P3 owned by shard 1)
     for ((shard, idx) <- Seq((shard1, empty), (shard2, idx1))) {
       val (deduped, delta) = Dedup.paragraphShardStep(
-        shard, idx, "doc_id", "text", paras,
-        materialize = _.localCheckpoint())
+        shard, idx, "doc_id", "text", paras)
       val wantDedup = Dedup.paragraphDedupAgainst(shard, idx, "doc_id", "text", paras)
         .orderBy("id").collect().map(_.toSeq).toSeq
       val wantDelta = Dedup.paragraphIndexDelta(shard, idx, "doc_id", "text", paras)
