@@ -20,6 +20,10 @@ import graft.operators.{Embedder, HashEmbedder, KnnSearch, Padding, Serving}
   * metadata DSL, status — lands BEFORE the scoring/limit, so Catalyst pushes
   * it into the chunk-table scan; then score -> min_score -> top-k ->
   * optional rerank (oversampled) -> optional padding -> deterministic order.
+  * One ranking path, like the reference dispatcher: each arm opens with
+  * one request [[gate]], every arm but hybrid cuts through [[candidates]],
+  * dense and multivector share [[finish]], and hybrid fuses with
+  * [[operators.FullText.rrf]]. Jobs per read: ARCHITECTURE rule 17.
   */
 object GraftService {
 
@@ -46,15 +50,22 @@ object GraftService {
   /** The reference's 10 MB query-image gate (`document_service.py:241`). */
   val MaxQueryImageBytes: Int = 10 * 1024 * 1024
 
-  /** `request.py:175-179` + `document_service.py:241-246`, applied at the
-    * dispatch point every arm shares. */
-  private def validateQueryImage(req: RetrieveRequest): Unit =
+  /** The request gate each arm opens with: a text arm rejects an image
+    * query with `textArm` (`document_service.py:234-238`); the multivector
+    * arm takes one without queryText (`request.py:175-179`), within the
+    * 10 MB gate (`document_service.py:241-246`) and unreranked. */
+  private def gate(req: RetrieveRequest, imageArm: Boolean, textArm: String =
+      "image queries require the multivector arm (document_service.py:234-238)"): Unit =
     req.queryImage.foreach { img =>
+      require(imageArm, textArm)
       require(req.queryText == null || req.queryText.isEmpty,
         "Provide either queryText or queryImage, not both (request.py:175-179)")
       require(img.length <= MaxQueryImageBytes,
         f"query image exceeds the 10MB gate (got ${img.length / 1048576.0}%.1fMB," +
           " document_service.py:241-246)")
+      require(!req.useReranking,
+        "reranking is text-queried; image queries run unreranked " +
+          "(the cross-encoder scores (queryText, content) pairs)")
     }
 
   /** Chunk-table column contract (the wide v2 layout, FIXTURES A2). */
@@ -89,26 +100,40 @@ object GraftService {
     parts.reduceOption(_ && _).getOrElse(lit(true))
   }
 
+  /** The cut of every arm but hybrid: scope → `score` → min_score → top
+    * `fetchK` by (score desc, document_id, chunk_number), so a tie never
+    * depends on row order; one `TakeOrderedAndProject` over the scan. */
+  private def candidates(req: RetrieveRequest, t: ChunkTable, score: Column,
+                         fetchK: Int): DataFrame = {
+    val scored = t.df.filter(compileScope(req, t)).withColumn("score", score)
+    val bounded =
+      if (req.minScore.isNegInfinity) scored
+      else scored.filter(col("score") >= req.minScore)
+    bounded.orderBy(col("score").desc, col(t.docIdCol), col(t.chunkNoCol)).limit(fetchK)
+  }
+
+  /** Dense and multivector: [[candidates]] (oversampled when reranking) →
+    * rerank to k → `pad` if padding, else the final [[candidates]] order. */
+  private def finish(req: RetrieveRequest, t: ChunkTable, score: Column,
+                     pad: DataFrame => DataFrame): DataFrame = {
+    val fetchK = if (req.useReranking) Serving.oversample(req.k) else req.k
+    val hits = candidates(req, t, score, fetchK)
+    val ranked =
+      if (!req.useReranking) hits
+      else Serving.rerank(hits, t.docIdCol, t.contentCol, req.queryText, req.k,
+        tiebreak = Seq(t.chunkNoCol)).withColumn("score", col("rerank_score"))
+    if (req.padding > 0) pad(ranked)
+    else ranked.orderBy(col("score").desc, col(t.docIdCol), col(t.chunkNoCol))
+  }
+
   /** retrieve_chunks: the full Q1+Q14(+Q6)(+Q8) pipeline as one plan. */
   def retrieveChunks(req: RetrieveRequest, chunks: ChunkTable,
                      embedder: Embedder = HashEmbedder(64)): DataFrame = {
-    require(req.queryImage.isEmpty,
-      "image queries require the multivector arm — use " +
-        "retrieveChunksMultivector (document_service.py:234-238)")
-    val qVec = embedder.embedText(req.queryText)
-    val fetchK = if (req.useReranking) Serving.oversample(req.k) else req.k
-    val hits = KnnSearch.topK(chunks.df, chunks.embeddingCol, chunks.docIdCol,
-      qVec, fetchK, where = compileScope(req, chunks), minScore = req.minScore)
-    val ranked =
-      if (req.useReranking)
-        Serving.rerank(hits, chunks.docIdCol, chunks.contentCol, req.queryText, req.k,
-          tiebreak = Seq(chunks.chunkNoCol))
-          .withColumn("score", col("rerank_score"))
-      else hits
-    if (req.padding > 0)
-      Padding.expand(ranked, chunks.df, req.padding, chunks.docIdCol, chunks.chunkNoCol)
-    else
-      ranked.orderBy(col("score").desc, col(chunks.docIdCol), col(chunks.chunkNoCol))
+    gate(req, imageArm = false, "image queries require the multivector arm — use " +
+      "retrieveChunksMultivector (document_service.py:234-238)")
+    finish(req, chunks, KnnSearch.cosineTo(col(chunks.embeddingCol),
+      embedder.embedText(req.queryText)),
+      Padding.expand(_, chunks.df, req.padding, chunks.docIdCol, chunks.chunkNoCol))
   }
 
   /** retrieve_chunks, ColPali/multivector branch (Q7's `use_colpali` arm,
@@ -122,7 +147,7 @@ object GraftService {
   def retrieveChunksMultivector(req: RetrieveRequest, chunks: ChunkTable,
                                 mvCol: String,
                                 embedder: operators.MultiVectorEmbedder): DataFrame = {
-    validateQueryImage(req)
+    gate(req, imageArm = true)
     // `document_service.py:278-296`: an image query embeds through the
     // model's image path, a text query through embed_for_query — then the
     // two share every downstream stage.
@@ -131,33 +156,14 @@ object GraftService {
       case None      => embedder.embedTextMulti(req.queryText)
     }
     require(qmv.nonEmpty, "query multivector is empty (embedder failure)")
-    require(req.queryImage.isEmpty || !req.useReranking,
-      "reranking is text-queried; image queries run unreranked " +
-        "(the cross-encoder scores (queryText, content) pairs)")
-    val qlit = typedLit(qmv.map(_.toSeq).toSeq)
-    val fetchK = if (req.useReranking) Serving.oversample(req.k) else req.k
-    val scored = chunks.df.filter(compileScope(req, chunks))
-      .withColumn("score", graft.functions.vec.max_sim_float(col(mvCol), qlit))
-    val bounded =
-      if (req.minScore.isNegInfinity) scored
-      else scored.filter(col("score") >= req.minScore)
-    val hits = bounded
-      .orderBy(col("score").desc, col(chunks.docIdCol), col(chunks.chunkNoCol))
-      .limit(fetchK)
-    val ranked =
-      if (req.useReranking)
-        Serving.rerank(hits, chunks.docIdCol, chunks.contentCol, req.queryText, req.k,
-          tiebreak = Seq(chunks.chunkNoCol))
-          .withColumn("score", col("rerank_score"))
-      else hits
     // ColPali padding is image-only (`_apply_padding_to_chunks`,
     // `document_service.py:554-688`): text hits drop out, padding rows
     // must be images, matched scores survive, padding scores 0.0, final
     // order (-score, doc, chunk).
-    if (req.padding > 0)
-      Padding.expandImages(ranked, chunks.df, req.padding,
-        chunks.docIdCol, chunks.chunkNoCol, chunks.contentCol, chunks.metaCol)
-    else ranked
+    finish(req, chunks,
+      graft.functions.vec.max_sim_float(col(mvCol), typedLit(qmv.map(_.toSeq).toSeq)),
+      Padding.expandImages(_, chunks.df, req.padding,
+        chunks.docIdCol, chunks.chunkNoCol, chunks.contentCol, chunks.metaCol))
   }
 
   /** Hybrid retrieval: the dense arm fused with an Okapi BM25 keyword arm
@@ -165,29 +171,26 @@ object GraftService {
     * the reference's filename-only keyword search Q12 to chunk content).
     * Scope compiles ONCE and lands before BOTH arms' scoring, so each arm
     * scans only authorized rows. Chunks are keyed by a composite doc:chunk
-    * string so fusion is per-chunk; each arm oversamples to
+    * string `__cid` so fusion is per-chunk; each arm oversamples to
     * fetchK = max(2k, 20) before the RRF cut.
     *
     * Plan: the two arms are collected and fused on the driver (rule 17) —
     * at most 2·fetchK request-sized rows, each carrying its chunk columns,
     * so nothing joins back to the table:
-    *  - dense: [[KnnSearch.topK]], a bounded-heap scan (1 job);
+    *  - dense: [[KnnSearch.topK]] on `__cid`, a bounded-heap scan (1 job);
     *  - keyword: [[operators.FullText.bm25Rows]], a one-row stats aggregate
     *    (2 jobs under AQE) and a bounded-heap scoring scan (1 job), both
     *    skipped when the query has no term the scope holds;
-    *  - fusion: rank r (1-based, arm order (score desc, key asc)) scores
-    *    1/(kRrf + r) per arm, absent arms 0; the top k by (rrf desc, key
-    *    asc, in Spark's UTF-8 binary string order) are returned as a local
-    *    frame in (score desc, document_id, chunk_number) order, so reading
-    *    it runs no further job.
+    *  - fusion: [[operators.FullText.rrf]] with the constant 60 cuts the
+    *    top k by (rrf desc, `__cid` in Spark's UTF-8 binary string order),
+    *    returned as a local frame in (score desc, document_id,
+    *    chunk_number) order, so reading it runs no further job.
     * At most 4 jobs per call. Columns: dense_rank, keyword_rank (null for
     * an arm that missed the chunk), rrf, the chunk table's columns, and
     * score (= rrf). */
   def retrieveChunksHybrid(req: RetrieveRequest, chunks: ChunkTable,
-                           embedder: Embedder = HashEmbedder(64),
-                           kRrf: Int = 60): DataFrame = {
-    require(req.queryImage.isEmpty,
-      "image queries require the multivector arm (document_service.py:234-238)")
+                           embedder: Embedder = HashEmbedder(64)): DataFrame = {
+    gate(req, imageArm = false)
     val keyed = chunks.df.filter(compileScope(req, chunks)).drop("score")
       .withColumn("__cid", concat_ws(":", col(chunks.docIdCol), col(chunks.chunkNoCol)))
     val fetchK = math.max(req.k * 2, 20)
@@ -197,35 +200,21 @@ object GraftService {
       .split("\\s+").filter(_.nonEmpty).distinct.toSeq
     val keyword = operators.FullText.bm25Rows(keyed, "__cid", chunks.contentCol,
       terms, fetchK).collect()
-    // both arms' rows start with keyed's columns, in keyed's order
+    // both arms' rows start with keyed's columns; a both-arms chunk keeps its dense row
     val cidIdx = keyed.columns.indexOf("__cid")
     val chunkIdx = keyed.columns.indices.filter(_ != cidIdx)
-    case class Fused(row: Row, denseRank: Option[Long], keywordRank: Option[Long]) {
-      val rrf: Double = denseRank.map(r => 1.0 / (kRrf.toLong + r)).getOrElse(0.0) +
-        keywordRank.map(r => 1.0 / (kRrf.toLong + r)).getOrElse(0.0)
-    }
-    val pool = scala.collection.mutable.LinkedHashMap.empty[String, Fused]
-    dense.iterator.zipWithIndex.foreach { case (r, i) =>
-      pool(r.getString(cidIdx)) = Fused(r, Some(i + 1L), None)
-    }
-    keyword.iterator.zipWithIndex.foreach { case (r, i) =>
-      val cid = r.getString(cidIdx)
-      pool(cid) = pool.get(cid) match {
-        case Some(f) => f.copy(keywordRank = Some(i + 1L))
-        case None    => Fused(r, None, Some(i + 1L))
-      }
-    }
+    val rowOf = (keyword ++ dense).map(r => r.getString(cidIdx) -> r).toMap
     val docIdx = keyed.columns.indexOf(chunks.docIdCol)
     val chunkNoIdx = keyed.columns.indexOf(chunks.chunkNoCol)
-    val top = pool.toSeq
-      .sortWith { case ((ca, a), (cb, b)) =>
-        a.rrf > b.rrf || (a.rrf == b.rrf && sqlCompare(ca, cb) < 0) }
-      .take(req.k).map(_._2)
+    val top = operators.FullText.rrf(dense.map(_.getString(cidIdx)).toSeq,
+        keyword.map(_.getString(cidIdx)).toSeq, req.k,
+        Ordering.fromLessThan[String](sqlCompare(_, _) < 0))
       .sortWith { (a, b) =>
         if (a.rrf != b.rrf) a.rrf > b.rrf
         else {
-          val c = sqlCompare(a.row.get(docIdx), b.row.get(docIdx))
-          if (c != 0) c < 0 else sqlCompare(a.row.get(chunkNoIdx), b.row.get(chunkNoIdx)) < 0
+          val (ra, rb) = (rowOf(a.key), rowOf(b.key))
+          val c = sqlCompare(ra.get(docIdx), rb.get(docIdx))
+          if (c != 0) c < 0 else sqlCompare(ra.get(chunkNoIdx), rb.get(chunkNoIdx)) < 0
         }
       }
     val outSchema = StructType(
@@ -235,7 +224,7 @@ object GraftService {
         StructField("score", DoubleType, nullable = false))
     val outRows = top.map { f =>
       Row.fromSeq(Seq[Any](f.denseRank.orNull, f.keywordRank.orNull, f.rrf) ++
-        chunkIdx.map(f.row.get) :+ f.rrf)
+        chunkIdx.map(rowOf(f.key).get) :+ f.rrf)
     }
     keyed.sparkSession.createDataFrame(outRows.asJava, outSchema)
   }
@@ -261,39 +250,33 @@ object GraftService {
     * default) — the serving answer to a corpus whose top-k fills with
     * near-copies. Same scope compilation and pushed-down plan as
     * [[retrieveChunks]]; the diversification runs over the request-sized
-    * candidate slice only: it is collected once (1 job, the bounded-heap
-    * [[KnnSearch.topK]] scan), the greedy step runs on the driver over a
-    * rank surrogate id (chunk keys are composite doc:chunk), and the picks
-    * come back as a local frame already in `mmr_rank` order, so reading it
-    * runs no further job. Columns: the chunk table's, score, mmr_score,
-    * mmr_rank. */
+    * candidate slice only: it is collected once (1 job, the [[candidates]]
+    * heap scan), the greedy step runs on the driver over each candidate's
+    * slice position as its id, and the picks come back as a local frame
+    * already in `mmr_rank` order, so reading it runs no further job.
+    * Columns: the chunk table's, score, mmr_score, mmr_rank. */
   def retrieveChunksDiverse(req: RetrieveRequest, chunks: ChunkTable,
                             embedder: Embedder = HashEmbedder(64),
                             lambda: Double = 0.5): DataFrame = {
-    require(req.queryImage.isEmpty,
-      "image queries require the multivector arm (document_service.py:234-238)")
+    gate(req, imageArm = false)
     // 2k oversample (the hybrid arm's rule, NOT Serving.oversample whose
     // max(k, min(3k, 20)) cap equals k once k >= 20 — a pool of exactly k
     // candidates would make diversification a pure reorder with nothing to
     // swap in)
-    val fetchK = math.max(req.k * 2, 20)
-    val keyed = chunks.df.filter(compileScope(req, chunks)).withColumn("__cid",
-      concat_ws(":", col(chunks.docIdCol), col(chunks.chunkNoCol)))
-    val hits = KnnSearch.topK(keyed, chunks.embeddingCol, "__cid",
-      embedder.embedText(req.queryText), fetchK, minScore = req.minScore)
+    val hits = candidates(req, chunks, KnnSearch.cosineTo(col(chunks.embeddingCol),
+      embedder.embedText(req.queryText)), math.max(req.k * 2, 20))
     // ONE execution of the retrieval plan: collect the request-sized slice
-    // (already (score desc, __cid) ordered by topK), greedy-select on it,
-    // and rebuild the result from the same rows — a join back to `hits`
-    // would re-derive the corpus scan a second time per request
-    val spark = hits.sparkSession
-    val rows = hits.drop("__cid").collect()
+    // (already in candidate order), greedy-select on it, and rebuild the
+    // result from the same rows — a join back to `hits` would re-derive
+    // the corpus scan a second time per request
+    val rows = hits.collect()
     val scoreIdx = rows.headOption.map(_.fieldIndex("score")).getOrElse(0)
     val embIdx = rows.headOption.map(_.fieldIndex(chunks.embeddingCol)).getOrElse(0)
     val cand = rows.zipWithIndex.map { case (r, i) =>
       ((i + 1).toLong, r.getDouble(scoreIdx), r.getSeq[Float](embIdx).toArray)
     }
     val picks = operators.Mmr.select(cand.toSeq, req.k, lambda)
-    val outSchema = hits.drop("__cid").schema
+    val outSchema = hits.schema
       .add("mmr_score", DoubleType, nullable = false)
       .add("mmr_rank", LongType, nullable = false)
     val outRows = picks.map { case (sid, _, m, rk) =>
@@ -304,10 +287,10 @@ object GraftService {
     }
     // picks come in selection order = mmr_rank order: a local frame,
     // read without another job
-    spark.createDataFrame(outRows.asJava, outSchema)
+    hits.sparkSession.createDataFrame(outRows.asJava, outSchema)
   }
 
-  /** Doc-level results (Q11): max chunk score per document. */
+  /** Doc-level results (Q11): max chunk score per [[retrieveChunks]] document. */
   def retrieveDocs(req: RetrieveRequest, chunks: ChunkTable,
                    embedder: Embedder = HashEmbedder(64)): DataFrame =
     KnnSearch.docLevel(retrieveChunks(req, chunks, embedder), chunks.docIdCol)

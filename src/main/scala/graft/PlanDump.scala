@@ -1,14 +1,38 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Dev tool (r17): dump `explain("formatted")` for named registry queries
   * (every registry query when none is named) to
   * <outDir>/<query>_<suffix>.txt — the before/after plan evidence the
-  * optimization round commits alongside each change.
+  * optimization round commits alongside each change. Dumps are
+  * [[normalize]]d: two dumps of the same plans are byte-identical.
   * Usage: runMain graft.PlanDump <outDir> <suffix> [<query>...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1 — plans are captured at the
   * bench's scale factor), SPARK_GRAFT_CPUS.
   */
 object PlanDump {
+
+  private val Masks: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#\\d+".r -> "#n",
+    "plan_id=\\d+".r -> "plan_id=n",
+    "RDD\\[\\d+\\]".r -> "RDD[n]",
+    "Broadcast\\(\\d+\\)".r -> "Broadcast(n)",
+    "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+".r -> "\\$Lambda\\$n",
+    "(\\[+(?:[BCDFIJSZ]|L[\\w.$]+;))@\\p{XDigit}+".r -> "$1@h",
+    "(graft_p7_index_layout)\\d+".r -> "$1n")
+
+  /** `plan` with the tokens that differ per planning masked: expression,
+    * `plan_id`, RDD and broadcast ids, JVM identity hashes (lambdas,
+    * arrays) and p7's fresh temp directory. */
+  def normalize(plan: String): String =
+    Masks.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
+
+  /** The normalized formatted plan of registry query `name` over `dir`. */
+  def plan(spark: SparkSession, dir: String, name: String): String =
+    normalize(SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode))
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <outDir> <suffix> [<query>...]")
     val outDir = new java.io.File(args(0)); outDir.mkdirs()
@@ -19,11 +43,9 @@ object PlanDump {
       "registry queries").foreach { n =>
       val f = new java.io.File(outDir, s"${n}_$suffix.txt")
       try {
-        val plan = SparkEntry.queries(n)(spark, dir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+        val text = plan(spark, dir, n)
         val w = new java.io.PrintWriter(f)
-        try { w.println(s"== $n ($suffix, $dir) =="); w.println(plan) }
+        try { w.println(s"== $n ($suffix, $dir) =="); w.println(text) }
         finally w.close()
         println(s"[plandump] wrote $f")
       } catch { case e: Throwable =>

@@ -9,9 +9,10 @@ import graft.functions.text
   * The reference's keyword arm is Postgres FTS over filenames only
   * (`postgres_database.py:2700-2790`, ported as Q12/n1); this generalizes it
   * to BM25 over document CONTENT — the standard keyword side of a hybrid
-  * retrieval stack — plus reciprocal-rank fusion to combine it with the
-  * dense KNN arm ([[KnnSearch]]), the fusion pgvector+FTS deployments use
-  * (Cormack et al. 2009 RRF; k=60 is the canonical constant).
+  * retrieval stack — plus reciprocal-rank fusion ([[rrf]], on the driver,
+  * the one RRF of both hybrid readers) to combine it with the dense KNN arm
+  * ([[KnnSearch]]), the fusion pgvector+FTS deployments use (Cormack et
+  * al. 2009 RRF; k=60 is the canonical constant).
   *
   * 100 TB shape ([[bm25]]): one global aggregate gives the (N, avgdl,
   * per-term df) row, then one map-only scoring pass cuts the top-k with a
@@ -364,23 +365,22 @@ object FullText {
       .withColumn("snippet", snip)
   }
 
-  /** Reciprocal-rank fusion of two ranked lists (1-based `rank` column each):
-    * rrf = Σ 1/(kRrf + rank), absent arms contribute 0. The full-outer join
-    * keeps per-arm ranks in the output (callers and specs read
-    * dense_rank/keyword_rank); Spark has no full-outer broadcast hash join,
-    * so this plans as a sort-merge join — immaterial, because both inputs
-    * are top-k slices (user-request sized, PlanGuard-gated): the expensive
-    * work happened in the arms. */
-  def rrfFuse(dense: DataFrame, keyword: DataFrame, idCol: String,
-              k: Int, kRrf: Int = 60): DataFrame = {
-    val d = dense.select(col(idCol).as("doc_id"), col("rank").cast("long").as("dense_rank"))
-    val kw = keyword.select(col(idCol).as("doc_id"), col("rank").cast("long").as("keyword_rank"))
-    d.join(kw, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(kRrf.toLong) + col("dense_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(kRrf.toLong) + col("keyword_rank")), lit(0.0)))
-      .orderBy(col("rrf").desc, col("doc_id"))
-      .limit(k)
+  /** A fused key: its 1-based rank per arm (None where the arm missed it)
+    * and rrf = Σ 1/(60 + rank) over the arms that hold it. */
+  case class Fused[K](key: K, denseRank: Option[Long], keywordRank: Option[Long]) {
+    val rrf: Double = Seq(denseRank, keywordRank).flatten.map(r => 1.0 / (60L + r)).sum
+  }
+
+  /** Reciprocal-rank fusion of two ranked key lists (best first): the top
+    * `k` keys of either list by (rrf desc, key in `keyOrder`, the order
+    * the caller's engine side sorts its keys by). Runs on the driver over
+    * request-sized lists (rule 17). */
+  def rrf[K](dense: Seq[K], keyword: Seq[K], k: Int, keyOrder: Ordering[K]): Seq[Fused[K]] = {
+    def ranks(arm: Seq[K]) = arm.zipWithIndex.map { case (key, i) => key -> (i + 1L) }.toMap
+    val (d, w) = (ranks(dense), ranks(keyword))
+    (dense ++ keyword).distinct.map(key => Fused(key, d.get(key), w.get(key)))
+      .sortWith((a, b) => a.rrf > b.rrf || (a.rrf == b.rrf && keyOrder.lt(a.key, b.key)))
+      .take(k)
   }
 
   /** Exact phrase search — Postgres `tsquery <->` / Lucene PhraseQuery

@@ -900,15 +900,16 @@ object LinkGraph {
     *
     * 100 TB shape: per round ONE map-side-combined degree groupBy + two
     * semi-joins of the shrinking edge set against the survivor nodes.
-    * Exactly ONE eager checkpoint job per round (r18 optimization; guide
-    * §2.4/§1.2): the node-sized degree table `deg` is the round's only
-    * materialization — the convergence test, the peeled slice, and the
-    * survivor set are all cheap filters over it — and the shrunk edge
-    * frontier is checkpointed LAZILY (the t41 pattern), so the next
-    * round's degree job materializes it instead of paying a second job.
-    * (Previously: drop + nodes + cur were three eager checkpoints, with
-    * the degree aggregation computed twice.) Lineage stays O(1) per
-    * round (the connectedComponents discipline); rounds grow with the
+    * The node-sized degree table `deg` is the only aggregation per round
+    * (r18; guide §2.4/§1.2) — the convergence test, peeled slice and
+    * survivor set are filters over it — and both per-round cuts (`deg`,
+    * the edge frontier `cur`) are LAZY, which saves only each cut's own
+    * materializing job: under AQE building a cut runs its upstream stages.
+    * Measured, a peeling round runs 4 jobs: building `deg` (the groupBy's
+    * map stage, which computes the last round's `cur`), the convergence
+    * count (2, materializing `deg`) and building `cur` (its semi-joins'
+    * upstream stage); the last round stops after its count. Lineage stays O(1)
+    * per round (the connectedComponents discipline); rounds grow with the
     * graph's degeneracy ordering depth (log-like on tree-ish tendrils),
     * and the work per round SHRINKS with the surviving graph. Driver
     * holds counts only (rule 17). `maxRounds` is a loud runaway guard. */
@@ -931,14 +932,13 @@ object LinkGraph {
       require(round <= maxRounds,
         s"kcore did not converge within $maxRounds rounds - the graph's " +
           "peel depth exceeds the guard; raise maxRounds deliberately")
-      // The round's ONE job: the node-sized degree table is checkpointed
-      // LAZILY and the convergence count's action materializes it (the
-      // t41 pattern — the count computes deg's full RDD, checkpointing it,
-      // then counts the filtered rows on top; RDD-level checkpoints are
-      // opaque to column pruning, so the materialized rows are complete).
-      // This job also executes the previous round's lazy edge cut. drop /
-      // nodes are filters over the checkpoint — no second degree
-      // aggregation, no separate isEmpty job.
+      // deg is checkpointed LAZILY and the convergence count materializes
+      // it (the t41 pattern — the count computes deg's full RDD,
+      // checkpointing it, then counts the filtered rows on top; RDD-level
+      // checkpoints are opaque to column pruning, so the materialized rows
+      // are complete). Building the cut runs the groupBy's map stage, which
+      // executes the previous round's lazy edge cut. drop / nodes are
+      // filters over the checkpoint — no second degree aggregation.
       // degree via union+groupBy instead of nodes⋈counts (one exchange,
       // no join): every survivor appears in the union with weight 0, so
       // zero-degree nodes emerge with __d = 0 — value-identical to the

@@ -186,11 +186,6 @@ object GraphQueries {
     LinkGraph.pageRank(edges(spark, dir), "src", "dst", Iters, DampPct, Scale)
       .orderBy(col("rank").desc, col("node"))
 
-  /** ScaleProbe hook: rank at an explicit iteration count over the same
-    * synthesized graph (per-iteration cost is the probe target). */
-  def pagerankAt(spark: SparkSession, dir: String, iters: Int): DataFrame =
-    LinkGraph.pageRank(edges(spark, dir), "src", "dst", iters, DampPct, Scale)
-
   /** GROWING-graph edges: node universe ∝ corpus rows (one host per 5
     * docs; the two derived targets range past the source universe, so
     * dangling nodes grow too). gr1's host universe is FIXED by its

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{FullText, KnnSearch, Mmr}
@@ -132,19 +131,19 @@ object SearchQueries {
   }
 
   /** Hybrid retrieval: dense top-20 (cosine to vec 0, vec 0 excluded, the v1
-    * arm) fused with BM25 top-20 by reciprocal-rank (k=60), final top-10. */
+    * arm) fused with BM25 top-20 by [[FullText.rrf]] (ties by numeric id),
+    * final top-10: a local frame, so reading it runs no job. */
   def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val qv = VectorQueries.queryVec(spark, dir)
-    val rankW = Window.orderBy(col("score").desc, col("doc_id"))
     val dense = KnnSearch.topK(Tables.embeddings(spark, dir), "embedding", "vec_id",
-      qv, k = 20, where = col("vec_id") =!= 0)
-      .select(col("vec_id").as("doc_id"), col("score"))
-      .withColumn("rank", row_number().over(rankW))
+      qv, k = 20, where = col("vec_id") =!= 0).select("vec_id").as[Long].collect().toSeq
     val keyword = FullText.bm25(Tables.documents(spark, dir), "doc_id", "text", Terms, k = 20)
-      .withColumn("rank", row_number().over(rankW))
-    FullText.rrfFuse(dense, keyword, "doc_id", k = 10)
-      .select(col("doc_id"), round(col("rrf"), 6).as("rrf"),
-        col("dense_rank"), col("keyword_rank"))
+      .select("doc_id").as[Long].collect().toSeq
+    FullText.rrf(dense, keyword, k = 10, Ordering.Long)
+      .map(f => (f.key, f.rrf, f.denseRank, f.keywordRank))
+      .toDF("doc_id", "rrf", "dense_rank", "keyword_rank")
+      .withColumn("rrf", round(col("rrf"), 6))
   }
 
   /** MMR-diversified retrieval: the v1 dense arm's top-20 (cosine to vec 0,

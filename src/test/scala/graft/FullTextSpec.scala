@@ -42,11 +42,11 @@ class FullTextSpec extends AnyFunSuite {
     assert(out(3L) > out(1L), "shorter doc wins at equal tf")
   }
 
-  test("rrfFuse sums both arms and ranks a both-arms doc above single-arm") {
-    val dense = Seq((10L, 1), (11L, 2), (12L, 3)).toDF("doc_id", "rank")
-    val kw = Seq((12L, 1), (13L, 2)).toDF("doc_id", "rank")
-    val out = FullText.rrfFuse(dense, kw, "doc_id", k = 10)
-      .select("doc_id", "rrf").as[(Long, Double)].collect().toMap
+  test("rrf sums both arms and ranks a both-arms doc above single-arm") {
+    val dense = Seq(10L, 11L, 12L)
+    val kw = Seq(12L, 13L)
+    val out = FullText.rrf(dense, kw, k = 10, Ordering.Long)
+      .map(f => f.key -> f.rrf).toMap
     assert(math.abs(out(12L) - (1.0 / 63 + 1.0 / 61)) < 1e-12)
     assert(math.abs(out(10L) - 1.0 / 61) < 1e-12)
     assert(math.abs(out(13L) - 1.0 / 62) < 1e-12)
@@ -137,13 +137,13 @@ class FullTextSpec extends AnyFunSuite {
     assert(out(4L) == ((None, None)), "words match as lexemes, not substrings")
   }
 
-  test("rrfFuse keeps absent-arm ranks null and bounds output at k") {
-    val dense = (1L to 30L).map(i => (i, i.toInt)).toDF("doc_id", "rank")
-    val kw = Seq((100L, 1)).toDF("doc_id", "rank")
-    val rows = FullText.rrfFuse(dense, kw, "doc_id", k = 5).collect()
+  test("rrf keeps absent-arm ranks null and bounds output at k") {
+    val dense = 1L to 30L
+    val kw = Seq(100L)
+    val rows = FullText.rrf(dense, kw, k = 5, Ordering.Long)
     assert(rows.length == 5)
-    val solo = rows.find(_.getLong(0) == 100L).get
-    assert(solo.isNullAt(solo.fieldIndex("dense_rank")))
+    val solo = rows.find(_.key == 100L).get
+    assert(solo.denseRank.isEmpty)
   }
 
   // N=7; seed 1 term profile: zebra tf3, quartz tf2, common tf2 survive

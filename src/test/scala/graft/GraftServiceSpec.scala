@@ -266,6 +266,46 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"guard is blind to the old plan: ${refJobs.size} jobs, windows $refWindows")
   }
 
+  test("job-count guard: a dense, rerank, docs or multivector read runs its pinned jobs") {
+    // pinned at the counts each arm ran before the arms shared one
+    // candidate cut: dense 1, rerank 1, docs 1, multivector 1 — the
+    // candidates' heap scan is the only job; the rerank cut, the doc-level
+    // aggregate and the final order run inside it
+    val mvEmb = graft.operators.HashMultiVectorEmbedder(dim = 16)
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve_arms").toString + "/chunks"
+    mvEmb.embedMulti(chunkTable.df, "content", "mv").write.parquet(dir)
+    val table = ChunkTable(spark.read.parquet(dir))
+    val req = RetrieveRequest("spark query engine chunk 0", k = 5, appId = Some("app1"))
+    val arms = Seq[(String, Int, () => DataFrame)](
+      ("dense", 1, () => retrieveChunks(req, table)),
+      ("rerank", 1, () => retrieveChunks(req.copy(useReranking = true), table)),
+      ("docs", 1, () => retrieveDocs(req, table)),
+      ("multivector", 1, () => retrieveChunksMultivector(req, table, "mv", mvEmb)))
+    arms.foreach { case (_, _, read) => read().collect() } // warm the embedders and codegen
+    arms.foreach { case (arm, pinned, read) =>
+      val (jobs, windows) = jobsAndGlobalWindows(read())
+      assert(jobs.size == pinned, s"$arm read ran ${jobs.size} jobs, pinned at $pinned: $jobs")
+      assert(windows.isEmpty, s"$arm plan holds a partition-less window: $windows")
+    }
+  }
+
+  test("equal-score chunks of one document tie-break by chunk_number at the cut") {
+    // doc 1's chunks 0 and 1 are identical, so they score exactly alike;
+    // chunk 1 is listed first in the table's one partition, and a k = 1
+    // cut must still keep chunk 0: the final order's tie-break, not row order
+    val rows = Seq((1L, 1, "alpha beta"), (1L, 0, "alpha beta"), (2L, 0, "gamma delta"))
+      .map { case (d, n, c) => (d, n, c, emb.embedText(c).toSeq) }
+    val chunks = ChunkTable(
+      rows.toDF("document_id", "chunk_number", "content", "embedding").coalesce(1))
+    assert(chunks.df.rdd.getNumPartitions == 1 &&
+      chunks.df.select("chunk_number").as[Int].collect().head == 1, "fixture lost its row order")
+    val req = RetrieveRequest("alpha beta", k = 1)
+    def top(got: DataFrame) = got.select("document_id", "chunk_number").as[(Long, Int)].collect().toSeq
+    assert(top(retrieveChunks(req, chunks)) == Seq((1L, 0)), "dense cut")
+    assert(top(retrieveChunks(req.copy(useReranking = true), chunks)) == Seq((1L, 0)), "rerank cut")
+    assert(top(retrieveChunksDiverse(req, chunks)) == Seq((1L, 0)), "mmr candidates")
+  }
+
   test("hybrid arm degrades to dense-only when no query term matches the corpus") {
     val req = RetrieveRequest("zzzzz qqqqq", k = 3, appId = Some("app1"))
     val got = retrieveChunksHybrid(req, chunkTable)
