@@ -3,12 +3,11 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import graft.filters.{MetadataFilter, ScopeFilters}
-import graft.operators.{Embedder, HashEmbedder, KnnSearch, Padding, Serving}
+import graft.operators.{Embedder, HashEmbedder, KnnSearch, ModelRerank, Padding, Serving,
+  TokenOverlapModel}
 
 /** The serving-layer planner (SURVEY §3.1/§3.2): a `RetrieveRequest`-shaped
   * case class compiled to one declarative DataFrame plan — the Spark
@@ -50,12 +49,15 @@ object GraftService {
   /** The reference's 10 MB query-image gate (`document_service.py:241`). */
   val MaxQueryImageBytes: Int = 10 * 1024 * 1024
 
-  /** The request gate each arm opens with: a text arm rejects an image
-    * query with `textArm` (`document_service.py:234-238`); the multivector
-    * arm takes one without queryText (`request.py:175-179`), within the
-    * 10 MB gate (`document_service.py:241-246`) and unreranked. */
+  /** The request gate each arm opens with: `k` and `padding` must be
+    * non-negative (`k = 0` reads an empty result on every arm); a text arm
+    * rejects an image query with `textArm` (`document_service.py:234-238`);
+    * the multivector arm takes one without queryText (`request.py:175-179`),
+    * within the 10 MB gate (`document_service.py:241-246`) and unreranked. */
   private def gate(req: RetrieveRequest, imageArm: Boolean, textArm: String =
-      "image queries require the multivector arm (document_service.py:234-238)"): Unit =
+      "image queries require the multivector arm (document_service.py:234-238)"): Unit = {
+    require(req.k >= 0, s"k must be non-negative (got ${req.k})")
+    require(req.padding >= 0, s"padding must be non-negative (got ${req.padding})")
     req.queryImage.foreach { img =>
       require(imageArm, textArm)
       require(req.queryText == null || req.queryText.isEmpty,
@@ -67,6 +69,7 @@ object GraftService {
         "reranking is text-queried; image queries run unreranked " +
           "(the cross-encoder scores (queryText, content) pairs)")
     }
+  }
 
   /** Chunk-table column contract (the wide v2 layout, FIXTURES A2). */
   case class ChunkTable(
@@ -113,15 +116,16 @@ object GraftService {
   }
 
   /** Dense and multivector: [[candidates]] (oversampled when reranking) →
-    * rerank to k → `pad` if padding, else the final [[candidates]] order. */
+    * rerank to k ([[ModelRerank]]) → `pad` if padding, else the final
+    * [[candidates]] order. */
   private def finish(req: RetrieveRequest, t: ChunkTable, score: Column,
                      pad: DataFrame => DataFrame): DataFrame = {
     val fetchK = if (req.useReranking) Serving.oversample(req.k) else req.k
     val hits = candidates(req, t, score, fetchK)
     val ranked =
       if (!req.useReranking) hits
-      else Serving.rerank(hits, t.docIdCol, t.contentCol, req.queryText, req.k,
-        tiebreak = Seq(t.chunkNoCol)).withColumn("score", col("rerank_score"))
+      else ModelRerank.rerank(hits, t.docIdCol, t.contentCol, req.queryText, req.k,
+        TokenOverlapModel(), tiebreak = Seq(t.chunkNoCol)).withColumn("score", col("rerank_score"))
     if (req.padding > 0) pad(ranked)
     else ranked.orderBy(col("score").desc, col(t.docIdCol), col(t.chunkNoCol))
   }
@@ -208,14 +212,11 @@ object GraftService {
     val chunkNoIdx = keyed.columns.indexOf(chunks.chunkNoCol)
     val top = operators.FullText.rrf(dense.map(_.getString(cidIdx)).toSeq,
         keyword.map(_.getString(cidIdx)).toSeq, req.k,
-        Ordering.fromLessThan[String](sqlCompare(_, _) < 0))
+        Ordering.fromLessThan[String](Serving.sqlCompare(_, _) < 0))
       .sortWith { (a, b) =>
-        if (a.rrf != b.rrf) a.rrf > b.rrf
-        else {
-          val (ra, rb) = (rowOf(a.key), rowOf(b.key))
-          val c = sqlCompare(ra.get(docIdx), rb.get(docIdx))
-          if (c != 0) c < 0 else sqlCompare(ra.get(chunkNoIdx), rb.get(chunkNoIdx)) < 0
-        }
+        val (ra, rb) = (rowOf(a.key), rowOf(b.key))
+        Serving.sortsBefore((b.rrf, a.rrf), (ra.get(docIdx), rb.get(docIdx)),
+          (ra.get(chunkNoIdx), rb.get(chunkNoIdx)))
       }
     val outSchema = StructType(
       Seq(StructField("dense_rank", LongType), StructField("keyword_rank", LongType),
@@ -227,22 +228,6 @@ object GraftService {
         chunkIdx.map(rowOf(f.key).get) :+ f.rrf)
     }
     keyed.sparkSession.createDataFrame(outRows.asJava, outSchema)
-  }
-
-  /** Spark's ascending order for one sort-key value, nulls first:
-    * strings by UTF-8 bytes (Java's UTF-16 order differs for non-BMP
-    * text), floating point with NaN largest and -0.0 == 0.0, everything
-    * else by its natural order. */
-  private def sqlCompare(a: Any, b: Any): Int = (a, b) match {
-    case (null, null) => 0
-    case (null, _) => -1
-    case (_, null) => 1
-    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
-    case (x: Float, y: Float) => SQLOrderingUtil.compareFloats(x, y)
-    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
-    case _ => throw new IllegalArgumentException(
-      s"no driver-side order for sort key ${a.getClass.getName}")
   }
 
   /** MMR-diversified retrieval: the dense branch oversampled to fetchK,

@@ -27,8 +27,8 @@ object text {
   /** Whitespace token count (`fast_ops.py:257-263`). */
   def token_count(c: Column): Column = size(tokens(c))
 
-  /** Distinct normalized tokens — the set granularity the rerank overlap
-    * and the RAGAS-shape claim/evidence checks share. */
+  /** Distinct normalized tokens — the set granularity of the RAGAS-shape
+    * claim/evidence checks. */
   def distinctTokens(c: Column): Column = array_distinct(tokens(c))
 
   /** BPE-ish subword token estimate: greedy regex chunking — letter runs in

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.DoubleType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -14,19 +16,17 @@ trait RerankModel extends Serializable {
   def scoreBatch(query: String, passages: Seq[String]): Seq[Double]
 }
 
-/** Deterministic CI stand-in: |q ∩ p| / |q| token overlap (the same
-  * function `Serving.rerank` evaluates as a Column for the oracle path). */
+/** Deterministic CI stand-in for a cross-encoder (the r1/s5 oracles'
+  * formula): |distinct passage tokens ∩ distinct query tokens| / |distinct
+  * query tokens|, `\s+`-split after `Locale.ROOT` lower-casing. An empty
+  * query or a null passage scores 0.0. */
 case class TokenOverlapModel() extends RerankModel {
+  private def tokens(s: String): Set[String] =
+    s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty).toSet
+
   def scoreBatch(query: String, passages: Seq[String]): Seq[Double] = {
-    val q = query.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    passages.map { p =>
-      if (q.isEmpty) 0.0
-      else {
-        val toks = Option(p).getOrElse("").toLowerCase
-          .split("\\s+").filter(_.nonEmpty).toSet
-        q.count(toks.contains).toDouble / q.length
-      }
-    }
+    val q = tokens(Option(query).getOrElse(""))
+    passages.map(p => if (q.isEmpty || p == null) 0.0 else q.count(tokens(p)).toDouble / q.size)
   }
 }
 
@@ -75,26 +75,21 @@ case class HttpReranker(endpoint: String, model: String = "reranker",
 }
 
 object ModelRerank {
-  /** Distributed model rerank: score passages per partition in batches,
-    * then global top-k by (score desc, id asc) — the Spark form of
-    * `FlagReranker.rerank`. The sort is on (double, id) pairs only; the
-    * passage text never enters the ordering exchange. */
+  /** The one rerank (`FlagReranker.rerank`): attach the model's
+    * `rerank_score`, keep the top k by (score desc, id asc, tiebreak…);
+    * `tiebreak` completes a total order where `idCol` alone doesn't. The
+    * score is a UDF calling `scoreBatch` with each row's passage: Catalyst
+    * sees through a UDF, so the scan under it reads only the columns the
+    * caller keeps. (A batched `mapPartitions` stage made the scan read every
+    * column; a batch over a window cost more than that saved.) */
   def rerank(candidates: DataFrame, idCol: String, passageCol: String,
-             queryText: String, k: Int, model: RerankModel): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val schema = candidates.schema.add("rerank_score", DoubleType, nullable = false)
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    val pIdx = candidates.schema.fieldIndex(passageCol)
-    val scored = candidates.mapPartitions { rows =>
-      val buf = rows.toVector
-      if (buf.isEmpty) Iterator.empty
-      else {
-        val scores = model.scoreBatch(queryText, buf.map(_.getString(pIdx)))
-        buf.iterator.zip(scores.iterator).map { case (r, s) =>
-          Row.fromSeq(r.toSeq :+ s)
-        }
-      }
-    }(enc)
-    scored.orderBy(col("rerank_score").desc, col(idCol).asc).limit(k)
+             queryText: String, k: Int, model: RerankModel,
+             tiebreak: Seq[String] = Nil): DataFrame = {
+    val score = udf(new UDF1[String, Double] {
+      def call(p: String): Double = model.scoreBatch(queryText, Seq(p)).head
+    }, DoubleType)
+    candidates.withColumn("rerank_score", score(col(passageCol)))
+      .orderBy(col("rerank_score").desc +: col(idCol).asc +: tiebreak.map(col(_).asc): _*)
+      .limit(k)
   }
 }

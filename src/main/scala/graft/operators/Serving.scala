@@ -1,43 +1,41 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.text
 
 /** Remaining query-time serving operators (SURVEY Q6, Q8-Q10, Q12).
   */
 object Serving {
 
-  /** Q6 rerank contract: score (query, passage) pairs, sort desc, truncate.
-    * The reference oversamples `max(k, min(3k, 20))` candidates before
-    * reranking (`document_service.py:388-391`). The model stage is pluggable;
-    * [[tokenOverlapScore]] is the deterministic stand-in (FlagEmbedding
-    * cross-encoder in production). */
+  /** Q6 rerank oversample: the reference reranks `max(k, min(3k, 20))`
+    * candidates (`document_service.py:388-391`); the model stage is
+    * [[ModelRerank.rerank]]. */
   def oversample(k: Int): Int = math.max(k, math.min(3 * k, 20))
 
-  /** Deterministic rerank score: |query tokens ∩ passage tokens| /
-    * |query tokens| — order-free, engine-reproducible. */
-  def tokenOverlapScore(queryText: String, passage: Column): Column = {
-    val qToks = queryText.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
-    if (qToks.isEmpty) lit(0.0)
-    else size(array_intersect(array_distinct(text.tokens(passage)),
-      array(qToks.map(lit(_)): _*))).cast("double") / qToks.length
+  /** Spark's ascending order for one sort-key value, nulls first:
+    * strings by UTF-8 bytes (Java's UTF-16 order differs for non-BMP
+    * text), floating point with NaN largest and -0.0 == 0.0, everything
+    * else by its natural order. */
+  def sqlCompare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+    case (x: Float, y: Float) => SQLOrderingUtil.compareFloats(x, y)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case _ => throw new IllegalArgumentException(
+      s"no driver-side order for sort key ${a.getClass.getName}")
   }
 
-  /** Rerank: attach score, keep top k by (score desc, id asc, tiebreak…).
-    * The reference's reranker sort is STABLE on the already-score-ordered
-    * candidate list, so ties resolve deterministically there; engine-side
-    * the caller supplies whatever extra columns (e.g. chunk number)
-    * complete a total order when `idCol` alone doesn't — a tied cut at
-    * rank k must never be partitioning-dependent. */
-  def rerank(candidates: DataFrame, idCol: String, passageCol: String,
-             queryText: String, k: Int,
-             tiebreak: Seq[String] = Nil): DataFrame =
-    candidates
-      .withColumn("rerank_score", tokenOverlapScore(queryText, col(passageCol)))
-      .orderBy(col("rerank_score").desc +: col(idCol).asc +:
-        tiebreak.map(col(_).asc): _*)
-      .limit(k)
+  /** Spark's `ORDER BY` on the driver: whether the first row sorts before
+    * the second, given each key's (first, second) values in turn; pass a
+    * descending key's pair swapped. */
+  def sortsBefore(keys: (Any, Any)*): Boolean =
+    keys.iterator.map { case (a, b) => sqlCompare(a, b) }.find(_ != 0).exists(_ < 0)
 
   /** Q10 batch get by composite id: join against a literal key set with
     * order-preserving dedup (`pgvector_store.py:509-570`). Broadcast — the

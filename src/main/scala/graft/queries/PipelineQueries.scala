@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Chunker, HashEmbedder, HashTranscriber, HtmlExtract, KnnSearch, Multimodal, Serving, Transcriber}
+import graft.operators.{Chunker, HashEmbedder, HashTranscriber, HtmlExtract, KnnSearch, ModelRerank,
+  Multimodal, Serving, TokenOverlapModel, Transcriber}
 
 /** End-to-end pipeline + serving coverage: ingest (chunk→embed) stats,
   * multimodal decode plumbing, rerank, batch-get, filename search.
@@ -456,7 +457,7 @@ object PipelineQueries {
       q, Serving.oversample(5), where = col("vec_id") =!= 0)
     val withText = hits.join(Tables.documents(spark, dir),
       hits("vec_id") === col("doc_id"))
-    Serving.rerank(withText, "doc_id", "text", RerankQuery, 5)
+    ModelRerank.rerank(withText, "doc_id", "text", RerankQuery, 5, TokenOverlapModel())
       .select(col("doc_id"), col("rerank_score"))
   }
 

@@ -400,7 +400,7 @@ object VectorQueries {
     * order but text chunks (overlap 1.0) win the rerank — so the row
     * catches a dispatcher that skips or misorders either stage. Rank ties
     * at the cut resolve on (doc, chunk), the total order
-    * [[graft.operators.Serving.rerank]]'s tiebreak argument exists for. */
+    * [[graft.operators.ModelRerank.rerank]]'s tiebreak argument exists for. */
   def dispatcherColpaliRerank(spark: SparkSession, dir: String): DataFrame = {
     val qvecs = Tables.embeddings(spark, dir)
       .filter(col("vec_id").isin(0L, 1L)).orderBy("vec_id")
@@ -2000,7 +2000,7 @@ object VectorQueries {
     // cosine against vec 0 → min_score 0.05 → top-15 oversample
     // (max(5, min(15, 20))) → token-overlap rerank over the query's 4
     // distinct tokens → top-5 by (rerank desc, id). The rerank model is
-    // the deterministic CI stand-in (Serving.tokenOverlapScore) replayed
+    // the deterministic CI stand-in (TokenOverlapModel) replayed
     // verbatim: |distinct passage tokens ∩ query tokens| / 4.
     "s5_dispatcher_rerank" ->
       """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),

@@ -8,7 +8,7 @@ import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
@@ -211,10 +211,11 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "hybrid serving call left a persisted RDD pinned")
   }
 
-  /** Runs `call` to its last row; returns the Spark jobs it started and
-    * the partition-less windows (single-task sorts of their whole input)
-    * in the physical plans it executed and in the frame it returned. */
-  private def jobsAndGlobalWindows(call: => DataFrame): (Seq[String], Seq[String]) = {
+  /** Runs `call` to its last row; returns the Spark jobs it started, the
+    * partition-less windows (single-task sorts of their whole input) in
+    * the physical plans it executed and in the frame it returned, and the
+    * pushed filters of the file scans it executed. */
+  private def jobsAndGlobalWindows(call: => DataFrame): (Seq[String], Seq[String], Seq[String]) = {
     val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[String]
     val plans = new ConcurrentLinkedQueue[SparkPlan]
@@ -241,7 +242,10 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val logicalWindows = out.queryExecution.optimizedPlan.collect {
       case w: logical.Window if w.partitionSpec.isEmpty => "Window"
     }
-    (jobs.asScala.toSeq, physical ++ logicalWindows)
+    val pushed = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+      case scan: FileSourceScanExec => scan.metadata.getOrElse("PushedFilters", "")
+    })
+    (jobs.asScala.toSeq, physical ++ logicalWindows, pushed)
   }
 
   test("job-count guard: a hybrid read runs <= 4 jobs, an mmr read 1, no global window") {
@@ -252,15 +256,15 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val table = ChunkTable(spark.read.parquet(dir))
     val req = RetrieveRequest("spark query engine chunk 0", k = 5, appId = Some("app1"))
     retrieveChunksHybrid(req, table).collect() // warm the embedder and codegen
-    val (hybridJobs, hybridWindows) = jobsAndGlobalWindows(retrieveChunksHybrid(req, table))
+    val (hybridJobs, hybridWindows, _) = jobsAndGlobalWindows(retrieveChunksHybrid(req, table))
     assert(hybridJobs.size <= 4, s"hybrid read ran ${hybridJobs.size} jobs: $hybridJobs")
     assert(hybridWindows.isEmpty, s"hybrid plan holds a partition-less window: $hybridWindows")
-    val (mmrJobs, mmrWindows) = jobsAndGlobalWindows(retrieveChunksDiverse(req, table))
+    val (mmrJobs, mmrWindows, _) = jobsAndGlobalWindows(retrieveChunksDiverse(req, table))
     assert(mmrJobs.size == 1, s"mmr read ran ${mmrJobs.size} jobs: $mmrJobs")
     assert(mmrWindows.isEmpty, s"mmr plan holds a partition-less window: $mmrWindows")
     // the guard sees the old plan shape: the full-outer-join RRF plan runs
     // more jobs and ranks in partition-less windows
-    val (refJobs, refWindows) =
+    val (refJobs, refWindows, _) =
       jobsAndGlobalWindows(HybridReference.retrieveChunksHybrid(req, table))
     assert(refJobs.size > 4 && refWindows.nonEmpty,
       s"guard is blind to the old plan: ${refJobs.size} jobs, windows $refWindows")
@@ -270,22 +274,77 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // pinned at the counts each arm ran before the arms shared one
     // candidate cut: dense 1, rerank 1, docs 1, multivector 1 — the
     // candidates' heap scan is the only job; the rerank cut, the doc-level
-    // aggregate and the final order run inside it
+    // aggregate and the final order run inside it. A padded read adds one
+    // job: the neighbour rows' scan, keyed by a pushed document_id IN-list
+    // (the join plan padding ran before took 5 jobs per read).
     val mvEmb = graft.operators.HashMultiVectorEmbedder(dim = 16)
     val dir = java.nio.file.Files.createTempDirectory("graft_serve_arms").toString + "/chunks"
-    mvEmb.embedMulti(chunkTable.df, "content", "mv").write.parquet(dir)
+    // every chunk flagged an image, so the multivector arm's padding pads
+    mvEmb.embedMulti(chunkTable.df, "content", "mv")
+      .withColumn("metadata", map_concat(col("metadata"), map(lit("is_image"), lit("true"))))
+      .write.parquet(dir)
     val table = ChunkTable(spark.read.parquet(dir))
     val req = RetrieveRequest("spark query engine chunk 0", k = 5, appId = Some("app1"))
+    val padded = req.copy(padding = 1)
     val arms = Seq[(String, Int, () => DataFrame)](
       ("dense", 1, () => retrieveChunks(req, table)),
       ("rerank", 1, () => retrieveChunks(req.copy(useReranking = true), table)),
       ("docs", 1, () => retrieveDocs(req, table)),
-      ("multivector", 1, () => retrieveChunksMultivector(req, table, "mv", mvEmb)))
+      ("multivector", 1, () => retrieveChunksMultivector(req, table, "mv", mvEmb)),
+      ("padded dense", 2, () => retrieveChunks(padded, table)),
+      ("padded dense+rerank", 2, () => retrieveChunks(padded.copy(useReranking = true), table)),
+      ("padded multivector", 2, () => retrieveChunksMultivector(padded, table, "mv", mvEmb)))
     arms.foreach { case (_, _, read) => read().collect() } // warm the embedders and codegen
     arms.foreach { case (arm, pinned, read) =>
-      val (jobs, windows) = jobsAndGlobalWindows(read())
+      val (jobs, windows, pushed) = jobsAndGlobalWindows(read())
       assert(jobs.size == pinned, s"$arm read ran ${jobs.size} jobs, pinned at $pinned: $jobs")
       assert(windows.isEmpty, s"$arm plan holds a partition-less window: $windows")
+      if (arm.startsWith("padded")) {
+        assert(read().filter(col("is_padding")).count() > 0, s"$arm read padded nothing")
+        assert(pushed.exists(_.contains("In(document_id,")),
+          s"$arm read's neighbour scan pushed no document_id IN-list: $pushed")
+      }
+    }
+  }
+
+  test("a reranked read scans only the columns its caller keeps") {
+    // the rerank must stay visible to Catalyst's column pruning: an opaque
+    // stage over the candidates makes the scan read every column, the
+    // multivectors included
+    val mvEmb = graft.operators.HashMultiVectorEmbedder(dim = 16)
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve_prune").toString + "/chunks"
+    mvEmb.embedMulti(chunkTable.df, "content", "mv").write.parquet(dir)
+    val table = ChunkTable(spark.read.parquet(dir))
+    val req = RetrieveRequest("spark query engine chunk 0", k = 3, appId = Some("app1"),
+      useReranking = true)
+    val out = retrieveChunks(req, table).select("document_id", "chunk_number", "content", "score")
+    assert(out.collect().nonEmpty)
+    val read = collect(out.queryExecution.executedPlan) {
+      case scan: FileSourceScanExec => scan.requiredSchema.fieldNames.toSet
+    }
+    assert(read == Seq(Set("document_id", "chunk_number", "content", "app_id", "embedding")),
+      s"reranked read's scan columns: $read")
+  }
+
+  test("request gate: negative k or padding is refused on every arm; k = 0 reads empty") {
+    val mvEmb = graft.operators.HashMultiVectorEmbedder(dim = 16)
+    val table = ChunkTable(mvEmb.embedMulti(chunkTable.df, "content", "mv"))
+    val arms = Seq[(String, RetrieveRequest => DataFrame)](
+      ("dense", retrieveChunks(_, table)),
+      ("docs", retrieveDocs(_, table)),
+      ("multivector", retrieveChunksMultivector(_, table, "mv", mvEmb)),
+      ("hybrid", retrieveChunksHybrid(_, table)),
+      ("mmr", retrieveChunksDiverse(_, table)))
+    val req = RetrieveRequest("spark query engine", k = 3)
+    arms.foreach { case (arm, read) =>
+      Seq("k" -> req.copy(k = -1), "padding" -> req.copy(padding = -2)).foreach {
+        case (field, bad) =>
+          val e = intercept[IllegalArgumentException](read(bad).collect())
+          assert(e.getMessage.contains(s"$field must be non-negative"), s"$arm: ${e.getMessage}")
+      }
+      val empty = read(req.copy(k = 0))
+      assert(empty.collect().isEmpty, s"$arm read rows at k = 0")
+      assert(empty.columns.toSeq == read(req).columns.toSeq, s"$arm changed its columns at k = 0")
     }
   }
 

@@ -13,8 +13,8 @@ import org.json4s.jackson.JsonMethods
 import graft.operators.{HttpMultiVectorEmbedder, HttpReranker, ModelRerank, TokenOverlapModel}
 
 /** Multivector (ColPali-wire) embedding client + HTTP cross-encoder rerank
-  * client against local stub servers, plus the deterministic
-  * TokenOverlapModel equivalence with the Column-based rerank path. */
+  * client against local stub servers, plus the semantics of the
+  * deterministic TokenOverlapModel the serving facade reranks with. */
 class HttpModelClientsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -132,18 +132,55 @@ class HttpModelClientsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scores.distinct.size > 1)
   }
 
-  test("ModelRerank with TokenOverlapModel matches the Column-based Serving.rerank") {
+  test("TokenOverlapModel: case, whitespace, repeats, empty, null and non-BMP text; the oracle formula") {
+    val m = TokenOverlapModel()
+    def score(q: String, p: String): Double = m.scoreBatch(q, Seq(p)).head
+    // case folds with Locale.ROOT, whatever the JVM's default locale: under
+    // tr, "TITLE".toLowerCase() is "tıtle" (dotless i)
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try assert(score("TITLE Index", "title INDEX") == 1.0)
+    finally java.util.Locale.setDefault(saved)
+    // tokens are whitespace runs: tabs and newlines separate, punctuation sticks
+    assert(score("fast table scan", "fast\ttable\n\nscan") == 1.0)
+    assert(score("scan merge", "a scan, then merge.") == 0.0)
+    assert(score("scan, merge.", "a scan, then merge.") == 1.0)
+    // repeated tokens count once on both sides
+    assert(score("scan scan merge", "scan scan scan") == 0.5)
+    // an empty query scores every passage 0.0; a null passage scores 0.0
+    assert(m.scoreBatch("", Seq("scan", null)) == Seq(0.0, 0.0))
+    assert(m.scoreBatch(" \t ", Seq("scan")) == Seq(0.0))
+    assert(score("scan", null) == 0.0)
+    // non-BMP text: surrogate pairs stay whole and fold case (U+10400 -> U+10428)
+    assert(score("\uD801\uDC00 \uD83D\uDE00", "\uD801\uDC28 x \uD83D\uDE00") == 1.0)
+    assert(score("\uD83D\uDE00", "\uD83D\uDE01") == 0.0)
+    // the facade's reranking of the removed Column-twin comparison's input
     import spark.implicits._
     val candidates = Seq(
       (1L, "the fast table scan"),
       (2L, "slow row stream"),
       (3L, "fast table scan merge sort filter")).toDF("doc_id", "content")
-    val query = "fast table scan merge"
-    val viaModel = ModelRerank.rerank(candidates, "doc_id", "content", query, 3,
-      TokenOverlapModel())
+    val ranked = ModelRerank.rerank(candidates, "doc_id", "content",
+      "fast table scan merge", 3, TokenOverlapModel())
       .select("doc_id", "rerank_score").as[(Long, Double)].collect().toSeq
-    val viaColumn = graft.operators.Serving.rerank(candidates, "doc_id", "content", query, 3)
-      .select("doc_id", "rerank_score").as[(Long, Double)].collect().toSeq
-    assert(viaModel == viaColumn)
+    assert(ranked == Seq((3L, 1.0), (1L, 0.75), (2L, 0.0)))
+    // the r1_rerank oracle's formula, stated apart from the model:
+    // |distinct passage tokens ∩ distinct query tokens| / |distinct query tokens|
+    def toks(s: String): Seq[String] =
+      s.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").split(" ")
+        .filter(_.nonEmpty).toSeq
+    def oracle(q: String, p: String): Double = {
+      val qs = toks(q).distinct
+      if (qs.isEmpty) 0.0 else toks(p).distinct.count(qs.contains).toDouble / qs.length
+    }
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("Scan", "scan", "MERGE", "table,", "\uD83D\uDE00", "fast", "the", "")
+    val seps = Seq(" ", "  ", "\t", "\n", " \r\n ")
+    def text(): String = Seq.fill(rnd.nextInt(7))(vocab(rnd.nextInt(vocab.size)))
+      .map(_ + seps(rnd.nextInt(seps.size))).mkString
+    (1 to 300).foreach { _ =>
+      val (q, p) = (text(), text())
+      assert(score(q, p) == oracle(q, p), s"query '$q', passage '$p'")
+    }
   }
 }
