@@ -15,9 +15,9 @@ import graft.functions.{TextHashExpressions, VectorExpressions}
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
   * or per-session with `SparkSession.builder().withExtensions(new
-  * GraftExtensions)`. Unlike `vec.registerAll` (temp functions on one
-  * session), injection applies to every session built from the config —
-  * the deployment shape a shared 1000-executor cluster uses.
+  * GraftExtensions)`. This is the one SQL registration path: injection
+  * applies to every session built from the config — the deployment shape
+  * a shared 1000-executor cluster uses.
   *
   * Registered surface (all codegen'd or tight-loop expressions, SURVEY
   * §2.9): cosine_sim, dot_product, binary_quantize, hamming,

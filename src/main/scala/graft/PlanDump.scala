@@ -19,12 +19,14 @@ object PlanDump {
     "plan_id=\\d+".r -> "plan_id=n",
     "RDD\\[\\d+\\]".r -> "RDD[n]",
     "Broadcast\\(\\d+\\)".r -> "Broadcast(n)",
+    "(lambda \\w+)_\\d+".r -> "$1_N",
     "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+".r -> "\\$Lambda\\$n",
     "(\\[+(?:[BCDFIJSZ]|L[\\w.$]+;))@\\p{XDigit}+".r -> "$1@h",
     "(graft_p7_index_layout)\\d+".r -> "$1n")
 
   /** `plan` with the tokens that differ per planning masked: expression,
-    * `plan_id`, RDD and broadcast ids, JVM identity hashes (lambdas,
+    * `plan_id`, RDD and broadcast ids, Catalyst's JVM-global lambda
+    * variable counter (`lambda x_164`), JVM identity hashes (lambdas,
     * arrays) and p7's fresh temp directory. */
   def normalize(plan: String): String =
     Masks.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }

@@ -60,7 +60,7 @@ object ScaleProbe {
   // v12_pq_adc / v14_sq_adc are deliberately NOT probed: the registry
   // queries rebuild their codebook/bounds + encode the corpus per run
   // (index-time work), which would mismeasure scaling the same way
-  // round-1's v7 did — Bench times the prepared ADC-scan closures instead.
+  // round-1's v7 did — Bench times their ADC-scan probes instead.
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")

@@ -692,19 +692,4 @@ object vec {
     toCol(PqEncode(toExpr(v), codebooks))
   def pq_adc_score(codes: Column, lut: Array[Double], k: Int): Column =
     toCol(PqAdcScore(toExpr(codes), lut, k))
-
-  /** pgvector cosine score mapping: score = 1 - distance/2 with distance =
-    * 1 - cosine -> score = (1 + cosine) / 2 (`pgvector_store.py:499`). */
-  def cosine_score(a: Column, b: Column): Column =
-    (org.apache.spark.sql.functions.lit(1.0) + cosine_sim(a, b)) / 2.0
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim", e => CosineSimilarity(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product", e => DotProduct(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("binary_quantize", e => BinaryQuantize(e.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming", e => HammingDistance(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("max_sim_binary", e => MaxSimBinary(e(0), e(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("max_sim_float", e => MaxSimFloat(e(0), e(1)), "scala_udf")
-  }
 }

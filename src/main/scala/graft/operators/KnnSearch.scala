@@ -22,8 +22,7 @@ import graft.functions.{vec, TopKAggregate}
   */
 object KnnSearch {
 
-  /** Score column for a literal query vector (cosine; pgvector's
-    * `1 - d/2` mapping is available via [[vec.cosine_score]]). */
+  /** Score column for a literal query vector (cosine). */
   def cosineTo(vecCol: Column, query: Array[Float]): Column =
     vec.cosine_sim(vecCol, lit(query))
 

@@ -86,8 +86,8 @@ object Layout {
     (init +: steps).mkString(",\n")
   }
 
-  /** Hilbert bucket assignment + per-bucket bounds — [[zorderBuckets]] /
-    * [[zorderSummary]]'s shape on the Hilbert index (hkey ∈ [0, 4^bits)). */
+  /** Hilbert bucket assignment — [[zorderBuckets]]'s shape on the Hilbert
+    * index (hkey ∈ [0, 4^bits)). */
   def hilbertBuckets(df: DataFrame, aCol: String, bCol: String,
                      bits: Int, log2Buckets: Int): DataFrame = {
     require(log2Buckets <= 2 * bits, "more buckets than hkey bits")
@@ -104,18 +104,6 @@ object Layout {
     df.withColumn("zkey", z)
       .withColumn("bucket", shiftright(col("zkey"), 2 * bits - log2Buckets))
   }
-
-  /** Layout-quality summary per bucket: row count + min/max of each
-    * dimension. Tight per-bucket ranges in BOTH columns are exactly what
-    * lets a scan prune files on either predicate — this is the number a
-    * layout job reports. */
-  def zorderSummary(df: DataFrame, aCol: String, bCol: String,
-                    bits: Int, log2Buckets: Int): DataFrame =
-    zorderBuckets(df, aCol, bCol, bits, log2Buckets)
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_rows"),
-        min(aCol).as("a_min"), max(aCol).as("a_max"),
-        min(bCol).as("b_min"), max(bCol).as("b_max"))
 
   /** Small-file compaction PLANNER over a table's file-stats listing —
     * the lake-maintenance job every 100 TB parquet/Delta deployment

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for non-algebraic aggregations.
@@ -30,19 +30,6 @@ object Skew {
       .agg(collect_list(col(valueCol)).as("__partial"))
       .groupBy(gc: _*)
       .agg(flatten(collect_list(col("__partial"))).as("values"))
-  }
-
-  /** Generic two-stage aggregation: `partial` runs per (key, salt),
-    * `merge` combines the partials per key. Caller guarantees
-    * merge(partial(a), partial(b)) == partial(a ++ b) semantics. */
-  def saltedAgg(df: DataFrame, groupCols: Seq[String], salts: Int)(
-      partial: Column, merge: Column => Column): DataFrame = {
-    val gc = groupCols.map(col)
-    df.withColumn("__salt", pmod(spark_partition_id(), lit(salts)))
-      .groupBy((gc :+ col("__salt")): _*)
-      .agg(partial.as("__partial"))
-      .groupBy(gc: _*)
-      .agg(merge(col("__partial")).as("agg"))
   }
 
   /** Join-key SKEW DIAGNOSTIC — the report an operator (or an engineer)

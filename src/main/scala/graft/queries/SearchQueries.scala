@@ -176,18 +176,6 @@ object SearchQueries {
       .orderBy("doc_id")
   }
 
-  /** Bench-only factory: the inverted index (postings + df + stats) is an
-    * offline build at scale (written bucketed by term); the closure times
-    * the steady-state term-pruned probe — same treatment as v7/v12/t24. */
-  def bm25Prepared(spark: SparkSession, dir: String): () => DataFrame = {
-    val idx = FullText.buildIndex(Tables.documents(spark, dir), "doc_id", "text")
-    val cached = FullText.Bm25Index(
-      idx.postings.persist(), idx.dfreq.persist(), idx.stats.persist())
-    cached.postings.count(); cached.dfreq.count(); cached.stats.count()
-    () => FullText.queryIndex(cached, Terms, k = 10)
-      .select(col("doc_id"), round(col("score"), 6).as("bm25"), col("n_terms"))
-  }
-
   /** Shared BM25 SQL arm: tokenization identical to t1's norm/split, idf =
     * ln(1 + (N - df + 0.5)/(df + 0.5)), same operation shapes as
     * [[FullText.bm25]] so doubles agree before the 6-dp rounding. */

@@ -34,7 +34,7 @@ object TextQueries {
     "t9_lsh_keeplist" -> ((s, d) => lshKeepList(s, d)),
     "t17_components" -> ((s, d) => components(s, d)),
     "t23_keep_best" -> ((s, d) => keepBest(s, d)),
-    "t24_lsh_match" -> ((s, d) => lshMatch(s, d)),
+    "t24_lsh_match" -> ((s, d) => lshMatch(s, d)()),
     "t26_dup_spans" -> ((s, d) => dupSpans(s, d)),
     "t29_remove_dup_spans" -> ((s, d) => removeDupSpans(s, d)),
     "t33_paragraph_dedup" -> ((s, d) => paragraphDedup(s, d)),
@@ -144,15 +144,20 @@ object TextQueries {
 
   /** Incoming-vs-corpus LSH matching (the incremental-crawl dedup pass):
     * every 10th doc plays the "new batch", the rest are the banded corpus
-    * index; each incoming doc reports its best near-dup match. */
-  def lshMatch(spark: SparkSession, dir: String): DataFrame = {
+    * index; each incoming doc reports its best near-dup match. The band
+    * index is built and cut once; the returned probe is the per-batch
+    * match (banding the incoming docs + the index equi-join). */
+  def lshMatch(spark: SparkSession, dir: String): () => DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val idx = Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-    Dedup.lshMatchAgainst(docs.filter(col("doc_id") % 10 === 0), idx,
-      "doc_id", "text")
-      .select(col("id").as("doc_id"), col("corpus_id"),
-        round(col("est_jaccard"), 4).as("est_jaccard"))
-      .orderBy("doc_id")
+    val index = graft.StageCut(
+      Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"),
+      "lshMatch.index")
+    () =>
+      Dedup.lshMatchAgainst(docs.filter(col("doc_id") % 10 === 0), index,
+        "doc_id", "text")
+        .select(col("id").as("doc_id"), col("corpus_id"),
+          round(col("est_jaccard"), 4).as("est_jaccard"))
+        .orderBy("doc_id")
   }
 
   /** Quality-keeper dedup: within each transitive near-dup cluster (t17's
@@ -375,22 +380,6 @@ object TextQueries {
     Dedup.containmentPairs(corpus, "doc_id", "text",
         shingleWords = 3, sampleM = 8, dfCap = 50, thresholdPpm = 800000L)
       .orderBy("small_id", "big_id")
-  }
-
-  /** Bench-only factory: the corpus band index is an offline build at scale
-    * (written partitioned by band_key); the closure times the per-batch
-    * match — banding the incoming docs + the index equi-join. */
-  def lshMatchPrepared(spark: SparkSession, dir: String): () => DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val idx = Dedup.bandIndex(docs.filter(col("doc_id") % 10 =!= 0),
-      "doc_id", "text").persist()
-    idx.count()
-    () =>
-      Dedup.lshMatchAgainst(docs.filter(col("doc_id") % 10 === 0), idx,
-        "doc_id", "text")
-        .select(col("id").as("doc_id"), col("corpus_id"),
-          round(col("est_jaccard"), 4).as("est_jaccard"))
-        .orderBy("doc_id")
   }
 
   /** Winnowing fingerprints (MOSS local fingerprinting): every selected

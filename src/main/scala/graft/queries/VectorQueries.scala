@@ -26,14 +26,14 @@ object VectorQueries {
     "v4_quantize_hamming" -> ((s, d) => quantizeHamming(s, d)),
     "v5_maxsim_float" -> ((s, d) => maxSimFloat(s, d)),
     "v6_maxsim_binary" -> ((s, d) => maxSimBinary(s, d)),
-    "v7_ivf_knn" -> ((s, d) => ivfKnn(s, d)),
+    "v7_ivf_knn" -> ((s, d) => ivfKnn(s, d)()),
     "v8_ivf_exact" -> ((s, d) => ivfExact(s, d)),
     "v9_fde_twophase" -> ((s, d) => fdeTwoPhase(s, d)),
     "v10_emb_lsh_neardups" -> ((s, d) => embLshNearDups(s, d)),
-    "v11_fde_ivf" -> ((s, d) => fdeIvf(s, d)),
-    "v12_pq_adc" -> ((s, d) => pqAdc(s, d)),
+    "v11_fde_ivf" -> ((s, d) => fdeIvf(s, d)()),
+    "v12_pq_adc" -> ((s, d) => pqAdc(s, d)()),
     "v13_ivfpq" -> ((s, d) => ivfPq(s, d)),
-    "v14_sq_adc" -> ((s, d) => sqAdc(s, d)),
+    "v14_sq_adc" -> ((s, d) => sqAdc(s, d)()),
     "v15_ivfsq" -> ((s, d) => ivfSq(s, d)),
     "v16_range_search" -> ((s, d) => rangeSearch(s, d)),
     "v17_ivfpq_residual" -> ((s, d) => ivfPqResidual(s, d)),
@@ -664,32 +664,40 @@ object VectorQueries {
     * nearest-centroid encode (first-index tiebreak) and the ADC fold
     * bit-for-bit, value-gating the whole PQ pipeline's math. The trained
     * (Lloyd-refined) codebook only moves centroid VALUES — same encode,
-    * same ADC, same plan — and its recall is PqIndexSpec's gate. */
-  def pqAdc(spark: SparkSession, dir: String): DataFrame = {
+    * same ADC, same plan — and its recall is PqIndexSpec's gate.
+    * Codebook and corpus codes are the index, built and cut once; the
+    * returned probe is the ADC scan over the cut codes. */
+  def pqAdc(spark: SparkSession, dir: String): () => DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val model = PqIndex.sampledModel(e, "embedding", "vec_id", m = 8, k = 16)
     val q = queryVec(spark, dir)
-    PqIndex.topN(
-      PqIndex.encode(e, "embedding", model).filter(col("vec_id") =!= 0),
-      model, "vec_id", q, n = 20)
-      .select(col("vec_id"), array_join(col("pq_code"), ",").as("codes"),
-        col("adc_score"))
+    val index = graft.StageCut(
+      PqIndex.encode(e, "embedding", model).select("vec_id", "pq_code"),
+      "pqAdc.index")
+    () =>
+      PqIndex.topN(index.filter(col("vec_id") =!= 0), model, "vec_id", q, n = 20)
+        .select(col("vec_id"), array_join(col("pq_code"), ",").as("codes"),
+          col("adc_score"))
   }
 
   /** SQ8 scalar quantization + ADC ranking (the [[graft.operators.SqIndex]]
     * pipeline, v12's sibling at the no-codebook tier): per-dim [min,max]
     * trained on the full table in one Summarizer pass, floor-clamp 8-bit
     * encode, bin-center ADC scoring. The oracle replays train + encode +
-    * score bit-for-bit — codes and raw double scores both hash-gated. */
-  def sqAdc(spark: SparkSession, dir: String): DataFrame = {
+    * score bit-for-bit — codes and raw double scores both hash-gated.
+    * Train + encode are the index, built and cut once; the returned probe
+    * is the ADC scan + top-k heap over the cut codes. */
+  def sqAdc(spark: SparkSession, dir: String): () => DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val model = SqIndex.train(e, "embedding")
     val q = queryVec(spark, dir)
-    SqIndex.topN(
-      SqIndex.encode(e, "embedding", model).filter(col("vec_id") =!= 0),
-      model, "vec_id", q, n = 20)
-      .select(col("vec_id"), array_join(col("sq_code"), ",").as("codes"),
-        col("adc_score"))
+    val index = graft.StageCut(
+      SqIndex.encode(e, "embedding", model).select("vec_id", "sq_code"),
+      "sqAdc.index")
+    () =>
+      SqIndex.topN(index.filter(col("vec_id") =!= 0), model, "vec_id", q, n = 20)
+        .select(col("vec_id"), array_join(col("sq_code"), ",").as("codes"),
+          col("adc_score"))
   }
 
   /** Range search (FAISS range_search shape): every vector with cosine to
@@ -809,21 +817,24 @@ object VectorQueries {
     * MLlib coarse quantizer stays the quality path: IvfIndexSpec pins its
     * full-probe exactness, v8/v13/v15/v17 bridge it, v19 pins its recall
     * curve. Emits (vec_id, cluster_id, score, rank) — the verdict's
-    * suggested replayable shape. */
-  def ivfKnn(spark: SparkSession, dir: String): DataFrame = {
+    * suggested replayable shape. The assigned corpus is the index, built
+    * and cut once; the returned probe is the probe-pruned top-10. */
+  def ivfKnn(spark: SparkSession, dir: String): () => DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = queryVec(spark, dir)
     val (indexed, model) = IvfIndex.buildSeeded(
       Tables.embeddings(spark, dir), "embedding", "vec_id", lists = 16)
+    val index = graft.StageCut(indexed, "ivfKnn.index")
     val probed = IvfIndex.probeSeeded(model, q, nprobe = 8)
-    KnnSearch.topK(
-        indexed.filter(col("cluster_id").isin(probed: _*)),
-        "embedding", "vec_id", q, k = 10, where = col("vec_id") =!= 0)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("vec_id"))))
-      .select(col("vec_id"), col("cluster_id"),
-        round(col("score"), 6).as("score"), col("rank").cast("long").as("rank"))
-      .orderBy("rank")
+    () =>
+      KnnSearch.topK(
+          index.filter(col("cluster_id").isin(probed: _*)),
+          "embedding", "vec_id", q, k = 10, where = col("vec_id") =!= 0)
+        .withColumn("rank", row_number().over(
+          Window.orderBy(col("score").desc, col("vec_id"))))
+        .select(col("vec_id"), col("cluster_id"),
+          round(col("score"), 6).as("score"), col("rank").cast("long").as("rank"))
+        .orderBy("rank")
   }
 
   /** The approximation-QUALITY gate for the v7 nprobe path, in-registry:
@@ -1164,8 +1175,11 @@ object VectorQueries {
     * Full-probe (nprobe == lists) makes phase 1 provably cover the corpus,
     * so — like v8's exactness bridge — the output must equal exact MaxSim
     * top-k, which the oracle computes directly. Dropping nprobe below
-    * lists turns on the pruning without changing any plan shape. */
-  def fdeIvf(spark: SparkSession, dir: String): DataFrame = {
+    * lists turns on the pruning without changing any plan shape.
+    * Multivector assembly, FDE encoding and the coarse quantizer are the
+    * index, built and cut once; the returned probe is probe → oversampled
+    * candidates → exact MaxSim rescore. */
+  def fdeIvf(spark: SparkSession, dir: String): () => DataFrame = {
     import graft.functions.FdeEncoder
     val k = 3
     val oversample = math.min(10 * k, 75) // reference fetch cap
@@ -1175,86 +1189,10 @@ object VectorQueries {
     val qfde = enc.encodeColumn(mv.filter(col("label") === 0), "vecs", "qfde",
       isQuery = true).select("qfde").head().getSeq[Float](0).toArray
     val (indexed, model) = IvfIndex.build(docs, "fde", lists = 4)
-    val cand = IvfIndex.query(indexed, model, "fde", "label", qfde,
-      k = oversample, nprobe = 4)
-    val q = mv.filter(col("label") === 0).select(col("vecs").as("qvecs"))
-    cand.crossJoin(broadcast(q))
-      .select(col("label").cast("long").as("label"),
-        round(vec.max_sim_float(col("vecs"), col("qvecs")), 4).as("maxsim"))
-      .orderBy(col("maxsim").desc, col("label"))
-      .limit(k)
-  }
-
-  /** Bench-only factory: build the IVF index ONCE (at scale the build is an
-    * offline job writing a cluster-partitioned table) and return the
-    * probe-pruned query as a closure — so the bench times steady-state
-    * query latency, not the per-run k-means build. */
-  def ivfKnnPrepared(spark: SparkSession, dir: String): () => DataFrame = {
-    val q = queryVec(spark, dir)
-    val (indexed, model) = IvfIndex.buildSeeded(
-      Tables.embeddings(spark, dir), "embedding", "vec_id", lists = 16)
-    val cached = indexed.persist()
-    cached.count()
-    val probed = IvfIndex.probeSeeded(model, q, nprobe = 8)
-    () =>
-      KnnSearch.topK(
-          cached.filter(col("cluster_id").isin(probed: _*)),
-          "embedding", "vec_id", q, k = 10, where = col("vec_id") =!= 0)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-  }
-
-  /** Bench-only factory: codebook build + corpus encode are index-time
-    * work (offline at scale); the closure times the steady-state ADC scan
-    * over the cached 8-codes-per-row table. */
-  def pqAdcPrepared(spark: SparkSession, dir: String): () => DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val model = PqIndex.sampledModel(e, "embedding", "vec_id", m = 8, k = 16)
-    val q = queryVec(spark, dir)
-    val encoded = PqIndex.encode(e, "embedding", model)
-      .filter(col("vec_id") =!= 0)
-      .select("vec_id", "pq_code").persist()
-    encoded.count()
-    () =>
-      PqIndex.topN(encoded, model, "vec_id", q, n = 20)
-        .select(col("vec_id"), array_join(col("pq_code"), ",").as("codes"),
-          col("adc_score"))
-  }
-
-  /** Bench-only factory: SQ8 train + encode are index-build work; the
-    * probe is the ADC scan + TakeOrdered over the persisted codes. */
-  def sqAdcPrepared(spark: SparkSession, dir: String): () => DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val model = SqIndex.train(e, "embedding")
-    val q = queryVec(spark, dir)
-    val encoded = SqIndex.encode(e, "embedding", model)
-      .filter(col("vec_id") =!= 0)
-      .select("vec_id", "sq_code").persist()
-    encoded.count()
-    () =>
-      SqIndex.topN(encoded, model, "vec_id", q, n = 20)
-        .select(col("vec_id"), array_join(col("sq_code"), ",").as("codes"),
-          col("adc_score"))
-  }
-
-  /** Bench-only factory for the FDE→IVF path: multivector assembly, FDE
-    * encoding and the coarse quantizer are index-build work; the returned
-    * closure is probe → oversampled candidates → exact MaxSim rescore. */
-  def fdeIvfPrepared(spark: SparkSession, dir: String): () => DataFrame = {
-    import graft.functions.FdeEncoder
-    val k = 3
-    val oversample = math.min(10 * k, 75)
-    val mv = labelMultivectors(spark, dir)
-    val enc = FdeEncoder(inputDim = 64, reps = 20, ksim = 5, projDim = 16)
-    val docs = enc.encodeColumn(mv, "vecs", "fde", isQuery = false)
-    val qfde = enc.encodeColumn(mv.filter(col("label") === 0), "vecs", "qfde",
-      isQuery = true).select("qfde").head().getSeq[Float](0).toArray
-    val (indexed, model) = IvfIndex.build(docs, "fde", lists = 4)
-    val cached = indexed.persist()
-    cached.count()
+    val index = graft.StageCut(indexed, "fdeIvf.index")
     val q = mv.filter(col("label") === 0).select(col("vecs").as("qvecs"))
     () =>
-      IvfIndex.query(cached, model, "fde", "label", qfde, k = oversample, nprobe = 4)
+      IvfIndex.query(index, model, "fde", "label", qfde, k = oversample, nprobe = 4)
         .crossJoin(broadcast(q))
         .select(col("label").cast("long").as("label"),
           round(vec.max_sim_float(col("vecs"), col("qvecs")), 4).as("maxsim"))

@@ -48,22 +48,10 @@ object IngestPipeline {
       .drop("__m", jsonCol)
   }
 
-  /** S4/S5 front door: raw file rows (idCol, filename, bytes) run through
-    * the native parser dispatch (xlsx/docx/pptx/pdf/plain,
-    * [[graft.operators.DocParser]]) into the batch pipeline — the Spark
+  /** S4/S5 front door: raw file rows (idCol, filename, bytes) through the
+    * graded deep-parse ladder (`ingestion_worker.py:777-905`) — the Spark
     * form of `_parse_document` feeding the worker
-    * (`morphik_parser.py:586-651`). A different converter (reference:
-    * Docling/parse-API) plugs in via `stage`. */
-  def processFiles(files: DataFrame, cfg: Config = Config(),
-                   stage: graft.operators.DocParser.Stage =
-                     graft.operators.DocParser.NativeStage): DataFrame =
-    processBatch(
-      graft.operators.DocParser.parseColumn(files, "filename", "bytes", cfg.textCol,
-        stage),
-      cfg)
-
-  /** S4 front door with the graded deep-parse ladder
-    * (`ingestion_worker.py:777-905`): parse with fallback rungs
+    * (`morphik_parser.py:586-651`): parse with fallback rungs
     * (native → text decode → deep stage → accept-but-mark), run the batch
     * pipeline on whatever text survived, and emit status rows carrying the
     * extraction marks. Every document COMPLETES — a no-content doc is
@@ -73,7 +61,9 @@ object IngestPipeline {
     *
     * Returns (chunks, status). Callers running both outputs should
     * persist/cache the parsed frame's lineage or write chunks first (as
-    * [[runStreaming]] does) — the ladder re-executes otherwise. */
+    * [[runStreaming]] does) — the ladder re-executes otherwise. A
+    * different converter (reference: Docling/parse-API) plugs in via
+    * `stage`. */
   def processFilesWithFallback(files: DataFrame, cfg: Config = Config(),
       deep: graft.operators.DocParser.DeepStage = graft.operators.DocParser.NoDeepStage,
       stage: graft.operators.DocParser.Stage = graft.operators.DocParser.NativeStage)

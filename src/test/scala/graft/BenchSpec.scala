@@ -1,11 +1,33 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The previous-artifact parse behind SPARK_GRAFT_PREV_BENCH: a committed
   * artifact may be one pretty-printed JSON document or slim + full JSON
-  * lines, and only the full object carries the per-query map. */
+  * lines, and only the full object carries the per-query map. Also pins
+  * that every index-backed row Bench prepares times the registry row's own
+  * body. */
 class BenchSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  test("every prepared probe returns its registry row: same columns, rows and order") {
+    val dir = "/root/testdata/sf0.001"
+    assert(Bench.preparedFactories.nonEmpty)
+    for ((name, prepare) <- Bench.preparedFactories) {
+      val probe = prepare(spark, dir)()
+      val row = SparkEntry.baseQueries(name)(spark, dir)
+      assert(probe.columns.toSeq == row.columns.toSeq, s"$name: columns differ")
+      val (got, want) = (probe.collect().toSeq, row.collect().toSeq)
+      assert(want.nonEmpty, s"$name: the registry row is empty")
+      assert(got == want, s"$name: rows or order differ:\n$got\n----\n$want")
+    }
+  }
 
   test("parsePrev reads a pretty-printed artifact") {
     val text =

@@ -143,7 +143,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     assert(hits == Seq(1L))
   }
 
-  test("processFiles parses real containers (xlsx/pdf/txt) into the chunk pipeline") {
+  test("processFilesWithFallback parses real containers (xlsx/pdf/txt) to chunks") {
     val files = Seq(
       (1L, "a.xlsx", graft.sources.OfficeFixtures.xlsx(Seq(
         "S" -> Seq(Seq("alpha", "beta"), Seq("gamma", "delta"))))),
@@ -152,7 +152,7 @@ class IngestPipelineSpec extends AnyFunSuite {
       (3L, "c.txt", "plain text body".getBytes("UTF-8")),
       (4L, "broken.docx", Array[Byte](9, 9, 9))  // parse failure -> no chunks
     ).toDF("doc_id", "filename", "bytes")
-    val chunks = IngestPipeline.processFiles(files, cfg)
+    val (chunks, _) = IngestPipeline.processFilesWithFallback(files, cfg)
     val byDoc = chunks.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
     assert(byDoc.getOrElse(1L, 0L) > 0 && byDoc.getOrElse(2L, 0L) > 0
       && byDoc.getOrElse(3L, 0L) > 0)

@@ -127,11 +127,12 @@ class PlanGuardSpec extends AnyFunSuite {
   }
 
   test("PlanDump: two dumps of p7 and of a lambda-carrying plan are byte-identical") {
+    def raw(q: String) =
+      SparkEntry.queries(q)(spark, dir).queryExecution.explainString(FormattedMode)
     // planned twice in one session, the raw text differs in expression
     // ids, a UDF lambda's identity hash and p7's temp directory
     for (q <- Seq("p7_index_layout", "c2_chunks_recursive")) {
-      def raw = SparkEntry.queries(q)(spark, dir).queryExecution.explainString(FormattedMode)
-      val (a, b) = (raw, raw)
+      val (a, b) = (raw(q), raw(q))
       assert(a != b, s"$q: raw dumps already agree, the masks go untested")
       assert(PlanDump.normalize(a) == PlanDump.normalize(b),
         s"$q: normalized dumps differ:\n${PlanDump.normalize(a)}\n----\n${PlanDump.normalize(b)}")
@@ -141,6 +142,17 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(lambda.contains("$Lambda$n") && !lambda.contains("/0x"),
       s"lambda class and identity hash not masked:\n$lambda")
     assert(PlanDump.plan(spark, dir, "p7_index_layout").contains("graft_p7_index_layoutn"))
+    // Catalyst names Column lambda variables from one JVM-global counter,
+    // so v6 planned again after v5 (both carry lambdas) reads later numbers
+    def counters(p: String) = "lambda x_\\d+".r.findAllIn(p).toSet
+    val first = raw("v6_maxsim_binary")
+    assert(raw("v5_maxsim_float").contains("lambda x_"))
+    val second = raw("v6_maxsim_binary")
+    assert(counters(first).nonEmpty && counters(first) != counters(second),
+      s"the lambda counter did not move between the dumps:\n$first\n----\n$second")
+    assert(PlanDump.normalize(first) == PlanDump.normalize(second),
+      s"normalized lambda dumps differ:\n${PlanDump.normalize(first)}\n----\n${PlanDump.normalize(second)}")
+    assert(PlanDump.normalize(first).contains("lambda x_N"))
   }
 
   test("t28_curation_e2e: stage cuts present — the dedup chain is checkpointed, not re-derived") {
