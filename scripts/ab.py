@@ -18,7 +18,9 @@ any commit names; `git stash create` names an uncommitted working tree.
 For each end-to-end metric listed in BENCHMARK.json it prints each side's
 median [q1, q3], the change's median relative to the base, the number of
 pairs the change won, and whether the change's median is inside the
-metric's bound; and per side the share of failed operations. Only
+metric's bound; and per side the share of failed operations. A metric whose
+base runs spread wider than its bound (interquartile range over median) is
+`unresolved`, unless every change run beats every base run. Only
 `perfbench/run.py` is called: the benchmark itself is not touched. --out
 writes every run's metrics as JSON.
 """
@@ -106,7 +108,12 @@ def report(workload, metrics, runs):
         worse = (ratio - 1) if better == "lower" else (1 - ratio)
         fmt = lambda xs: (f"{quantile(xs, 0.5):.4g} "
                           f"[{quantile(xs, 0.25):.4g}, {quantile(xs, 0.75):.4g}]")
-        verdict = "inside" if worse <= bound else "OUTSIDE"
+        spread = (quantile(a, 0.75) - quantile(a, 0.25)) / ma if ma else float("inf")
+        beats = (max(b) < min(a)) if better == "lower" else (min(b) > max(a))
+        if spread > bound and not beats:
+            verdict = "unresolved"
+        else:
+            verdict = "inside" if worse <= bound else "OUTSIDE"
         print(f"  {name:18s} {fmt(a):>30s} {fmt(b):>30s} {ratio:11.3f} "
               f"{wins:2d}/{len(pairs):<2d}  {verdict} {bound}")
 

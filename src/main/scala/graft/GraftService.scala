@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.filters.{MetadataFilter, ScopeFilters}
+import graft.functions.text
 import graft.operators.{Embedder, HashEmbedder, KnnSearch, ModelRerank, Padding, Serving,
   TokenOverlapModel}
 
@@ -200,8 +201,7 @@ object GraftService {
     val fetchK = math.max(req.k * 2, 20)
     val dense = KnnSearch.topK(keyed, chunks.embeddingCol, "__cid",
       embedder.embedText(req.queryText), fetchK).collect()
-    val terms = Option(req.queryText).getOrElse("").toLowerCase
-      .split("\\s+").filter(_.nonEmpty).distinct.toSeq
+    val terms = text.words(req.queryText).distinct
     val keyword = operators.FullText.bm25Rows(keyed, "__cid", chunks.contentCol,
       terms, fetchK).collect()
     // both arms' rows start with keyed's columns; a both-arms chunk keeps its dense row

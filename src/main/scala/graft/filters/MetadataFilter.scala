@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.functions.text
+
 /** Mongo-style metadata filter DSL compiled to Catalyst `Column` expressions.
   *
   * Re-expresses the reference's filter compiler
@@ -42,7 +44,7 @@ object MetadataFilter {
     * reference ("Unsupported metadata type",
     * `metadata_filters.py` via `typed_metadata.py:16-42`). */
   def canonicalType(t: String): String =
-    typeAliases.getOrElse(t.toLowerCase,
+    typeAliases.getOrElse(text.fold(t),
       sys.error(s"Unsupported metadata type: $t"))
 
   /** Compilation context.
@@ -267,7 +269,7 @@ object MetadataFilter {
     case "$exists" =>
       val want = rhs match {
         case JBool(b)   => b
-        case JString(s) => Set("1", "true", "yes", "y", "t").contains(s.toLowerCase)
+        case JString(s) => Set("1", "true", "yes", "y", "t").contains(text.fold(s))
         case JInt(i)    => i != 0
         case _          => true
       }
@@ -288,8 +290,8 @@ object MetadataFilter {
     // $contains: case-insensitive substring, array-aware (`metadata_filters.py:473-524`).
     case "$contains" =>
       val s = rhs match { case JString(x) => x; case o => scalarString(o) }
-      lower(v).contains(lower(lit(s))) ||
-        (t === "array" && arrayExists(v, e => lower(e).contains(lower(lit(s)))))
+      text.fold(v).contains(text.fold(s)) ||
+        (t === "array" && arrayExists(v, e => text.fold(e).contains(text.fold(s))))
     case "$not" =>
       !coalesce(compileMetaField(key, rhs, ctx), lit(false))
     case other => sys.error(s"unsupported operator $other")
@@ -338,7 +340,7 @@ object MetadataFilter {
       val pat = rhs match { case JString(s) => s; case o => sys.error(s"$$regex expects string, got $o") }
       c.rlike(if (opts.contains("i")) "(?i)" + pat else pat)
     case "$contains" =>
-      lower(c).contains(lower(lit(scalarString(rhs))))
+      text.fold(c).contains(text.fold(scalarString(rhs)))
     case other => sys.error(s"unsupported column operator $other")
   }
 }

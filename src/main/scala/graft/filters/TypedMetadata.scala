@@ -169,7 +169,7 @@ object TypedMetadata {
   /** `_coerce_boolean` (`:268-280`). */
   private def coerceBoolean(v: JValue, field: String): Boolean = v match {
     case JBool(b) => b
-    case JString(s) => s.trim.toLowerCase match {
+    case JString(s) => graft.functions.text.fold(s.trim) match {
       case "true" | "1" | "yes" | "y" | "on"  => true
       case "false" | "0" | "no" | "n" | "off" => false
       case _ => fail(s"Metadata field '$field' expects 'true' or 'false'.")

@@ -1,5 +1,9 @@
 package graft.functions
 
+import scala.collection.immutable.ArraySeq
+
+import com.ibm.icu.lang.UCharacter
+import com.ibm.icu.util.ULocale
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -15,10 +19,35 @@ import org.apache.spark.sql.functions._
   */
 object text {
 
-  /** lower + collapse whitespace + trim (the canonical form used by
+  /** The one case fold, document side: ICU root-locale lower-casing.
+    * Spark's own `lower` folds a non-ASCII string in the JVM's default
+    * locale (under `tr`, "INDEX café" → "ındex café" while "INDEX build" →
+    * "index build"); the UNICODE collation's `lower` folds with ICU's root
+    * locale whatever the default. The cast returns the plain UTF8_BINARY
+    * string type, so equality, `contains` and regexes downstream are
+    * byte-wise as before. Null stays null. */
+  def fold(c: Column): Column = lower(collate(c, "UNICODE")).cast("string")
+
+  /** The one case fold, driver and executor side: the same ICU root
+    * lower-casing as the Column [[fold]]. Not `Locale.ROOT`: JDK 17's
+    * Unicode tables lag ICU's (67 code points such as U+A7C0 and U+10570
+    * fold only in ICU) and its final-sigma rule misreads a preceding
+    * non-BMP letter ("𝔘𝔫𝔦Σ" ends in σ, ICU's in ς), so the two sides
+    * would disagree. Null stays null. */
+  def fold(s: String): String =
+    if (s == null) null else UCharacter.toLowerCase(ULocale.ROOT, s)
+
+  /** The Scala mirror of [[tokens]]: fold, split on `sep` (default `\s+`,
+    * the whitespace [[tokens]] splits on), drop empties. Null text has no
+    * words (the Column [[tokens]] of null is a null array). */
+  def words(s: String, sep: String = "\\s+"): Seq[String] =
+    if (s == null) Seq.empty
+    else ArraySeq.unsafeWrapArray(fold(s).split(sep).filter(_.nonEmpty))
+
+  /** fold + collapse whitespace + trim (the canonical form used by
     * fingerprinting and dedup; mirrors `fast_ops.py:257-287` normalize). */
   def normalize(c: Column): Column =
-    trim(regexp_replace(lower(c), "\\s+", " "))
+    trim(regexp_replace(fold(c), "\\s+", " "))
 
   /** Whitespace tokens of the normalized text; empty text -> empty array. */
   def tokens(c: Column): Column =

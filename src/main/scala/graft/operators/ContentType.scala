@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
+import graft.functions.text
+
 /** Content-type detection and filename/storage-key normalization, porting
   * `core/storage/utils_file_extensions.py` (detect_content_type,
   * is_colpali_native_format) and the v2 ingest helpers
@@ -127,13 +129,13 @@ object ContentType {
   def detect(content: Option[Array[Byte]], filename: Option[String],
              contentTypeHint: Option[String]): String = {
     val hint = contentTypeHint
-      .map(_.split(";", 2)(0).trim.toLowerCase)
+      .map(h => text.fold(h.split(";", 2)(0).trim))
       .filter(h => h.nonEmpty && !genericTypes(h))
     content.filter(_.nonEmpty).flatMap(sniffMagic)
       .orElse(hint)
       .orElse(filename.flatMap { f =>
         val i = f.lastIndexOf('.')
-        if (i >= 0 && i < f.length - 1) extMimes.get(f.substring(i + 1).toLowerCase)
+        if (i >= 0 && i < f.length - 1) extMimes.get(text.fold(f.substring(i + 1)))
         else None
       })
       // empty bytes are falsy in the reference's `if content and
@@ -177,7 +179,7 @@ object ContentType {
   def normalizeTextFilename(filename: Option[String], content: String,
                             idHex: String): String = {
     def needsHtml: Boolean = {
-      val head = content.dropWhile(_.isWhitespace).toLowerCase
+      val head = text.fold(content.dropWhile(_.isWhitespace))
       head.startsWith("<!doctype html") || head.contains("<html")
     }
     filename.map(_.trim).filter(_.nonEmpty) match {

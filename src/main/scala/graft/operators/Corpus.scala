@@ -635,8 +635,8 @@ object Corpus {
     * runs in any engine. Stateless map-only at any scale. */
   def urlNormalize(df: DataFrame, urlCol: String): DataFrame = {
     val u = col(urlCol)
-    val scheme = lower(regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostRaw = lower(regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
+    val scheme = text.fold(regexp_extract(u, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    val hostRaw = text.fold(regexp_extract(u, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
     // Only the scheme's OWN default port is a no-op to strip: http://h:443 is
     // a real non-default port and must stay distinct from http://h.
     val dePorted = when(scheme === "http", regexp_replace(hostRaw, ":80$", ""))
@@ -2130,7 +2130,7 @@ object Corpus {
         size(words).cast("long").as("w"),
         aggregate(words, lit(0L), (a, x) => a + length(x)).as("c"),
         size(graft.functions.BpeTokenizer.bpe_encode(
-          lower(col(textCol)), merges)).cast("long").as("t")))
+          text.fold(col(textCol)), merges)).cast("long").as("t")))
       .groupBy("grp").agg(
         count(lit(1)).as("n_docs"),
         sum(col("w")).as("n_words"),

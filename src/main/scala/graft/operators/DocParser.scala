@@ -45,12 +45,12 @@ object DocParser {
       ".yaml", ".yml")
 
   def isPlainText(filename: String): Boolean = {
-    val lower = filename.toLowerCase
+    val lower = graft.functions.text.fold(filename)
     plainTextExts.exists(lower.endsWith)
   }
 
   private def ext(filename: String): String = {
-    val lower = filename.toLowerCase
+    val lower = graft.functions.text.fold(filename)
     val i = lower.lastIndexOf('.')
     if (i < 0) "" else lower.substring(i)
   }
@@ -644,8 +644,10 @@ object DocParser {
     }
   }
 
-  /** Distributed ladder: adds (`outCol`, parse_path, extraction_status,
-    * extraction_warning) from (filename, bytes). */
+  /** The one distributed parse, the ladder per row: adds (`outCol`,
+    * parse_path, extraction_status, extraction_warning) from (filename,
+    * bytes) via mapPartitions, so binary payloads never leave the
+    * executor. */
   def parseColumnWithFallback(df: DataFrame, filenameCol: String,
                               bytesCol: String, outCol: String,
                               deep: DeepStage = NoDeepStage,
@@ -663,25 +665,6 @@ object DocParser {
           deep, stage)
         Row.fromSeq(r.toSeq ++ Seq(p.text, p.path,
           p.extractionStatus.orNull, p.warning.orNull))
-      }
-    }(enc)
-  }
-
-  // ---------------------------------------------------------- spark wiring
-
-  /** Distributed parse: adds `outCol` string column from (filename, bytes)
-    * via mapPartitions — one parser instance per partition, binary payloads
-    * never leave the executor. */
-  def parseColumn(df: DataFrame, filenameCol: String, bytesCol: String,
-                  outCol: String, stage: Stage = NativeStage): DataFrame = {
-    val schema = df.schema.add(outCol, StringType, nullable = false)
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    val fIdx = df.schema.fieldIndex(filenameCol)
-    val bIdx = df.schema.fieldIndex(bytesCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val parsed = stage.parse(r.getString(fIdx), r.getAs[Array[Byte]](bIdx))
-        Row.fromSeq(r.toSeq :+ parsed)
       }
     }(enc)
   }

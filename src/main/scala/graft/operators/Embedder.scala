@@ -37,14 +37,12 @@ case class HashEmbedder(dim: Int = 64, seed: Int = 42,
     * the oracle-testable form; `true` L2-normalizes for cosine retrieval. */
   def embedText(s: String): Array[Float] = {
     val v = new Array[Float](dim)
-    if (s != null) {
-      val md = MessageDigest.getInstance("MD5")
-      s.toLowerCase.split("\\s+").filter(_.nonEmpty).foreach { tok =>
-        val h = md.digest(s"$seed:$tok".getBytes(StandardCharsets.UTF_8))
-        val idx = ((h(0) & 0xff) << 8 | (h(1) & 0xff)) % dim
-        val sign = if ((h(2) & 1) == 0) 1f else -1f
-        v(idx) += sign
-      }
+    val md = MessageDigest.getInstance("MD5")
+    graft.functions.text.words(s).foreach { tok =>
+      val h = md.digest(s"$seed:$tok".getBytes(StandardCharsets.UTF_8))
+      val idx = ((h(0) & 0xff) << 8 | (h(1) & 0xff)) % dim
+      val sign = if ((h(2) & 1) == 0) 1f else -1f
+      v(idx) += sign
     }
     if (!normalize) return v
     val norm = math.sqrt(v.map(x => x.toDouble * x).sum)

@@ -303,8 +303,7 @@ object FullText {
     * matching.) `boundary = false` is the raw-substring mode (multi-word
     * terms are matched as literal substrings). In both modes match_pos is
     * the 1-based start of the matched term (boundary: its earliest word) in
-    * the original text. Terms are folded with Locale.ROOT (matching Spark's
-    * locale-independent `lower`).
+    * the original text. Terms and text both fold through `text.fold`.
     *
     * KNOWN LIMITATION — boundary mode is ASCII-lexeme only: the
     * `[^a-z0-9]` normalization treats EVERY non-ASCII letter as a
@@ -328,13 +327,12 @@ object FullText {
     val hay =
       if (boundary)
         concat(lit(" "),
-          regexp_replace(lower(col(textCol)), "[^a-z0-9]", " "), lit(" "))
-      else lower(col(textCol))
+          regexp_replace(text.fold(col(textCol)), "[^a-z0-9]", " "), lit(" "))
+      else text.fold(col(textCol))
     def termPos(t: String): Column = {
-      val tl = t.toLowerCase(java.util.Locale.ROOT)
-      if (!boundary) instr(hay, tl).cast("long")
+      if (!boundary) instr(hay, text.fold(t)).cast("long")
       else {
-        val words = tl.split("[^a-z0-9]+").filter(_.nonEmpty)
+        val words = text.words(t, "[^a-z0-9]+")
         if (words.isEmpty) lit(0L)
         else {
           val ps = words.map(w => instr(hay, s" $w ").cast("long"))
@@ -401,7 +399,7 @@ object FullText {
   def phraseSearch(docs: DataFrame, idCol: String, textCol: String,
                    phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.nonEmpty, "phraseSearch needs a non-empty phrase")
-    val terms = phrase.map(_.toLowerCase(java.util.Locale.ROOT))
+    val terms = phrase.map(text.fold(_))
     val spark = docs.sparkSession
     import spark.implicits._
     val q = terms.zipWithIndex.toDF("term", "qi")
@@ -445,7 +443,7 @@ object FullText {
   def proximitySearch(docs: DataFrame, idCol: String, textCol: String,
                       terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "proximitySearch needs at least one term")
-    val t = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
+    val t = terms.map(text.fold(_)).distinct
     val byPos = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -499,7 +497,7 @@ object FullText {
     val vocab = graft.Tables.scaled(
       docs.select(explode(text.tokens(col(textCol))).as("vterm")))
       .groupBy("vterm").agg(count(lit(1)).as("df"))
-    val canonical = queryTokens.map(_.trim.toLowerCase)
+    val canonical = queryTokens.map(t => text.fold(t.trim))
       .filter(_.nonEmpty).distinct
     val q = broadcast(canonical.toDF("qt"))
     vocab.join(q, abs(length(col("vterm")) - length(col("qt"))) <= maxDist)

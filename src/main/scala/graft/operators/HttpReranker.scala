@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.DoubleType
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import graft.functions.text
+
 /** Q6 rerank model contract (`flag_reranker.py:30-60`): score (query,
   * passage) pairs, update chunk scores, sort desc. The model stage is an
   * interface so CI stays deterministic while production plugs a
@@ -18,15 +20,13 @@ trait RerankModel extends Serializable {
 
 /** Deterministic CI stand-in for a cross-encoder (the r1/s5 oracles'
   * formula): |distinct passage tokens ∩ distinct query tokens| / |distinct
-  * query tokens|, `\s+`-split after `Locale.ROOT` lower-casing. An empty
-  * query or a null passage scores 0.0. */
+  * query tokens| over [[text.words]]. An empty query or a null passage
+  * scores 0.0. */
 case class TokenOverlapModel() extends RerankModel {
-  private def tokens(s: String): Set[String] =
-    s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty).toSet
-
   def scoreBatch(query: String, passages: Seq[String]): Seq[Double] = {
-    val q = tokens(Option(query).getOrElse(""))
-    passages.map(p => if (q.isEmpty || p == null) 0.0 else q.count(tokens(p)).toDouble / q.size)
+    val q = text.words(query).toSet
+    passages.map(p => if (q.isEmpty || p == null) 0.0
+      else q.count(text.words(p).toSet).toDouble / q.size)
   }
 }
 

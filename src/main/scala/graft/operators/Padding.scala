@@ -57,7 +57,7 @@ object Padding {
     val flag = meta.getItem("is_image")
     // the reference flag is a JSONB bool; rows ported through a string map
     // may carry Python's str(True) — accept the common bool serializations
-    when(flag.isNotNull, lower(flag).isin("true", "1"))
+    when(flag.isNotNull, graft.functions.text.fold(flag).isin("true", "1"))
       .otherwise(coalesce(content.startsWith("data"), lit(false)))
   }
 

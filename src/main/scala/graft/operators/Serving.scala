@@ -67,17 +67,17 @@ object Serving {
   def filenameSearch(docs: DataFrame, filenameCol: String, idCol: String,
                      query: String, limit: Int,
                      updatedAtCol: Option[String] = None): DataFrame = {
-    val q = query.trim.toLowerCase
-    val normName = lower(regexp_replace(
+    val q = text.fold(query.trim)
+    val normName = text.fold(regexp_replace(
       regexp_replace(col(filenameCol), "\\.[^.]*$", ""), "[_-]+", " "))
     val rawToks = filter(split(normName, "\\s+"), t => length(t) > 0)
     val lexemes = transform(
       filter(rawToks, t => !t.isin(text.ftsStopwords.map(lit(_)): _*)),
       t => text.light_stem(t))
-    val qRaw = q.split("\\s+").filter(_.nonEmpty).distinct
+    val qRaw = text.words(query.trim).distinct
     val qLex = qRaw.filterNot(text.ftsStopwords.contains)
       .map(text.lightStemString).distinct
-    val substrHit = lower(col(filenameCol)).contains(q)
+    val substrHit = text.fold(col(filenameCol)).contains(q)
     val englishHit =
       if (qLex.isEmpty) lit(false)
       else qLex.map(l => array_contains(lexemes, l)).reduce(_ && _)
@@ -103,7 +103,7 @@ object Serving {
     * 3-char windows, de-duplicated across the whole string. */
   def trgmColumn(c: Column): Column = {
     val words = filter(
-      split(regexp_replace(lower(c), "[^a-z0-9]+", " "), " "),
+      split(regexp_replace(text.fold(c), "[^a-z0-9]+", " "), " "),
       w => length(w) > 0)
     array_distinct(flatten(transform(words, w => {
       val padded = concat(lit("  "), w, lit(" "))
@@ -114,11 +114,10 @@ object Serving {
 
   /** Driver-side mirror of [[trgmColumn]] for the request string. */
   def trgmSet(s: String): Set[String] =
-    s.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
-      .flatMap { w =>
-        val p = "  " + w + " "
-        (0 to p.length - 3).map(i => p.substring(i, i + 3))
-      }.toSet
+    text.words(s, "[^a-z0-9]+").flatMap { w =>
+      val p = "  " + w + " "
+      (0 to p.length - 3).map(i => p.substring(i, i + 3))
+    }.toSet
 
   /** Fuzzy string search by pg_trgm SIMILARITY — the production upgrade
     * of [[filenameSearch]]'s ILIKE substring arm (Postgres deployments

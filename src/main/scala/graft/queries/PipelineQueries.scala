@@ -286,7 +286,7 @@ object PipelineQueries {
       (id, "doc.xlsx", graft.sources.OfficeFixtures.xlsx(Seq(
         "Sheet1" -> Seq(Seq(ws(0), ws(1)), Seq(ws(2), ws(3)), Seq(ws(4), ws(5))))))
     }.toDF("doc_id", "filename", "bytes")
-    graft.operators.DocParser.parseColumn(withBytes, "filename", "bytes", "parsed")
+    graft.operators.DocParser.parseColumnWithFallback(withBytes, "filename", "bytes", "parsed")
       .select(col("doc_id"), md5(col("parsed")).as("md_md5"),
         length(col("parsed")).cast("long").as("md_len"))
       .orderBy("doc_id")
@@ -305,7 +305,7 @@ object PipelineQueries {
       val l2 = if (text.length > 40) text.substring(40, math.min(80, text.length)) else ""
       (id, "doc.pdf", graft.sources.OfficeFixtures.pdf(Seq(l1, l2), compress = id % 2 == 0))
     }.toDF("doc_id", "filename", "bytes")
-    graft.operators.DocParser.parseColumn(withBytes, "filename", "bytes", "parsed")
+    graft.operators.DocParser.parseColumnWithFallback(withBytes, "filename", "bytes", "parsed")
       .select(col("doc_id"), md5(col("parsed")).as("txt_md5"),
         length(col("parsed")).cast("long").as("txt_len"))
       .orderBy("doc_id")

@@ -246,7 +246,7 @@ object SearchQueries {
     val norm = "' ' || regexp_replace(lower(text), '[^a-z0-9]', ' ', 'g') || ' '"
     val ps = SnippetTerms.zipWithIndex.map { case (t, i) =>
       if (boundary) {
-        val probes = t.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
+        val probes = graft.functions.text.words(t, "[^a-z0-9]+")
           .map(w => s"strpos($norm, ' $w ')")
         if (probes.length == 1) s"nullif(${probes.head}, 0) AS p$i"
         else s"(CASE WHEN ${probes.map(p => s"$p > 0").mkString(" AND ")} " +

@@ -223,8 +223,8 @@ object TextQueries {
     // not as a mystery hash mismatch against a silently-truncating oracle.
     val docs = Tables.documents(spark, dir)
     val bounds = docs.select(
-      max(size(split(trim(lower(col("text"))), "\\s+"))),
-      max(array_max(transform(split(trim(lower(col("text"))), "\\s+"), w => length(w)))))
+      max(size(split(trim(text.fold(col("text"))), "\\s+"))),
+      max(array_max(transform(split(trim(text.fold(col("text"))), "\\s+"), w => length(w)))))
       .head()
     val (maxWords, maxWordLen) = (bounds.getInt(0), bounds.getInt(1))
     require(maxWords <= 4000,
@@ -234,7 +234,7 @@ object TextQueries {
       s"t25 oracle replays at most 40 merge steps/word; corpus has a $maxWordLen-char word")
     docs
       .select(col("doc_id"),
-        graft.functions.BpeTokenizer.bpe_encode(lower(col("text"))).as("tokens"))
+        graft.functions.BpeTokenizer.bpe_encode(text.fold(col("text"))).as("tokens"))
       .select(col("doc_id"), size(col("tokens")).cast("long").as("n_tokens"),
         md5(concat_ws("|", col("tokens"))).as("tok_md5"))
       .orderBy("doc_id")
@@ -247,8 +247,8 @@ object TextQueries {
   def fertilityQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val bounds = docs.select(
-      max(size(split(trim(lower(col("text"))), "\\s+"))),
-      max(array_max(transform(split(trim(lower(col("text"))), "\\s+"),
+      max(size(split(trim(text.fold(col("text"))), "\\s+"))),
+      max(array_max(transform(split(trim(text.fold(col("text"))), "\\s+"),
         w => length(w)))))
       .head()
     require(bounds.getInt(0) <= 4000 && bounds.getInt(1) <= 41,

@@ -767,7 +767,7 @@ object VectorQueries {
     Tables.embeddings(spark, dir).filter(col("vec_id") < 50)
       .select(
         col("vec_id"),
-        lower(hex(vec.binary_quantize(col("embedding")))).as("packed_hex"),
+        graft.functions.text.fold(hex(vec.binary_quantize(col("embedding")))).as("packed_hex"),
         vec.hamming(vec.binary_quantize(col("embedding")),
           vec.binary_quantize(lit(q))).cast("long").as("hamming"))
       .orderBy("vec_id")

@@ -54,9 +54,7 @@ object StreamingContextWindows {
             .empty[(Long, Long, Long, String)]
           var idx = 0
           rows.toVector.sortBy(_._2).foreach { case (_, _, text) =>
-            // == text.tokens: lowercase, whitespace-split, drop empties
-            buf ++= Option(text).getOrElse("")
-              .toLowerCase.split("\\s+").filter(_.nonEmpty)
+            buf ++= graft.functions.text.words(text)
             buf += eos
             while (buf.length - idx >= blockTokens) {
               out += ((shard, nBlocks, blockTokens.toLong,

@@ -135,8 +135,8 @@ class HttpModelClientsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("TokenOverlapModel: case, whitespace, repeats, empty, null and non-BMP text; the oracle formula") {
     val m = TokenOverlapModel()
     def score(q: String, p: String): Double = m.scoreBatch(q, Seq(p)).head
-    // case folds with Locale.ROOT, whatever the JVM's default locale: under
-    // tr, "TITLE".toLowerCase() is "tıtle" (dotless i)
+    // case folds with text.fold (ICU root), whatever the JVM's default
+    // locale: under tr, "TITLE".toLowerCase() is "tıtle" (dotless i)
     val saved = java.util.Locale.getDefault
     java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
     try assert(score("TITLE Index", "title INDEX") == 1.0)

@@ -6,14 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The tool layer stays thin and every stage cut goes through one seam:
+/** The tool layer stays thin, every stage cut goes through one seam and
+  * every case fold through one function:
   *  - every `main` builds its session and times its noop write through
   *    [[Harness]], so no file under src/main/scala but Harness.scala may
   *    call `SparkSession.builder` or `.format("noop").save()` (a streaming
   *    `writeStream.format("noop")` sink is not a timing loop and does not
   *    match);
   *  - every stage output is materialized through [[StageCut]], so no file
-  *    but StageCut.scala may call `.localCheckpoint(`.
+  *    but StageCut.scala may call `.localCheckpoint(`;
+  *  - every case fold goes through `graft.functions.text.fold` (ICU root),
+  *    so no file but TextFunctions.scala may call `.toLowerCase`.
   * Comment lines are skipped; test code keeps its own raw calls. */
 class ToolingGuardSpec extends AnyFunSuite {
 
@@ -42,5 +45,9 @@ class ToolingGuardSpec extends AnyFunSuite {
 
   test("only StageCut.scala materializes a stage cut") {
     onlyIn("StageCut.scala", Seq(".localCheckpoint("))
+  }
+
+  test("only TextFunctions.scala folds case") {
+    onlyIn("TextFunctions.scala", Seq(".toLowerCase"))
   }
 }
