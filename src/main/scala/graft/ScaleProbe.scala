@@ -148,27 +148,13 @@ object ScaleProbe {
     // "would it survive a bad day at 100×" evidence wall-clock probes
     // don't give. Sorts/aggregations must degrade to external spill, not
     // to executor death. Each query runs ONCE (completion evidence, not a
-    // timing methodology); per-query spill bytes come from task metrics.
+    // timing methodology); per-query spill and peak task memory come from
+    // its [[QueryProfile]].
     if (mode == "lowmem") {
       require(genCurrent(s"$root/x64"),
         "lowmem probes the x64 replica - run `ScaleProbe x64` at full heap " +
           "first to generate it")
       val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-      val memSpill = new java.util.concurrent.atomic.AtomicLong
-      val diskSpill = new java.util.concurrent.atomic.AtomicLong
-      val peakTaskMem = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = e.taskMetrics
-            if (m != null) {
-              memSpill.addAndGet(m.memoryBytesSpilled)
-              diskSpill.addAndGet(m.diskBytesSpilled)
-              peakTaskMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-            }
-          }
-        })
       val lowmemAll = Seq(
         "q2_join3", "t4_minhash_lsh", "t17_components", "t33_paragraph_dedup",
         "n2_bm25", "e7_resample_locf", "e8_ohlc", "e14_resample_interp",
@@ -193,10 +179,9 @@ object ScaleProbe {
         "e25_acf", "gr6_triangles")
       val cpus = spark.conf.get("spark.sql.shuffle.partitions")
       Harness.select(csv(args), lowmemAll, "lowmem queries").foreach { name =>
-        memSpill.set(0); diskSpill.set(0); peakTaskMem.set(0)
         val fn = kScaled(name).getOrElse(SparkEntry.queries(name))
         val t0 = System.nanoTime()
-        val outcome =
+        val (outcome, profile) = QueryProfile(spark) {
           try {
             Harness.timeNoop(fn(spark, s"$root/x64"))
             "completed"
@@ -206,12 +191,14 @@ object ScaleProbe {
                 while (c.getCause != null) c = c.getCause; c }
               s"FAILED(${root.getClass.getSimpleName})"
           }
+        }
         val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // let the async listener bus drain task metrics
+        val stages = profile.stages
         println(f"[lowmem] $name%-22s $outcome%-10s t=$secs%7.1fs " +
-          f"spill_mem=${memSpill.get / 1048576}%6dMB " +
-          f"spill_disk=${diskSpill.get / 1048576}%6dMB " +
-          f"peak_task=${peakTaskMem.get / 1048576}%5dMB heap=${heapMb}MB " +
+          f"spill_mem=${stages.map(_.memorySpilled).sum / 1048576}%6dMB " +
+          f"spill_disk=${stages.map(_.diskSpilled).sum / 1048576}%6dMB " +
+          f"peak_task=${stages.map(_.peakTaskMemory).maxOption.getOrElse(0L) / 1048576}%5dMB " +
+          f"heap=${heapMb}MB " +
           f"cores=$cpus")
       }
     }

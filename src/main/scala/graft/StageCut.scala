@@ -45,28 +45,16 @@ import org.apache.spark.storage.StorageLevel
   * Under `disk` the kept lineage holds every round of an iterative loop
   * until the loop's result is dropped.
   *
-  * `label` (`component.seam`) names the cut for the plan-guard recorder:
-  * with `spark.graft.stageCut.record = true` the PRE-cut optimized plan is
-  * kept in [[StageCut.recorded]], so specs can assert what executes INSIDE
-  * a cut stage (after a cut the registry plan starts at `Scan ExistingRDD`
-  * and in-stage kernels become invisible to plan guards).
+  * `label` (`component.seam`) names the seam at its call site; nothing is
+  * recorded under it yet.
   */
 object StageCut {
-  /** label -> formatted pre-cut plan; populated only under
-    * spark.graft.stageCut.record=true (test hook, not a cache). */
-  val recorded = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def apply(df: DataFrame, label: String, eager: Boolean = true): DataFrame = {
-    val conf = df.sparkSession.conf
-    if (conf.get("spark.graft.stageCut.record", "false") == "true")
-      recorded.put(label, df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    conf.get("spark.graft.stageCut.mode", "local") match {
+  def apply(df: DataFrame, label: String, eager: Boolean = true): DataFrame =
+    df.sparkSession.conf.get("spark.graft.stageCut.mode", "local") match {
       case "local"    => df.localCheckpoint(eager)
       case "reliable" => df.checkpoint(eager)
       case "disk"     => CutBridge.persisted(df, StorageLevel.DISK_ONLY, eager)
       case m => throw new IllegalArgumentException(
         s"spark.graft.stageCut.mode must be local|reliable|disk (got $m)")
     }
-  }
 }

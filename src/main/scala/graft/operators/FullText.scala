@@ -172,17 +172,11 @@ object FullText {
     * query-term partitions instead of scanning the corpus. */
   case class Bm25Index(postings: DataFrame, dfreq: DataFrame, stats: DataFrame)
 
-  /** One corpus pass: explode → (doc, term) counts (map-side combined). */
+  /** The whole corpus as one [[indexDelta]] batch under [[indexFromParts]]:
+    * one explode → (doc, term) counts (map-side combined). */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String): Bm25Index = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      text.tokens(col(textCol)).as("tk"))
-    val postings = toks.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        explode(col("tk")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = postings.groupBy("term").agg(countDistinct("doc_id").as("df"))
-    val stats = toks.agg(count(lit(1)).as("n_docs"),
-      avg(size(col("tk")).cast("double")).as("avgdl"))
-    Bm25Index(postings, dfreq, stats)
+    val (postings, docLens) = indexDelta(docs, idCol, textCol)
+    indexFromParts(postings, docLens)
   }
 
   /** Rebuild the queryable index from ACCUMULATED parts — the incremental
@@ -303,7 +297,10 @@ object FullText {
     * matching.) `boundary = false` is the raw-substring mode (multi-word
     * terms are matched as literal substrings). In both modes match_pos is
     * the 1-based start of the matched term (boundary: its earliest word) in
-    * the original text. Terms and text both fold through `text.fold`.
+    * the original text. Terms and text both fold through `text.fold`,
+    * after `İ` → `I`: ICU folds `İ` to two code points (`i` + U+0307), and
+    * every other letter to one, so with that one mapped first a position
+    * in the folded text is the same position in the original.
     *
     * KNOWN LIMITATION — boundary mode is ASCII-lexeme only: the
     * `[^a-z0-9]` normalization treats EVERY non-ASCII letter as a
@@ -324,12 +321,12 @@ object FullText {
   def snippets(hits: DataFrame, textCol: String, terms: Seq[String],
                width: Int = 80, boundary: Boolean = true): DataFrame = {
     require(terms.nonEmpty, "snippets needs at least one query term")
+    val folded = text.fold(translate(col(textCol), "İ", "I"))
     val hay =
-      if (boundary)
-        concat(lit(" "),
-          regexp_replace(text.fold(col(textCol)), "[^a-z0-9]", " "), lit(" "))
-      else text.fold(col(textCol))
-    def termPos(t: String): Column = {
+      if (boundary) concat(lit(" "), regexp_replace(folded, "[^a-z0-9]", " "), lit(" "))
+      else folded
+    def termPos(term: String): Column = {
+      val t = term.replace("İ", "I")
       if (!boundary) instr(hay, text.fold(t)).cast("long")
       else {
         val words = text.words(t, "[^a-z0-9]+")

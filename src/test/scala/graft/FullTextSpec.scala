@@ -116,6 +116,17 @@ class FullTextSpec extends AnyFunSuite {
       "substring mode keeps the raw-instr semantics")
   }
 
+  test("snippets: İ, which folds to two code points, shifts no match position in either mode") {
+    val df = Seq((1L, "İİİİ spark"), (2L, "İİ and İSTANBUL")).toDF("doc_id", "text")
+    for (boundary <- Seq(true, false)) {
+      val out = FullText.snippets(df, "text", Seq("spark", "İstanbul"), width = 6,
+        boundary = boundary).orderBy("doc_id")
+        .select("snippet", "matched_term", "match_pos").as[(String, String, Long)].collect()
+      assert(out.toSeq == Seq(("…İİ spa…", "spark", 6L), ("…nd İST…", "İstanbul", 8L)),
+        s"boundary = $boundary")
+    }
+  }
+
   test("snippets boundary mode: multi-word terms are AND-of-lexemes, not phrases") {
     // parity target: the reference FTS arm uses plainto_tsquery (AND of
     // word lexemes) — adjacency and separator width must not matter

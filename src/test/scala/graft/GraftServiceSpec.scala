@@ -1,18 +1,11 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.{WindowExecBase, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.GraftService._
 import graft.operators.HashEmbedder
@@ -216,36 +209,19 @@ class GraftServiceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * the physical plans it executed and in the frame it returned, and the
     * pushed filters of the file scans it executed. */
   private def jobsAndGlobalWindows(call: => DataFrame): (Seq[String], Seq[String], Seq[String]) = {
-    val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[String]
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name).lastOption.getOrElse(s"job ${e.jobId}"))
-    }
-    val planListener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    val out = try { val df = call; df.collect(); ListenerBus.drain(sc); df }
-    finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
-    val physical = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+    val (out, profile) = QueryProfile(spark) { val df = call; df.collect(); df }
+    val plans = profile.plans.map(_.plan)
+    val physical = plans.flatMap(p => collectWithSubqueries(p) {
       case w: WindowExecBase if w.partitionSpec.isEmpty => w.nodeName
       case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.nodeName
     })
     val logicalWindows = out.queryExecution.optimizedPlan.collect {
       case w: logical.Window if w.partitionSpec.isEmpty => "Window"
     }
-    val pushed = plans.asScala.toSeq.flatMap(p => collectWithSubqueries(p) {
+    val pushed = plans.flatMap(p => collectWithSubqueries(p) {
       case scan: FileSourceScanExec => scan.metadata.getOrElse("PushedFilters", "")
     })
-    (jobs.asScala.toSeq, physical ++ logicalWindows, pushed)
+    (profile.jobs.map(_.callSite), physical ++ logicalWindows, pushed)
   }
 
   test("job-count guard: a hybrid read runs <= 4 jobs, an mmr read 1, no global window") {

@@ -1,15 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards for the headline queries: the 100 TB
@@ -88,19 +80,10 @@ class PlanGuardSpec extends AnyFunSuite {
     // the arms execute while the query is built (each collects its top-k
     // ids; the fusion runs on the driver), so their executed plans are
     // captured as they run rather than read off the returned frame
-    val sc = spark.sparkContext
-    val plans = new ConcurrentLinkedQueue[String]
-    val planListener = new QueryExecutionListener {
-      // AQE's toString repeats the tree under "== Initial Plan =="; keep
-      // the FINAL section only
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString.split("== Initial Plan ==").head)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(planListener)
-    val df = try { val d = SparkEntry.queries("n3_hybrid_rrf")(spark, dir); ListenerBus.drain(sc); d }
-      finally spark.listenerManager.unregister(planListener)
-    val all = plans.asScala.toSeq
+    val (df, built) = QueryProfile(spark)(SparkEntry.queries("n3_hybrid_rrf")(spark, dir))
+    // AQE's toString repeats the tree under "== Initial Plan =="; keep the
+    // FINAL section only
+    val all = built.plans.map(_.plan.toString.split("== Initial Plan ==").head)
     // each arm bounds itself to a request-sized slice with a heap top-k
     def arm(table: String) = all.filter(p =>
       p.contains(s"$table.parquet") && p.contains("TakeOrderedAndProject"))
@@ -116,14 +99,9 @@ class PlanGuardSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct"), s"fusion went all-pairs:\n$p")
     }
     // the fused answer is a local frame: reading it runs no job
-    val jobs = new AtomicInteger
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(jobListener)
-    try { assert(df.collect().nonEmpty); ListenerBus.drain(sc) }
-    finally sc.removeSparkListener(jobListener)
-    assert(jobs.get == 0, s"reading the fused frame ran ${jobs.get} jobs")
+    val (rows, read) = QueryProfile(spark)(df.collect())
+    assert(rows.nonEmpty)
+    assert(read.jobs.size == 0, s"reading the fused frame ran ${read.jobs.size} jobs")
   }
 
   test("PlanDump: two dumps of p7 and of a lambda-carrying plan are byte-identical") {
@@ -615,24 +593,22 @@ class PlanGuardSpec extends AnyFunSuite {
     // the lnc_norm_sq kernel runs INSIDE the checkpointed tf stage, so the
     // registered query's executed plan starts from the cut and the kernel
     // is invisible there (r17 advisor finding: 'Scan ExistingRDD' alone
-    // does not gate the kernel) — the StageCut recorder captures the
-    // PRE-cut plan of the tf seam so this guard can assert on it.
-    spark.conf.set("spark.graft.stageCut.record", "true")
-    try {
-      graft.StageCut.recorded.clear()
-      val p = executedPlan("n15_tfidf_vsm")
-      assert(p.contains("Scan ExistingRDD"),
-        s"stage cut missing - the tf table re-executes per consumer:\n$p")
-      assert(p.contains("TakeOrderedAndProject"),
-        s"the k cut must be a bounded heap:\n$p")
-      assert(!p.contains("CartesianProduct"),
-        s"scoring must never cross rows:\n$p")
-      val tfPlan = graft.StageCut.recorded.get("tfidfVsm.tf")
-      assert(tfPlan != null, "the tf seam did not record its pre-cut plan")
-      assert(tfPlan.contains("lnc_norm_sq"),
-        s"the norm kernel must execute inside the tf stage (not a HOF " +
-          s"rewrite):\n$tfPlan")
-    } finally spark.conf.set("spark.graft.stageCut.record", "false")
+    // does not gate the kernel) — each cut reports the plan it executed as
+    // a `localCheckpoint` plan, and the tf seam's is the one that explodes
+    // the tokens.
+    val (p, profile) = QueryProfile(spark)(executedPlan("n15_tfidf_vsm"))
+    assert(p.contains("Scan ExistingRDD"),
+      s"stage cut missing - the tf table re-executes per consumer:\n$p")
+    assert(p.contains("TakeOrderedAndProject"),
+      s"the k cut must be a bounded heap:\n$p")
+    assert(!p.contains("CartesianProduct"),
+      s"scoring must never cross rows:\n$p")
+    val cuts = profile.plans.filter(_.funcName == "localCheckpoint").map(_.plan.toString)
+    val tfPlan = cuts.filter(_.contains("Generate explode"))
+    assert(tfPlan.size == 1, s"the tf seam is not one cut:\n${cuts.mkString("\n----\n")}")
+    assert(tfPlan.head.contains("lnc_norm_sq"),
+      s"the norm kernel must execute inside the tf stage (not a HOF " +
+        s"rewrite):\n${tfPlan.head}")
   }
 
   test("e25_acf: the lag pairing is an equi-join on (key, t+lag); stats " +

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.{BlockLoss, ListenerBus}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.graft.BlockLoss
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -67,19 +65,6 @@ class StageCutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val want = ((0L until 200L).map(x => x * x).sum, 100L)
 
-  /** Runs `body`, returning its value and the Spark jobs it started. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { val a = body; ListenerBus.drain(sc); (a, jobs.get) }
-    finally sc.removeSparkListener(l)
-  }
-
   private def messages(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 
@@ -87,7 +72,8 @@ class StageCutSpec extends AnyFunSuite with BeforeAndAfterAll {
     test(s"$mode: an eager cut is materialized before StageCut returns") {
       withMode(mode) {
         val (df, evals) = fixture()
-        val (cut, jobs) = jobsOf(StageCut(df, "fixture.eager"))
+        val (cut, profile) = QueryProfile(spark)(StageCut(df, "fixture.eager"))
+        val jobs = profile.jobs.size
         assert(jobs > 0, "no job fired inside an eager StageCut")
         assert(evals.value >= 200L, "the eager cut did not compute its rows")
         val done = evals.value
@@ -99,7 +85,8 @@ class StageCutSpec extends AnyFunSuite with BeforeAndAfterAll {
     test(s"$mode: a lazy cut runs no job until its first read, then stays materialized") {
       withMode(mode) {
         val (df, evals) = fixture()
-        val (cut, jobs) = jobsOf(StageCut(df, "fixture.lazy", eager = false))
+        val (cut, profile) = QueryProfile(spark)(StageCut(df, "fixture.lazy", eager = false))
+        val jobs = profile.jobs.size
         assert(jobs == 0, s"a lazy StageCut fired $jobs job(s)")
         assert(evals.value == 0L)
         assert(cut.count() == 200L)

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The tool layer stays thin, every stage cut goes through one seam and
-  * every case fold through one function:
+/** The tool layer stays thin, and stage cuts, case folds and Spark
+  * listeners each go through one place:
   *  - every `main` builds its session and times its noop write through
   *    [[Harness]], so no file under src/main/scala but Harness.scala may
   *    call `SparkSession.builder` or `.format("noop").save()` (a streaming
@@ -16,13 +16,18 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every stage output is materialized through [[StageCut]], so no file
   *    but StageCut.scala may call `.localCheckpoint(`;
   *  - every case fold goes through `graft.functions.text.fold` (ICU root),
-  *    so no file but TextFunctions.scala may call `.toLowerCase`.
-  * Comment lines are skipped; test code keeps its own raw calls. */
+  *    so no file but TextFunctions.scala may call `.toLowerCase`;
+  *  - every job, stage and plan count comes from [[QueryProfile]], so no
+  *    file but QueryProfile.scala, in src/main or src/test, may register a
+  *    listener.
+  * Comment lines and this spec are skipped; test code keeps its own
+  * sessions, cuts and folds. */
 class ToolingGuardSpec extends AnyFunSuite {
 
   private def hits(root: Path, banned: Seq[String]): Seq[(Path, String)] = {
     val files = Files.walk(root)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .filterNot(_.getFileName.toString == "ToolingGuardSpec.scala")
     finally files.close()
   }.flatMap { f =>
     Files.readAllLines(f).asScala
@@ -30,10 +35,11 @@ class ToolingGuardSpec extends AnyFunSuite {
       .flatMap(l => banned.filter(l.contains)).map(f -> _)
   }
 
-  /** Hits of `banned` under src/main/scala must all sit in `owner`, and
-    * the owner itself must show every pattern (the scan is not vacuous). */
-  private def onlyIn(owner: String, banned: Seq[String]): Unit = {
-    val (own, others) = hits(Paths.get("src/main/scala"), banned)
+  /** Hits of `banned` under `roots` must all sit in `owner`, and the owner
+    * itself must show every pattern (the scan is not vacuous). */
+  private def onlyIn(owner: String, banned: Seq[String],
+                     roots: Seq[String] = Seq("src/main/scala")): Unit = {
+    val (own, others) = roots.flatMap(r => hits(Paths.get(r), banned))
       .partition(_._1.getFileName.toString == owner)
     assert(own.map(_._2).toSet == banned.toSet)
     assert(others.isEmpty, others.map { case (f, p) => s"$f: $p" }.mkString("\n"))
@@ -49,5 +55,10 @@ class ToolingGuardSpec extends AnyFunSuite {
 
   test("only TextFunctions.scala folds case") {
     onlyIn("TextFunctions.scala", Seq(".toLowerCase"))
+  }
+
+  test("only QueryProfile.scala listens") {
+    onlyIn("QueryProfile.scala", Seq("addSparkListener(", "listenerManager.register("),
+      roots = Seq("src/main/scala", "src/test/scala"))
   }
 }
