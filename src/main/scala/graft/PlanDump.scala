@@ -22,12 +22,15 @@ object PlanDump {
     "(lambda \\w+)_\\d+".r -> "$1_N",
     "\\$Lambda\\$\\d+/0x\\p{XDigit}+@\\p{XDigit}+".r -> "\\$Lambda\\$n",
     "(\\[+(?:[BCDFIJSZ]|L[\\w.$]+;))@\\p{XDigit}+".r -> "$1@h",
-    "(graft_p7_index_layout)\\d+".r -> "$1n")
+    "(graft_p7_index_layout)\\d+".r -> "$1n",
+    "(at \\w+\\.scala):\\d+".r -> "$1:n")
 
   /** `plan` with the tokens that differ per planning masked: expression,
     * `plan_id`, RDD and broadcast ids, Catalyst's JVM-global lambda
     * variable counter (`lambda x_164`), JVM identity hashes (lambdas,
-    * arrays) and p7's fresh temp directory. */
+    * arrays), p7's fresh temp directory and the source line of an RDD's
+    * call site (`at localCheckpoint at StageCut.scala:54`), which moves
+    * with any edit above it. */
   def normalize(plan: String): String =
     Masks.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
 

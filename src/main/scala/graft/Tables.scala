@@ -65,7 +65,7 @@ object Tables {
   def corpusTag(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     documents(spark, dir).agg(
-      sum(conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-        col("text"))), 1, 6), 16, 10).cast("long")).as("fixture"))
+      sum(graft.functions.text.md5_prefix_long(concat(
+        col("doc_id").cast("string"), lit(":"), col("text")), 1, 6)).as("fixture"))
   }
 }

@@ -145,9 +145,12 @@ object text {
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(seed.cast("long")),
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(shingle)))
 
-  /** Unsigned value of md5-hex digits [start, start+len) — the compiled
-    * form of the engine-wide `conv(substring(md5(s), start, len), 16,
-    * 10)::long` idiom (r18; R18KernelSpec gates equality, len ≤ 15). */
+  /** Unsigned value of md5-hex digits [start, start+len) of `s`'s digest:
+    * the only way an md5 digest becomes an integer in src/main
+    * (ToolingGuardSpec). Equal to the SQL spelling
+    * `conv(substring(md5(s), start, len), 16, 10)::long` that the oracles
+    * use (Md5PrefixLongPropSpec gates it, len ≤ 15); a binary `s` hashes
+    * its raw bytes, as `md5` does. Null stays null. */
   def md5_prefix_long(s: Column, startHex: Int, lenHex: Int): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       TextHashExpressions.Md5PrefixLong(
@@ -187,8 +190,13 @@ object text {
     * each slice hashed; docs sharing any band key become candidate pairs. */
   def lsh_band_keys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)), b =>
-      md5(concat_ws(",", concat(array(b.cast("string")),
-        slice(sig, b * lit(rowsPerBand) + 1, lit(rowsPerBand)).cast("array<string>")))))
+      lsh_band_key(sig, b, rowsPerBand))
+
+  /** The key of band `band` (0-based int): md5 of the band index and the
+    * band's `rowsPerBand` signature lanes, comma-joined. */
+  def lsh_band_key(sig: Column, band: Column, rowsPerBand: Int): Column =
+    md5(concat_ws(",", concat(array(band.cast("string")),
+      slice(sig, band * lit(rowsPerBand) + 1, lit(rowsPerBand)).cast("array<string>"))))
 
   /** 48-bit SimHash over the (frequency-weighted) token stream. Token hash =
     * first 12 hex chars of md5 (48 bits fits exactly in long/double on every

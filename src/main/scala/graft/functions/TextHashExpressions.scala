@@ -200,13 +200,12 @@ object TextHashExpressions {
   }
 
   /** Unsigned value of md5-hex digits [startHex, startHex+lenHex) of the
-    * digest of `s` — the compiled form of the engine-wide
-    * `conv(substring(md5(s), startHex, lenHex), 16, 10)::long` idiom
-    * (r18 optimization round): the Column form materializes the 32-char
-    * hex string and base-16-parses a substring PER ROW; this reads the
-    * nibbles straight off the binary digest. lenHex ≤ 15 keeps the value
-    * under 2^60 — exactly the range where conv's long cast was lossless,
-    * which is why every oracle-pinned hash in the repo uses ≤ 15 digits. */
+    * digest of `s`: the engine's only spelling of the oracles'
+    * `conv(substring(md5(s), startHex, lenHex), 16, 10)::long`. It reads
+    * the nibbles straight off the binary digest instead of building the
+    * 32-char hex string and base-16-parsing a substring per row. lenHex
+    * ≤ 15 keeps the value under 2^60, the range where conv's long cast is
+    * lossless, which is why every oracle-pinned hash uses ≤ 15 digits. */
   def md5PrefixSlice(s: UTF8String, startHex: Int, lenHex: Int): Long = {
     val md = threadMd5.get()
     md.reset()

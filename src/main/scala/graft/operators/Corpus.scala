@@ -220,10 +220,9 @@ object Corpus {
     * per shard keeps each sort in-memory). */
   def shuffleShards(df: DataFrame, idCol: String, numShards: Int,
                     seed: String): DataFrame = {
-    val key = md5(concat(lit(seed), lit(":"), col(idCol).cast("string")))
-    df.withColumn("shuffle_key", key)
-      .withColumn("shard",
-        conv(substring(col("shuffle_key"), 1, 6), 16, 10).cast("long") % numShards)
+    val key = concat(lit(seed), lit(":"), col(idCol).cast("string"))
+    df.withColumn("shuffle_key", md5(key))
+      .withColumn("shard", text.md5_prefix_long(key, 1, 6) % numShards)
       .withColumn("seq", row_number().over(
         Window.partitionBy("shard").orderBy(col("shuffle_key"), col(idCol))))
   }
@@ -251,9 +250,8 @@ object Corpus {
     require(weights.nonEmpty && weights.map(_._2).sum == 10000,
       s"weights must be basis points summing to 10000 (got $weights)")
     require(weights.forall(_._2 > 0), s"zero-weight split: $weights")
-    val bucket = conv(substring(
-      md5(concat(lit(seed), lit(":"), col(groupCol).cast("string"))),
-      1, 6), 16, 10).cast("long") % 10000
+    val bucket = text.md5_prefix_long(
+      concat(lit(seed), lit(":"), col(groupCol).cast("string")), 1, 6) % 10000
     val cuts = weights.scanLeft(0) { case (acc, (_, w)) => acc + w }.tail
     val label = weights.map(_._1).zip(cuts).foldRight(lit(weights.last._1)) {
       case ((name, hi), rest) => when(bucket < hi, name).otherwise(rest)
@@ -345,8 +343,7 @@ object Corpus {
     * map-only — the sample decision never shuffles. */
   def hashSample(df: DataFrame, idCol: String, strataCol: String,
                  rates: Map[String, Int], defaultRate: Int): DataFrame = {
-    val bucket = conv(substring(md5(col(idCol).cast("string")), 1, 6), 16, 10)
-      .cast("long") % 100
+    val bucket = text.md5_prefix_long(col(idCol).cast("string"), 1, 6) % 100
     val rate = rates.foldRight(lit(defaultRate): Column) { case ((k, r), els) =>
       when(col(strataCol) === k, lit(r)).otherwise(els)
     }
@@ -380,8 +377,7 @@ object Corpus {
       val p = math.sqrt(n.toDouble) / sumSqrt
       s -> math.floor(math.min(1.0, targetTotal.toDouble * p / n.toDouble) * 10000.0).toLong
     }.toMap
-    val bucket = conv(substring(md5(col(idCol).cast("string")), 1, 6), 16, 10)
-      .cast("long") % 10000
+    val bucket = text.md5_prefix_long(col(idCol).cast("string"), 1, 6) % 10000
     df.withColumn("rate_bp",
         coalesce(element_at(typedLit(rateBp), col(strataCol).cast("string")), lit(0L)))
       .withColumn("bucket", bucket)
@@ -606,9 +602,8 @@ object Corpus {
                   k: Int, seed: String, salts: Int = 32): DataFrame = {
     require(k >= 1, s"quotaSample needs k>=1 (got $k)")
     require(salts >= 1, s"quotaSample needs salts>=1 (got $salts)")
-    val skey = conv(substring(md5(
-      concat(lit(seed), lit(":"), col(idCol).cast("string"))), 1, 12), 16, 10)
-      .cast("long")
+    val skey = text.md5_prefix_long(
+      concat(lit(seed), lit(":"), col(idCol).cast("string")), 1, 12)
     val keyed = df.withColumn("__skey", skey)
     val local = keyed
       .withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
@@ -964,8 +959,7 @@ object Corpus {
     val grams = graft.StageCut(toks
       .select(col("id"), col("is_target"), explode(concat(uniArr, bgArr)).as("e"))
       .select(col("id"), col("is_target"), col("e.pos").as("pos"),
-        (conv(substring(md5(col("e.g")), 1, 6), 16, 10).cast("long")
-          % buckets).as("b")), "dsirWeighted.grams")
+        (text.md5_prefix_long(col("e.g"), 1, 6) % buckets).as("b")), "dsirWeighted.grams")
     val ct = grams.filter(col("is_target")).groupBy("b").agg(count(lit(1)).as("ct"))
     val cr = grams.filter(!col("is_target")).groupBy("b").agg(count(lit(1)).as("cr"))
     val tot = grams.agg(
@@ -986,8 +980,8 @@ object Corpus {
         .as("s"))
     // u in (0,1]: 24 md5 hex bits + 1 over 2^24+1 — same digest-driven
     // derandomization as shuffleShards; -ln(-ln u) is the Gumbel quantile.
-    val u = (conv(substring(md5(concat(lit(seed), lit(":"),
-      col("id").cast("string"))), 1, 6), 16, 10).cast("double") + lit(1.0)) /
+    val u = (text.md5_prefix_long(concat(lit(seed), lit(":"),
+      col("id").cast("string")), 1, 6).cast("double") + lit(1.0)) /
       lit(16777217.0)
     toks.filter(!col("is_target"))
       .join(agg, Seq("id"), "left")
@@ -1169,8 +1163,7 @@ object Corpus {
                    midTok: String = "<MID>"): DataFrame = {
     require(rateBp >= 0 && rateBp <= 10000, s"rateBp in [0,10000] (got $rateBp)")
     def h(prefix: String): Column =
-      conv(substring(md5(concat(lit(prefix), col(idCol).cast("string"))), 1, 8),
-        16, 10).cast("long")
+      text.md5_prefix_long(concat(lit(prefix), col(idCol).cast("string")), 1, 8)
     val len = length(col(textCol))
     val c1 = lit(1) + (h("fimc1:") % (len + 1)).cast("int")
     val c2 = lit(1) + (h("fimc2:") % (len + 1)).cast("int")
@@ -1215,8 +1208,7 @@ object Corpus {
     val toks = df.select(col(idCol).cast("long").as("id"),
         posexplode(graft.functions.text.tokens(col(textCol))).as(Seq("pos", "tok")))
       .withColumn("masked",
-        graft.functions.text.md5_prefix_long(
-          concat(lit("sc:"), col("id"), lit(":"), col("pos")),
+        text.md5_prefix_long(concat(lit("sc:"), col("id"), lit(":"), col("pos")),
           1, 8) % 10000 < noiseBp)
     val w = Window.partitionBy("id").orderBy("pos")
     val spans = toks
@@ -1853,7 +1845,7 @@ object Corpus {
     val wt = graft.StageCut(base.select(col("id"), col("label"), col("n_grams"),
         explode(col("gr")).as("g"))
       .withColumn("b",
-        graft.functions.text.md5_prefix_long(col("g"), 1, 15) % buckets)
+        text.md5_prefix_long(col("g"), 1, 15) % buckets)
       .groupBy("id", "label", "n_grams", "b")
       .agg(count(lit(1)).as("c"))
       .withColumn("w", expr("(c * 1000000) div n_grams")), "linearClassifier.wt")
@@ -2174,8 +2166,7 @@ object Corpus {
     // RANK correctly (the key uses the raw double) but REPORT truncated —
     // require integral so the output is never silently lossy
     Guards.requireIntegral(df, weightCol, "weightedSample")
-    val h = conv(substring(md5(concat(lit(seed + ":"), col(idCol))),
-      1, 6), 16, 10).cast("long") % 1000000L
+    val h = text.md5_prefix_long(concat(lit(seed + ":"), col(idCol)), 1, 6) % 1000000L
     val key = when(col(weightCol) <= 0, expr(
       "raise_error('weightedSample: weights must be positive')")
       .cast("double"))

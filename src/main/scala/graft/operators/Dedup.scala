@@ -63,8 +63,7 @@ object Dedup {
     val fp = df.select(col(idCol).cast("long").as("id"),
       text.fingerprint(col(textCol)).as("fp"))
     val counts = fp.groupBy("fp").agg(count(lit(1)).as("dup_count"))
-    val u = conv(substring(md5(concat(lit(seed + ":"), col("id"))), 1, 6),
-      16, 10).cast("long") % 1000000L
+    val u = text.md5_prefix_long(concat(lit(seed + ":"), col("id")), 1, 6) % 1000000L
     fp.join(counts, Seq("fp"))
       .withColumn("weight_ppm", expr("1000000 div dup_count"))
       .withColumn("__u", u)
@@ -114,10 +113,7 @@ object Dedup {
     val rows = numHashes / bands
     sigs
       .select(col("*"), explode(sequence(lit(0), lit(bands - 1))).as("band_idx"))
-      .withColumn("band_key",
-        md5(concat_ws(",", concat(array(col("band_idx").cast("string")),
-          slice(col("sig"), col("band_idx") * lit(rows) + 1, lit(rows))
-            .cast("array<string>")))))
+      .withColumn("band_key", text.lsh_band_key(col("sig"), col("band_idx"), rows))
   }
 
   /** The banded corpus as a reusable INDEX table: (id, sig, band_key) —
@@ -318,7 +314,7 @@ object Dedup {
       df.select(col(idCol).cast("long").as("id"),
         explode(text.word_shingles(col(textCol), shingleWords)).as("g")))
       .select(col("id"),
-        graft.functions.text.md5_prefix_long(
+        text.md5_prefix_long(
           concat(lit("cnt:"), col("g")), 1, 15).as("h")), "containment.hh")
     val sz = hh.groupBy("id").agg(count(lit(1)).as("n_small"))
     val dfc = hh.groupBy("h").agg(count(lit(1)).as("df"))

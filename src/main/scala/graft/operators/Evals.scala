@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.text
 
 /** Retrieval-quality evaluation at corpus scale — the metric layer the
   * reference publishes its only numbers in (`evaluations/custom_eval/`,
@@ -261,8 +262,8 @@ object Evals {
           "pass an integral column (fixed-point fractional metrics first, " +
           "e.g. floor(value*1e6) ppm — the cuped convention)")
     }
-    val u = conv(substring(md5(concat(lit(seed + ":"), col(idCol),
-      lit(":"), col("replicate"))), 1, 6), 16, 10).cast("long") % 1000000L
+    val u = text.md5_prefix_long(concat(lit(seed + ":"), col(idCol),
+      lit(":"), col("replicate")), 1, 6) % 1000000L
     val w = poissonPpmThresholds.zipWithIndex
       .foldRight(lit(poissonPpmThresholds.length.toLong)) {
         case ((t, i), acc) => when(u < t, i.toLong).otherwise(acc)
@@ -988,8 +989,8 @@ object Evals {
       .select(col("__id"), col("__d"),
         explode(sequence(lit(1), lit(b))).as("rep"))
       .withColumn("sd", when(
-        conv(substring(md5(concat(lit(seed + ":"), col("rep"), lit(":"),
-          col("__id"))), 1, 6), 16, 10).cast("long") % 2 === 0,
+        text.md5_prefix_long(concat(lit(seed + ":"), col("rep"), lit(":"),
+          col("__id")), 1, 6) % 2 === 0,
         col("__d")).otherwise(-col("__d")))
       .groupBy("rep").agg(sum(col("sd")).as("s"))
     flips.crossJoin(broadcast(obs))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.text
 
 /** Numeric feature hygiene for training pipelines — the winsorize/clip
   * pass that tames heavy-tailed metrics (prices, durations, counts) before
@@ -757,8 +758,8 @@ object Features {
     * (the t21/t36 derandomization), recomputed inline wherever needed so
     * NO user→arm table ever materializes (see [[abUplift]]'s plan note). */
   private def md5Arm(seed: String, u: Column): Column =
-    when(conv(substring(md5(concat(lit(seed + ":"), u)), 1, 6),
-      16, 10).cast("long") % 2 === 0, "A").otherwise("B")
+    when(text.md5_prefix_long(concat(lit(seed + ":"), u), 1, 6) % 2 === 0, "A")
+      .otherwise("B")
 
   /** CUPED variance-reduced A/B readout (Deng et al., WSDM 2013) — the
     * pre-experiment-covariate adjustment every mature experimentation

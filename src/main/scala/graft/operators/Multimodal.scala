@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.text
 
 /** Multimodal column plumbing (SURVEY S8-S11 re-expressed for Spark).
   *
@@ -31,11 +32,11 @@ object Multimodal {
     /** width/height/duration as Column exprs over the bytes digest (md5 is
       * computable by any engine, so even the stub is oracle-checkable). */
     def width(bytes: Column): Column =
-      (conv(substring(md5(bytes), 1, 4), 16, 10).cast("long") % 1920) + 1
+      (text.md5_prefix_long(bytes, 1, 4) % 1920) + 1
     def height(bytes: Column): Column =
-      (conv(substring(md5(bytes), 5, 4), 16, 10).cast("long") % 1080) + 1
+      (text.md5_prefix_long(bytes, 5, 4) % 1080) + 1
     def durationSec(bytes: Column): Column =
-      (conv(substring(md5(bytes), 9, 4), 16, 10).cast("long") % 600) + 1
+      (text.md5_prefix_long(bytes, 9, 4) % 600) + 1
   }
 
   /** Decode stage: attach (pseudo-)decoded metadata columns. */

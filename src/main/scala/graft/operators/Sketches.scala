@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.text
 
 /** Mergeable cardinality sketches — the distinct-count side of the sketch
   * toolbox beside the count-min family (`SketchExpressions`, t22): at
@@ -49,11 +50,10 @@ object Sketches {
     val alphaDen = 2570790L // 10^4 * m + 10790
     // numerator constant alphaNum * m^2 * 2^53 (exact BigInt, < 10^28)
     val bigNum = BigInt(alphaNum) * m * m * (BigInt(1) << 53)
-    val h = md5(concat(lit("hll:"), col(nameCol), lit(":"), col(keyCol)))
-    val hashed = keyed.select(col(nameCol).as("col_name"), h.as("h"))
-      .select(col("col_name"),
-        conv(substring(col("h"), 1, 2), 16, 10).cast("long").as("reg"),
-        conv(substring(col("h"), 3, 13), 16, 10).cast("long").as("w"))
+    val h = concat(lit("hll:"), col(nameCol), lit(":"), col(keyCol))
+    val hashed = keyed.select(col(nameCol).as("col_name"),
+        text.md5_prefix_long(h, 1, 2).as("reg"),
+        text.md5_prefix_long(h, 3, 13).as("w"))
       .withColumn("rho",
         when(col("w") === 0, 53L).otherwise(lit(53L) - length(bin(col("w")))))
     // Stage cut (rule 14, r17 optimization round): registers are
@@ -155,8 +155,7 @@ object Sketches {
     val src = keyed.select(col(corpusCol).as("corpus"), col(keyCol).as("key"))
     val dh = src
       .select(col("corpus"),
-        graft.functions.text.md5_prefix_long(
-          concat(lit("kmv:"), col("key")), 1, 15).as("h"))
+        text.md5_prefix_long(concat(lit("kmv:"), col("key")), 1, 15).as("h"))
       .groupBy("corpus", "h").agg(count(lit(1)).as("__c")).drop("__c")
     val lvl1 = Window.partitionBy(col("corpus"), pmod(col("h"), lit(64L)))
       .orderBy("h")

@@ -72,8 +72,7 @@ object CorpusQueries {
   def kAnonymityQ(spark: SparkSession, dir: String): DataFrame = {
     val qi = Tables.documents(spark, dir).select(
       col("source"), col("lang"), expr("n_chars div 256").as("len_bucket"),
-      (conv(substring(md5(concat(lit("au:"), col("doc_id"))), 1, 6),
-        16, 10).cast("long") % 50).as("author"))
+      (text.md5_prefix_long(concat(lit("au:"), col("doc_id")), 1, 6) % 50).as("author"))
     Corpus.kAnonymityAudit(qi, Seq("source", "lang", "len_bucket"),
         "author", k = 5, l = 3)
       .orderBy("source", "lang", "len_bucket")
@@ -234,8 +233,7 @@ object CorpusQueries {
           array_join(slice(split(col("rb0"), " "), 1, 2), " "))
         .otherwise(col("rb0")))
       .withColumn("win_a",
-        conv(substring(md5(concat(lit("dpo:"), col("doc_id"))), 1, 6),
-          16, 10).cast("long") % 2 === 0)
+        text.md5_prefix_long(concat(lit("dpo:"), col("doc_id")), 1, 6) % 2 === 0)
     Corpus.dpoPairs(synth, "doc_id", "p", "ra", "rb", "win_a")
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id")

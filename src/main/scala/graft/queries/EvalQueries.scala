@@ -121,8 +121,7 @@ object EvalQueries {
     * and tie-cube terms are exercised, not vacuous). */
   def mannWhitneyQ(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val a = (conv(substring(md5(concat(lit("mw:"), col("event_id"))), 1, 6),
-      16, 10).cast("long") % 2).as("is_a")
+    val a = (text.md5_prefix_long(concat(lit("mw:"), col("event_id")), 1, 6) % 2).as("is_a")
     val base = ev.select(a, floor(col("value") * 100).cast("long").as("v"))
     val shifted = base.select(lit("shifted_pair").as("pair"), col("is_a"),
       (col("v") + when(col("is_a") === 1L, 500L).otherwise(0L)).as("v"))
@@ -142,8 +141,7 @@ object EvalQueries {
   def mcnemarQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def h(tag: String): Column =
-      conv(substring(md5(concat(lit(tag), col("doc_id"))), 1, 6),
-        16, 10).cast("long")
+      text.md5_prefix_long(concat(lit(tag), col("doc_id")), 1, 6)
     val scored = docs.select(col("doc_id"),
       (h("ma:") % 100 < 80).cast("long").as("a"),
       (h("mb:") % 100 < 70).cast("long").as("b"),
@@ -165,8 +163,7 @@ object EvalQueries {
   def krippQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def h(tag: String): Column =
-      conv(substring(md5(concat(lit(tag), col("doc_id"), lit(":"),
-        col("j"))), 1, 6), 16, 10).cast("long")
+      text.md5_prefix_long(concat(lit(tag), col("doc_id"), lit(":"), col("j")), 1, 6)
     val lab = docs
       .select(col("doc_id"),
         explode(expr("sequence(1, cast(1 + doc_id % 3 as int))")).as("j"))
@@ -193,14 +190,13 @@ object EvalQueries {
     val ev = Tables.events(spark, dir)
     val ref = ev.filter(col("event_id") % 2 === 0)
     val cur = ev.filter(col("event_id") % 2 === 1)
-    val remap = conv(substring(md5(concat(lit("cd:"), col("event_id"))),
-      1, 6), 16, 10).cast("long") % 10 < 3
+    val remap = text.md5_prefix_long(concat(lit("cd:"), col("event_id")), 1, 6) % 10 < 3
     val refT = ref.select(col("event_type").as("cat"))
     val curT = cur.select(when(col("event_type") === "view" && remap,
       lit("click")).otherwise(col("event_type")).as("cat"))
     def shard(df: DataFrame) = df.select(
-      (conv(substring(md5(concat(lit("q2:"), col("event_id"))), 1, 6),
-        16, 10).cast("long") % 8).cast("string").as("cat"))
+      (text.md5_prefix_long(concat(lit("q2:"), col("event_id")), 1, 6) % 8)
+        .cast("string").as("cat"))
     graft.operators.Features.chi2Report(refT, curT, "cat")
       .select(lit("event_type").as("feature"), col("*"))
       .unionByName(graft.operators.Features.chi2Report(shard(ref),
@@ -218,8 +214,7 @@ object EvalQueries {
   def pairedPermQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def u(tag: String): Column =
-      conv(substring(md5(concat(lit(tag), col("doc_id"))), 1, 6),
-        16, 10).cast("long")
+      text.md5_prefix_long(concat(lit(tag), col("doc_id")), 1, 6)
     val scored = docs.select(col("doc_id"),
       (u("pa:") % 1000).as("sa"),
       (u("pb:") % 1000 + 55).as("sb"))
@@ -263,10 +258,9 @@ object EvalQueries {
     * the separable case. */
   def aucQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val pos = (conv(substring(md5(concat(lit("lb:"), col("doc_id"))), 1, 6),
-      16, 10).cast("long") % 100 < 30).cast("long")
-    val u = conv(substring(md5(concat(lit("sc:"), col("doc_id"))), 1, 6),
-      16, 10).cast("long") % 1000000L
+    val pos = (text.md5_prefix_long(concat(lit("lb:"), col("doc_id")), 1, 6) %
+      100 < 30).cast("long")
+    val u = text.md5_prefix_long(concat(lit("sc:"), col("doc_id")), 1, 6) % 1000000L
     val scored = docs.select(col("lang"), pos.as("pos"), u.as("u"))
       .withColumn("s",
         when(col("pos") === 1, expr("(500000 + u % 500000) div 10000"))
@@ -333,8 +327,7 @@ object EvalQueries {
     * alarm, so the row pins a monitor that actually FIRES. */
   def psiQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val u = conv(substring(md5(concat(lit("psi:"), col("doc_id"))), 1, 6),
-      16, 10).cast("long") % 1000000L
+    val u = text.md5_prefix_long(concat(lit("psi:"), col("doc_id")), 1, 6) % 1000000L
     val scored = docs.select(col("doc_id"), u.as("u"))
     val ref = scored.filter(col("doc_id") % 2 === 0)
       .select(col("u").as("score"))
@@ -353,8 +346,7 @@ object EvalQueries {
     * binless drift test discriminate on this corpus. */
   def ksQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val u = conv(substring(md5(concat(lit("ks:"), col("doc_id"))), 1, 6),
-      16, 10).cast("long") % 1000000L
+    val u = text.md5_prefix_long(concat(lit("ks:"), col("doc_id")), 1, 6) % 1000000L
     val scored = docs.select(col("doc_id"), u.as("u"))
     val ref = scored.filter(col("doc_id") % 2 === 0)
       .select(col("u").as("score"))
@@ -379,11 +371,11 @@ object EvalQueries {
     val labels = docs
       .select(col("doc_id"), explode(sequence(lit(0L), lit(2L))).as("rater"))
       .withColumn("cat",
-        when(conv(substring(md5(concat(lit("ag:"), col("doc_id"), lit(":"),
-            col("rater"))), 1, 6), 16, 10).cast("long") % 100 < 70,
+        when(text.md5_prefix_long(concat(lit("ag:"), col("doc_id"), lit(":"),
+            col("rater")), 1, 6) % 100 < 70,
           col("doc_id") % 4)
-          .otherwise(conv(substring(md5(concat(lit("agn:"), col("doc_id"),
-            lit(":"), col("rater"))), 1, 6), 16, 10).cast("long") % 4))
+          .otherwise(text.md5_prefix_long(concat(lit("agn:"), col("doc_id"),
+            lit(":"), col("rater")), 1, 6) % 4))
     Evals.fleissKappa(labels, "doc_id", "cat").orderBy("category")
   }
 
@@ -395,8 +387,7 @@ object EvalQueries {
   def passAtKQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def u(prefix: String): Column =
-      conv(substring(md5(concat(lit(prefix), col("doc_id"))), 1, 6), 16, 10)
-        .cast("long")
+      text.md5_prefix_long(concat(lit(prefix), col("doc_id")), 1, 6)
     val tasks = docs.select(col("doc_id"),
         (lit(10L) + u("pn:") % 11L).as("n_samples"))
       .withColumn("n_correct", u("pc:") % (col("n_samples") + 1L))
@@ -465,8 +456,7 @@ object EvalQueries {
   def calibrationQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def u(prefix: String): Column =
-      conv(substring(md5(concat(lit(prefix), col("doc_id"))), 1, 6), 16, 10)
-        .cast("long") % 1000000L
+      text.md5_prefix_long(concat(lit(prefix), col("doc_id")), 1, 6) % 1000000L
     val scored = docs.select(
       u("cals:").as("score_ppm"),
       when(u("call:") * 1000000L < u("cals:") * u("cals:"), 1L)

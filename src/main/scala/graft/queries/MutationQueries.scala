@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.text
 import graft.operators.Mutations
 
 /** Oracle-backed coverage for the mutation operators (SURVEY §2.1 S13/S14):
@@ -36,8 +37,7 @@ object MutationQueries {
     val files = Tables.documents(spark, dir).select(
       col("source"), col("doc_id").as("file_id"),
       ((col("n_chars") * 40 +
-        conv(substring(md5(concat(lit("fb:"), col("doc_id"))), 1, 6),
-          16, 10).cast("long") % 20000) *
+        text.md5_prefix_long(concat(lit("fb:"), col("doc_id")), 1, 6) % 20000) *
         when(col("doc_id") % 17 === 0, 40L).otherwise(1L)).as("bytes"))
     graft.operators.Layout.compactionPlan(files, "source", "file_id",
         "bytes", targetBytes = 200000L, smallBytes = 100000L)

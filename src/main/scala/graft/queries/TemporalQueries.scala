@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.text
 import graft.operators.{AsOfJoin, Chunker, Features, Intervals, Sessionize}
 
 /** Temporal + chunking coverage: as-of join (SURVEY Q13), neighbor padding
@@ -108,8 +109,7 @@ object TemporalQueries {
     * two-arm texture. Exact centi fixed-point; means exact milli. */
   def tostQ(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val a = (conv(substring(md5(concat(lit("to:"), col("event_id"))), 1, 6),
-      16, 10).cast("long") % 2).as("is_a")
+    val a = (text.md5_prefix_long(concat(lit("to:"), col("event_id")), 1, 6) % 2).as("is_a")
     val base = ev.select(a, floor(col("value") * 100).cast("long").as("v"))
     val ok = base.select(lit("swap_ok").as("pair"), col("is_a"), col("v"))
     val reg = base.select(lit("swap_regressed").as("pair"), col("is_a"),
@@ -158,8 +158,7 @@ object TemporalQueries {
     val ev = Tables.events(spark, dir)
     val organic = ev.select(floor(col("value") * 100).cast("long").as("x"))
     val uniform = ev.select(
-      (conv(substring(md5(concat(lit("bf:"), col("event_id"))), 1, 6),
-        16, 10).cast("long") % 9000 + 1000).as("x"))
+      (text.md5_prefix_long(concat(lit("bf:"), col("event_id")), 1, 6) % 9000 + 1000).as("x"))
     graft.operators.Features.benfordReport(organic, "x")
       .select(lit("value_centi").as("feature"), col("*"))
       .unionByName(graft.operators.Features.benfordReport(uniform, "x")
@@ -201,7 +200,7 @@ object TemporalQueries {
     * ev8/ev13 cell law — 5,000 cells at any corpus size). */
   def fdrQ(spark: SparkSession, dir: String): DataFrame = {
     def h(parts: Column*): Column =
-      conv(substring(md5(concat(parts: _*)), 1, 6), 16, 10).cast("long")
+      text.md5_prefix_long(concat(parts: _*), 1, 6)
     val items = Tables.events(spark, dir)
       .select(concat(col("event_type"), lit("_m"),
           pmod(col("user_id"), lit(5))).as("metric"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.text
 import graft.functions.vec
 import graft.operators.{IvfIndex, KnnSearch, PqIndex, SqIndex}
 
@@ -1311,8 +1312,8 @@ object VectorQueries {
         (col("doc_id") % 8).as("a"),
         (expr("doc_id div 8") % 8).as("b"))
       .filter(col("a") =!= col("b"))
-      .withColumn("r", conv(substring(md5(concat(lit("bt:"), col("doc_id"))),
-        1, 6), 16, 10).cast("long") % 100)
+      .withColumn("r",
+        text.md5_prefix_long(concat(lit("bt:"), col("doc_id")), 1, 6) % 100)
       .withColumn("win_a", col("r") < lit(50) + lit(6) * (col("b") - col("a")))
     graft.operators.Mining.btStrengths(cmp, "a", "b", "win_a", iters = 20)
       .orderBy("item")
@@ -1333,8 +1334,8 @@ object VectorQueries {
         (col("doc_id") % 8).as("a"),
         (expr("doc_id div 8") % 8).as("b"))
       .filter(col("a") =!= col("b"))
-      .withColumn("r", conv(substring(md5(concat(lit("elo:"), col("doc_id"))),
-        1, 6), 16, 10).cast("long") % 100)
+      .withColumn("r",
+        text.md5_prefix_long(concat(lit("elo:"), col("doc_id")), 1, 6) % 100)
       .withColumn("win_a", col("r") < lit(50) + lit(6) * (col("b") - col("a")))
     graft.operators.Mining.eloRatings(m, "a", "b", "win_a", "doc_id")
       .orderBy("item")
@@ -1353,8 +1354,8 @@ object VectorQueries {
     val sc = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), explode(sequence(lit(0L), lit(3L))).as("item"))
       .withColumn("score",
-        conv(substring(md5(concat(lit("pl:"), col("doc_id"), lit(":"),
-          col("item"))), 1, 6), 16, 10).cast("long") % 1000L +
+        text.md5_prefix_long(concat(lit("pl:"), col("doc_id"), lit(":"),
+          col("item")), 1, 6) % 1000L +
           lit(120L) * col("item"))
     val rk = sc.withColumn("pos", row_number().over(
       Window.partitionBy("doc_id").orderBy(col("score").desc, col("item"))))

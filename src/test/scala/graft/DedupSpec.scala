@@ -158,11 +158,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("text.lsh_band_keys stays in lockstep with Dedup's exploded band keys") {
-    // two implementations of one formula (the Column array form for
-    // composition, Dedup's constant-index explode for the scale path — the
-    // explode dodges the CollapseProject re-evaluation trap, so they can't
-    // share code): this guard makes silent drift a test failure instead of
-    // a recall drop
+    // two callers of one per-band formula, `text.lsh_band_key`: the Column
+    // array form maps it over the band indices for composition, Dedup
+    // applies it to its exploded constant `band_idx` on the scale path (the
+    // explode dodges the CollapseProject re-evaluation trap); this guard
+    // makes drift in either caller a test failure instead of a recall drop
     import graft.functions.text
     val docs = corpus.limit(5)
     val viaColumn = docs

@@ -133,6 +133,12 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(PlanDump.normalize(first).contains("lambda x_N"))
   }
 
+  test("PlanDump masks the source line of an RDD's call site") {
+    assert(PlanDump.normalize(
+      "MapPartitionsRDD[12] at localCheckpoint at StageCut.scala:54") ==
+      "MapPartitionsRDD[n] at localCheckpoint at StageCut.scala:n")
+  }
+
   test("t28_curation_e2e: stage cuts present — the dedup chain is checkpointed, not re-derived") {
     val p = executedPlan("t28_curation_e2e")
     // the composed pipeline localCheckpoints survivor-sized stage outputs;

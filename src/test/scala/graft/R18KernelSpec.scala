@@ -141,11 +141,11 @@ class R18KernelSpec extends AnyFunSuite {
   }
 
   test("md5_prefix_long kernel == conv(substring(md5)) for every used slice") {
-    val s = coalesce(col("text"), lit("")) // md5(null) vs kernel-null parity not needed: callers never pass null slices
+    val s = col("text")
     // every (start, len) shape used by the repo's call sites, including
     // odd (non-byte-aligned) starts
     for ((a, b) <- Seq((1, 15), (1, 6), (1, 8), (3, 13), (9, 8), (5, 2),
-                       (1, 2), (2, 7), (4, 4))) {
+                       (1, 2), (2, 7), (4, 4), (1, 4), (5, 4), (9, 4), (1, 12))) {
       val rows = fixture.select(
         conv(substring(md5(s), a, b), 16, 10).cast("long").as("o"),
         text.md5_prefix_long(s, a, b).as("n")).collect()

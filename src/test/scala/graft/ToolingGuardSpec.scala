@@ -19,7 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    so no file but TextFunctions.scala may call `.toLowerCase`;
   *  - every job, stage and plan count comes from [[QueryProfile]], so no
   *    file but QueryProfile.scala, in src/main or src/test, may register a
-  *    listener.
+  *    listener;
+  *  - every md5 prefix becomes an integer through
+  *    `graft.functions.text.md5_prefix_long`, so no file but
+  *    TextFunctions.scala (whose Column reference forms the kernel tests
+  *    compare against) may parse hex with `conv(`; a spelling split over
+  *    lines still shows its `conv(` token.
   * Comment lines and this spec are skipped; test code keeps its own
   * sessions, cuts and folds. */
 class ToolingGuardSpec extends AnyFunSuite {
@@ -55,6 +60,10 @@ class ToolingGuardSpec extends AnyFunSuite {
 
   test("only TextFunctions.scala folds case") {
     onlyIn("TextFunctions.scala", Seq(".toLowerCase"))
+  }
+
+  test("only TextFunctions.scala parses hex with conv(") {
+    onlyIn("TextFunctions.scala", Seq("conv("))
   }
 
   test("only QueryProfile.scala listens") {
